@@ -1261,8 +1261,9 @@ def main() -> None:
             errors[f"canary_first:{name}"] = f"{type(exc).__name__}: {exc}"[:300]
     # r10 verdict item 8: the harness/operator split for streaming
     # gates — foreachBatch body seconds (operator) vs everything
-    # around them (replay harness: fixture writes, file restamping,
-    # trigger scheduling). Populated from the LAST run's accumulator.
+    # around them (the replay harness in streaming/ledger.py: fixture
+    # writes, file restamping, trigger scheduling). Populated from the
+    # LAST run's accumulator.
     from defi_features_data_pipeline_spark.queries.extensions import (
         STREAM_OP_SECONDS,
     )

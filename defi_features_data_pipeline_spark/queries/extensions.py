@@ -43,58 +43,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-# Per-batch STATE-SIZE metrics from the stateful streaming gates,
-# refreshed at each query run: {query_name: [{"batch": id, ...}, ...]}.
-# At 100 TB the failure mode of incremental operators is unbounded
-# state, not slow batches — the sf10 probe records these rows next to
-# wall time so state growth is measured, never argued.
-STREAM_STATE_METRICS: dict[str, list] = {}
-
-# Wall seconds spent INSIDE foreachBatch bodies per streaming gate,
-# refreshed at each query run (r10 verdict item 8: the slowest bench
-# rows are all micro-batch REPLAY HARNESSES — file-source restamping,
-# trigger scheduling, awaitTermination — and a regression in the
-# operator itself could hide behind that harness constant). bench.py
-# records operator_sec next to the gate's total so the split is
-# measured: harness_sec = total − operator_sec.
-STREAM_OP_SECONDS: dict[str, float] = {}
-
-
-def parquet_footer_rows(path: str) -> int:
-    """Exact row count of a parquet directory from file FOOTERS — no
-    Spark job. The per-batch state-size metrics (STREAM_STATE_METRICS)
-    previously ran a ``spark.read.parquet(dir).count()`` per
-    micro-batch: one extra job submission + scan per batch whose only
-    output is a number parquet already stores in every footer
-    (guide §1/§5 — don't compute what the storage layer hands you).
-    Footer counts are exact by the parquet spec, so the metric value
-    is bit-identical to the count() it replaces."""
-    import pyarrow.parquet as _pq
-
-    total = 0
-    for name in os.listdir(path):
-        if name.startswith("part-") and name.endswith(".parquet"):
-            total += _pq.ParquetFile(os.path.join(path, name)).metadata.num_rows
-    return total
-
-
-def timed_foreach(gate: str, fn):
-    """Wrap a foreachBatch body so its wall time accumulates into
-    STREAM_OP_SECONDS[gate] — the operator side of the
-    harness/operator split. Resets the accumulator at wrap time, so
-    each query invocation reports only its own run."""
-    import time as _time
-
-    STREAM_OP_SECONDS[gate] = 0.0
-
-    def wrapped(batch_df, batch_id):
-        t0 = _time.time()
-        try:
-            return fn(batch_df, batch_id)
-        finally:
-            STREAM_OP_SECONDS[gate] += _time.time() - t0
-
-    return wrapped
+# The streaming gates' replay harness and its per-gate side channels
+# (STREAM_STATE_METRICS, STREAM_OP_SECONDS) live in streaming/ledger.py;
+# re-exported here for bench.py and the tests.
+from ..streaming.ledger import (  # noqa: E402, F401
+    STREAM_OP_SECONDS,
+    STREAM_STATE_METRICS,
+    replay,
+    timed_foreach,
+)
 
 
 # Circuit breaker for the intentionally-quadratic recall baselines
@@ -3225,15 +3182,17 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     # Read through the STAGE ROOT with basePath + a partition filter:
     # the partitioned write only creates directories for non-empty
     # partitions, and a direct read of a missing path throws where the
-    # pre-staging shape returned a valid empty frame (r12 ADVICE). A
-    # fully empty bands table leaves no parquet at all under the root
-    # — fall back to an empty frame of the same schema.
-    idx_path = os.path.join(stage, "__new=0")
-    try:
+    # pre-staging shape returned a valid empty frame. A fully empty
+    # bands table leaves no parquet at all under the root — that case,
+    # and only that case, is an empty frame of the same schema; any
+    # other read failure (a corrupt staged file) raises.
+    from ..sources.fsutil import list_parquet_files
+
+    if list_parquet_files(spark, stage):
         staged = spark.read.option("basePath", stage).parquet(stage)
         idx = staged.filter(F.col("__new") == 0).drop("__new")
         new_bands = staged.filter(F.col("__new") == 1).drop("__new")
-    except Exception:  # no partition dir at all: zero documents
+    else:
         idx = spark.createDataFrame([], bands.schema)
         new_bands = spark.createDataFrame([], bands.schema)
 
@@ -3258,15 +3217,12 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     probe = _pairs(new_bands, idx, anti_sym=False) # new ↔ existing
     intra = _pairs(new_bands, new_bands, anti_sym=True)  # new ↔ new
 
-    # MATERIALIZE the result BEFORE maintaining the index: the pair
-    # frames read idx_path lazily, so an in-place append first would
-    # leave correctness hanging on Spark never re-resolving the file
-    # listing (refreshByPath / a re-created reader / a future listing
-    # change would double-count the appended rows). After the eager
-    # localCheckpoint the returned frame references no file paths at
-    # all. At production scale each batch's bands would land as a
-    # manifest-committed version (fsutil.manifest_commit) instead of a
-    # bare append — same O(|batch|) maintenance, versioned isolation.
+    # MATERIALIZE the result before reclaiming the stage: the pair
+    # frames read it lazily; after the eager localCheckpoint the
+    # returned frame references no file paths. The next batch's index
+    # is old + these __new=1 rows (at production scale a version
+    # committed via fsutil.manifest_commit); this gate serves one
+    # batch, so the staging copy is reclaimed rather than appended to.
     result = (
         known.union(probe)
         .union(intra)
@@ -3274,13 +3230,6 @@ def q_dedup_incremental_minhash(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
         .localCheckpoint()  # eager
     )
-
-    # index maintenance: next batch sees old + new signatures — now a
-    # parquet copy of the new batch's band rows, no minhash recompute
-    new_bands.write.mode("append").parquet(idx_path)
-    # the eager checkpoint above cut every file reference, so the
-    # per-call staging copy of the band table is garbage now — reclaim
-    # it instead of leaking a corpus-sized dir per call (r12 ADVICE)
     import shutil
 
     shutil.rmtree(stage, ignore_errors=True)
@@ -9106,50 +9055,10 @@ def q_streaming_index_segments(spark, sf_dir):
     incremental-maintenance property); segment compaction is a later
     background rewrite, not a serving dependency; replay overwrites
     its own segment directory, never duplicating postings."""
-    import tempfile
-
-    src = tempfile.mkdtemp(prefix="stream_docs_src_")
-    store = tempfile.mkdtemp(prefix="stream_index_segs_")
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    d.repartition(4, F.col("doc_id")).write.mode("overwrite").parquet(src)
-    # r13-opt (guide §1.4): the stream schema IS the written frame's —
-    # no footer-inference read-back of the fixture we just wrote
-    schema = d.schema
-    docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    STREAM_STATE_METRICS["streaming_index_segments"] = []
-
-    def build_segment(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        seg = _index_blocks_from(batch_df)
-        seg_dir = os.path.join(store, f"segment={batch_id}")
-        seg.write.mode("overwrite").parquet(seg_dir)
-        # footer-metadata count of the segment just written — the
-        # per-batch state growth the sf10 probe records (r12-opt:
-        # actually read from the footers now — the count() here was
-        # one extra Spark job per micro-batch)
-        STREAM_STATE_METRICS["streaming_index_segments"].append(
-            {
-                "batch": int(batch_id),
-                "segment_rows": parquet_footer_rows(seg_dir),
-            }
-        )
-
-    q = (
-        docs.writeStream.foreachBatch(
-            timed_foreach("streaming_index_segments", build_segment)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    segs = spark.read.option("basePath", store).parquet(
-        os.path.join(store, "segment=*")
+    segs = replay(
+        spark, "streaming_index_segments", d, "doc_id",
+        lambda batch_df, _: _index_blocks_from(batch_df),
     )
     return _and_query_over_blocks(segs)
 
@@ -11193,24 +11102,9 @@ def q_streaming_count_min(spark, sf_dir):
     SUM-merge is exactly how per-executor partial sketches combine on
     a real cluster, so the gate exercises the 1000-executor merge path
     on local[32]."""
-    import tempfile
-
     from .core import _events
 
-    src = tempfile.mkdtemp(prefix="stream_cm_src_")
-    store = tempfile.mkdtemp(prefix="stream_cm_grids_")
-    ev = _events(spark, sf_dir).select("event_id", "user_id")
-    ev.repartition(4, F.col("event_id")).write.mode("overwrite").parquet(src)
-    schema = ev.schema  # r13-opt: no footer re-inference (see index gate)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    def build_grid(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
+    def build_grid(batch_df, _):
         rows = batch_df.select(
             "user_id",
             F.explode(
@@ -11221,24 +11115,11 @@ def q_streaming_count_min(spark, sf_dir):
                 )
             ).alias("h"),
         ).select(F.col("h.i").alias("i"), F.col("h.b").alias("b"))
-        grid = rows.groupBy("i", "b").agg(
-            F.count(F.lit(1)).alias("counter")
-        )
-        grid.write.mode("overwrite").parquet(
-            os.path.join(store, f"grid={batch_id}")
-        )
+        return rows.groupBy("i", "b").agg(F.count(F.lit(1)).alias("counter"))
 
-    q = (
-        stream.writeStream.foreachBatch(
-            timed_foreach("streaming_count_min", build_grid)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ev = _events(spark, sf_dir).select("event_id", "user_id")
     merged = (
-        spark.read.option("basePath", store)
-        .parquet(os.path.join(store, "grid=*"))
+        replay(spark, "streaming_count_min", ev, "event_id", build_grid)
         .groupBy("i", "b")
         .agg(F.sum("counter").alias("counter"))
     )

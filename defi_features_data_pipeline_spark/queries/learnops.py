@@ -969,125 +969,39 @@ def q_streaming_winnowed_dedup(spark, sf_dir):
     incremental state transition is proven lossless, same discipline
     as the novelty gate.
 
-    100 TB notes: per-batch work is batch-fps × (one anti-join + one
-    equi-join against the store); the store is append-only DISTINCT
-    hashes partitioned by batch (idempotent replay via overwrite);
-    per-batch appended-state counts land in STREAM_STATE_METRICS for
-    the sf10 probe."""
-    import glob as _glob
-    import tempfile
-    import time as _time
+    100 TB notes: per-batch work is batch-fps × one left join against
+    the store plus one window min over fh; the store is append-only
+    DISTINCT hashes partitioned by batch (``streaming/ledger.py``)."""
+    from ..streaming.ledger import first_seen_ledger
 
-    src = tempfile.mkdtemp(prefix="stream_winnow_src_")
-    seen_store = tempfile.mkdtemp(prefix="stream_winnow_seen_")
-    out_store = tempfile.mkdtemp(prefix="stream_winnow_out_")
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    d.repartitionByRange(4, F.col("doc_id")).write.mode("overwrite").parquet(
-        src
-    )
-    # file-source trigger order = (mtime, path); restamp so batches
-    # arrive in doc_id-range order (same precondition as the novelty
-    # gate — partition id == doc_id range under repartitionByRange)
-    base = int(_time.time()) + 10
-    for i, p in enumerate(sorted(_glob.glob(os.path.join(src, "part-*")))):
-        os.utime(p, (base + i, base + i))
-    schema = d.schema  # r13-opt: no footer re-inference (see index gate)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    from .extensions import STREAM_STATE_METRICS
-
-    STREAM_STATE_METRICS["streaming_winnowed_dedup"] = []
-
-    def score_batch(batch_df, batch_id):
-        # r12-opt (guide §2.4): was semi-join store → groupBy-min →
-        # join back → join (doc_id, fh) → groupBy doc — the selected-
-        # fingerprint frame crossed keyed Exchanges four times per
-        # micro-batch. Store membership and the in-batch first are
-        # per-fh facts: ONE left join against the (globally distinct)
-        # store plus ONE window min over fh (reusing the join's
-        # partitioning) yields the identical per-doc hit counts, and
-        # the fresh-state append is the min-doc row of each unseen fh
-        # — (doc_id, fh) is distinct, so that row is unique per fh and
-        # no distinct/anti-join pass is needed. The in-batch dedup
-        # repartitions by fh (not (doc_id, fh)) so the join/window
-        # reuse ITS Exchange too. Metric count reads parquet footers
-        # (zero jobs).
-        if batch_df.isEmpty():
-            return
-        from pyspark.sql import Window as _W
-
-        sel = (
+    def fingerprints(batch_df):
+        # dedup by fh-partitioning so the ledger's join and window
+        # reuse this Exchange
+        return (
             _winnow_selected_frame(batch_df, SPAN_WINDOW_TOKENS)
             .select("doc_id", "fh")
             .repartition("fh")
             .dropDuplicates(["doc_id", "fh"])
         )
-        seen_dirs = [
-            p for p in os.listdir(seen_store) if p.startswith("dq_batch=")
-        ]
-        if seen_dirs:
-            # r13-opt (guide §1.4): schema pinned + explicit dir list —
-            # no per-batch footer schema inference, no glob/partition
-            # discovery (see the novelty gate's note)
-            seen = (
-                spark.read.schema("fh bigint")
-                .parquet(*[os.path.join(seen_store, p) for p in seen_dirs])
-                .select("fh", F.lit(True).alias("__prior"))
-            )
-            j = sel.join(seen, "fh", "left")
-        else:
-            j = sel.withColumn("__prior", F.lit(None).cast("boolean"))
-        j = j.withColumn(
-            "first_doc", F.min("doc_id").over(_W.partitionBy("fh"))
-        ).localCheckpoint(eager=True)  # one winnow pass, two uses
-        hits = j.groupBy("doc_id").agg(
+
+    def hits(j):
+        return j.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("n_fps"),
             F.sum(
                 (
                     F.coalesce(F.col("__prior"), F.lit(False))
-                    | (F.col("first_doc") < F.col("doc_id"))
+                    | (F.col("__first") < F.col("doc_id"))
                 ).cast("int")
             ).alias("n_anchor_hits"),
         )
-        hits.write.mode("overwrite").parquet(
-            os.path.join(out_store, f"dq_batch={batch_id}")
-        )
-        seen_dir = os.path.join(seen_store, f"dq_batch={batch_id}")
-        j.filter(
-            F.col("__prior").isNull()
-            & (F.col("doc_id") == F.col("first_doc"))
-        ).select("fh").write.mode("overwrite").parquet(seen_dir)
-        from .extensions import parquet_footer_rows
 
-        STREAM_STATE_METRICS["streaming_winnowed_dedup"].append(
-            {
-                "batch": int(batch_id),
-                "state_rows_appended": parquet_footer_rows(seen_dir),
-            }
-        )
-
-    from .extensions import timed_foreach
-
-    q = (
-        stream.writeStream.foreachBatch(
-            timed_foreach("streaming_winnowed_dedup", score_batch)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    res = (
-        spark.read.option("basePath", out_store)
-        .parquet(os.path.join(out_store, "dq_batch=*"))
-        .select("doc_id", "n_fps", "n_anchor_hits")
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    res = first_seen_ledger(
+        spark, "streaming_winnowed_dedup", docs, "doc_id", "fh",
+        fingerprints, hits,
     )
     return (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
+        docs.select("doc_id")
         .join(res, "doc_id", "left")
         .select(
             "doc_id",
@@ -2378,133 +2292,38 @@ def q_streaming_novelty_incremental(spark, sf_dir):
     runs against the very same min-doc-id oracle, proving the
     incremental state transition is lossless.
 
-    100 TB notes: per-batch work is batch-windows × (one anti-join
-    against the store + an in-batch min rollup); the store is
-    append-only hashes (the dedup-ledger shape); results append once
-    per doc (each doc lives in exactly one batch)."""
-    import tempfile
+    100 TB notes: per-batch work is batch-windows × one left join
+    against the store plus one window min over wh; the store is
+    append-only hashes (the dedup-ledger shape, ``streaming/ledger.py``);
+    results append once per doc (each doc lives in exactly one batch)."""
+    from ..streaming.ledger import first_seen_ledger
 
-    src = tempfile.mkdtemp(prefix="stream_nov_src_")
-    seen_store = tempfile.mkdtemp(prefix="stream_nov_seen_")
-    out_store = tempfile.mkdtemp(prefix="stream_nov_out_")
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    # ordered ranges: partition i holds the i-th doc_id range and part
-    # files are named by partition id, so lexicographic file order (the
-    # file source's trigger order) == doc_id order
-    d.repartitionByRange(4, F.col("doc_id")).write.mode("overwrite").parquet(src)
-    # the file source triggers in (mtime, path) order and parallel part
-    # writes finish in arbitrary order — restamp mtimes to follow path
-    # order (partition id == doc_id range order) so batches arrive in
-    # doc_id order, the precondition of the incremental min-doc logic
-    import glob as _glob
-    import time as _time
-
-    base = int(_time.time()) + 10
-    for i, p in enumerate(sorted(_glob.glob(os.path.join(src, "part-*")))):
-        os.utime(p, (base + i, base + i))
-    schema = d.schema  # r13-opt: no footer re-inference (see index gate)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-
-    from .extensions import STREAM_STATE_METRICS
-
-    STREAM_STATE_METRICS["streaming_novelty_incremental"] = []
-
-    def score_batch(batch_df, batch_id):
-        # r12-opt (guide §2.4): the per-batch body was anti-join store
-        # → groupBy-min → join back → groupBy doc — the exploded
-        # window frame (the BIG relation) crossed a keyed Exchange
-        # three times per micro-batch. A hash in the store and the
-        # in-batch first are both per-wh facts: ONE left join against
-        # the (globally distinct) store plus ONE window min over wh —
-        # reusing the join's partitioning, no extra Exchange — yields
-        # the identical per-doc novelty, and the fresh-state append is
-        # the min-doc row of each unseen wh from the same frame.
-        # Equivalence: a store hash has __prior=true on every row, so
-        # first_unseen is null → never novel (the old plan's missing
-        # firsts row); an unseen wh has ALL rows unseen, so
-        # min-over-window == the old groupBy min. Metric count now
-        # reads parquet footers (zero jobs).
-        if batch_df.isEmpty():
-            return
-        from pyspark.sql import Window as _W
-
-        wh = batch_df.withColumn("__toks", F.expr(TOKENS_SPARK)).select(
+    def windows(batch_df):
+        return batch_df.withColumn("__toks", F.expr(TOKENS_SPARK)).select(
             "doc_id", F.explode(F.expr(_SPAN_WINDOWS_SPARK)).alias("w")
         ).select("doc_id", _h(F.col("w")).alias("wh"))
-        seen_dirs = [
-            p for p in os.listdir(seen_store) if p.startswith("dq_batch=")
-        ]
-        if seen_dirs:
-            # r13-opt (guide §1.4): the store read is per-batch hot
-            # path — pin the schema (the store holds exactly the wh
-            # hashes this loop writes) and pass the explicit dir list,
-            # so each micro-batch skips the footer-based schema
-            # inference and the dq_batch=* glob/partition discovery
-            # the old basePath read re-ran every trigger.
-            seen = spark.read.schema("wh bigint").parquet(
-                *[os.path.join(seen_store, p) for p in seen_dirs]
-            ).select("wh", F.lit(True).alias("__prior"))
-            j = wh.join(seen, "wh", "left")
-        else:
-            j = wh.withColumn("__prior", F.lit(None).cast("boolean"))
-        j = j.withColumn(
-            "first_unseen",
-            F.min(F.when(F.col("__prior").isNull(), F.col("doc_id"))).over(
-                _W.partitionBy("wh")
-            ),
-        ).localCheckpoint(eager=True)  # one window pass, two uses
-        novel = j.groupBy("doc_id").agg(
+
+    def novelty(j):
+        # a window is novel at the doc that first holds a hash no
+        # earlier batch stored
+        return j.groupBy("doc_id").agg(
             F.count(F.lit(1)).alias("n_windows"),
             F.sum(
                 F.when(
-                    F.col("first_unseen") == F.col("doc_id"), 1
+                    F.col("__prior").isNull()
+                    & (F.col("__first") == F.col("doc_id")),
+                    1,
                 ).otherwise(0)
             ).alias("n_novel"),
         )
-        novel.write.mode("overwrite").parquet(
-            os.path.join(out_store, f"dq_batch={batch_id}")
-        )
-        seen_dir = os.path.join(seen_store, f"dq_batch={batch_id}")
-        # the (first_unseen == doc_id) rows cover every unseen wh; the
-        # distinct dedups repeated (doc_id, wh) windows within the
-        # min doc and runs on the wh-partitioned checkpoint (no new
-        # Exchange — hashpartitioning(wh) satisfies the dedup's
-        # clustering requirement)
-        j.filter(F.col("first_unseen") == F.col("doc_id")).select(
-            "wh"
-        ).distinct().write.mode("overwrite").parquet(seen_dir)
-        # footer-metadata count of the state rows this batch appended —
-        # the per-batch state growth the sf10 probe records (the store
-        # is append-only, so cumulative state = running sum of these)
-        from .extensions import parquet_footer_rows
 
-        STREAM_STATE_METRICS["streaming_novelty_incremental"].append(
-            {
-                "batch": int(batch_id),
-                "state_rows_appended": parquet_footer_rows(seen_dir),
-            }
-        )
-
-    from .extensions import timed_foreach
-
-    q = (
-        stream.writeStream.foreachBatch(
-            timed_foreach("streaming_novelty_incremental", score_batch)
-        )
-        .trigger(availableNow=True)
-        .start()
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    res = first_seen_ledger(
+        spark, "streaming_novelty_incremental", docs, "doc_id", "wh",
+        windows, novelty,
     )
-    q.awaitTermination()
-    res = spark.read.option("basePath", out_store).parquet(
-        os.path.join(out_store, "dq_batch=*")
-    ).select("doc_id", "n_windows", "n_novel")
     return (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id")
+        docs.select("doc_id")
         .join(res, "doc_id", "left")
         .select(
             "doc_id",

@@ -1718,57 +1718,19 @@ def q_streaming_kmv_distinct(spark, sf_dir):
 
     100 TB notes: per-batch work is batch-proportional; state is
     ≤ k·|groups| rows per batch however many events arrive (recorded
-    per batch in STREAM_STATE_METRICS — measured, not argued); the
-    serve merge reads n_batches·k·|groups| fixed-size rows, the same
-    path per-executor partial sketches take on a real cluster."""
-    import os
-    import tempfile
-
+    per batch in STREAM_STATE_METRICS by ``streaming/ledger.py`` —
+    measured, not argued); the serve merge reads n_batches·k·|groups|
+    fixed-size rows, the same path per-executor partial sketches take
+    on a real cluster."""
     from ..operators.ranking import grouped_rank
-    from .extensions import STREAM_STATE_METRICS
+    from ..streaming.ledger import replay
 
-    src = tempfile.mkdtemp(prefix="stream_kmv_src_")
-    store = tempfile.mkdtemp(prefix="stream_kmv_sketches_")
     ev = _events(spark, sf_dir).select("event_type", "user_id")
-    ev.repartition(4, F.col("user_id")).write.mode("overwrite").parquet(src)
-    schema = ev.schema  # r13-opt: no footer re-inference (see index gate)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    sketches = replay(
+        spark, "streaming_kmv_distinct", ev, "user_id",
+        lambda batch_df, _: kmv_sketch(batch_df, ["event_type"], "user_id"),
     )
-    metrics: list = []
-
-    def build_sketch(batch_df, batch_id):
-        if batch_df.isEmpty():
-            return
-        out = os.path.join(store, f"sketch={batch_id}")
-        kmv_sketch(batch_df, ["event_type"], "user_id").write.mode(
-            "overwrite"
-        ).parquet(out)
-        from .extensions import parquet_footer_rows
-
-        metrics.append(
-            {
-                "batch": int(batch_id),
-                # r12-opt: footer count — the count() was one extra
-                # Spark job per micro-batch
-                "state_rows_appended": parquet_footer_rows(out),
-            }
-        )
-
-    from .extensions import timed_foreach
-
-    q = (
-        stream.writeStream.foreachBatch(
-            timed_foreach("streaming_kmv_distinct", build_sketch)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    STREAM_STATE_METRICS["streaming_kmv_distinct"] = metrics
-    pool = spark.read.parquet(store).select("event_type", "hh").distinct()
+    pool = sketches.select("event_type", "hh").distinct()
     ranked, _ = grouped_rank(pool, ["event_type"], ["hh"], rank_col="__rk")
     merged = ranked.filter(F.col("__rk") <= KMV_K).drop("__rk")
     return kmv_estimate(merged, ["event_type"])

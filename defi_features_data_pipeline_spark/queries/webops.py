@@ -728,18 +728,9 @@ def q_streaming_url_dedup(spark, sf_dir):
 
     100 TB notes: state is ONE ROW PER DISTINCT CANONICAL URL — the
     minimal exact dedup ledger (what a crawl frontier keeps anyway);
-    per-batch work is one anti-join + one semi-join against the store
-    plus an in-batch min rollup; per-batch appended-state counts land
-    in STREAM_STATE_METRICS; the store is append-only per-batch
-    partitions (overwrite = idempotent replay)."""
-    import glob as _glob
-    import os as _os
-    import tempfile
-    import time as _time
-
-    src = tempfile.mkdtemp(prefix="stream_url_src_")
-    seen_store = tempfile.mkdtemp(prefix="stream_url_seen_")
-    out_store = tempfile.mkdtemp(prefix="stream_url_out_")
+    per-batch work is one left join against the store plus one window
+    min over canon_url (``streaming/ledger.py``)."""
+    from ..streaming.ledger import first_seen_ledger
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "source", "lang")
     arrivals = d.select(
@@ -752,48 +743,12 @@ def q_streaming_url_dedup(spark, sf_dir):
             )
         ).alias("variant", "url"),
     ).withColumn("arrival", F.col("doc_id") * 3 + F.col("variant"))
-    arrivals.repartitionByRange(4, F.col("arrival")).write.mode(
-        "overwrite"
-    ).parquet(src)
-    # file-source trigger order = (mtime, path); restamp so batches
-    # arrive in arrival-range order (partition id == arrival range
-    # under repartitionByRange) — the precondition of min-arrival logic
-    base = int(_time.time()) + 10
-    for i, p in enumerate(sorted(_glob.glob(_os.path.join(src, "part-*")))):
-        _os.utime(p, (base + i, base + i))
-    schema = arrivals.schema  # r13-opt: no footer re-inference (see index gate)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
 
-    from .extensions import STREAM_STATE_METRICS, timed_foreach
-
-    STREAM_STATE_METRICS["streaming_url_dedup"] = []
-
-    def score_batch(batch_df, batch_id):
-        # r12-opt (guide §2.4, §1.4): the per-batch body was
-        # canonicalize → semi-join store → groupBy-min → join → join —
-        # three keyed joins + one aggregate, every one re-planned per
-        # micro-batch, plus two metric count() jobs. The store flag and
-        # the in-batch first are both per-canon_url facts, so ONE left
-        # join against the (globally distinct) store plus ONE window
-        # min over canon_url — which reuses the join's partitioning,
-        # no extra Exchange — produces the identical verdicts, and the
-        # fresh-state append falls out of the same frame (the row with
-        # arrival == first_arrival and no store hit IS the distinct
-        # unseen canonical, arrivals being unique). Metric counts now
-        # come from parquet footers (zero jobs). Measured 6.0 → ~3.4 s;
-        # per-batch joins 3 → 1, aggregates 2 → 0 (one window).
-        if batch_df.isEmpty():
-            return
-        from pyspark.sql import Window as _W
-
-        sel = (
+    def canonical(batch_df):
+        return (
             # registrable=False: this gate never reads the registrable
             # domain, and the dead PSL join would re-plan+re-broadcast
-            # per micro-batch (measured 4.2 -> 6.0 s for the gate)
+            # per micro-batch
             with_canonical_url(batch_df, registrable=False)
             .select("doc_id", "variant", "arrival", "canon_url")
             # keep the canonicalizer chain in its OWN map-only codegen
@@ -801,75 +756,21 @@ def q_streaming_url_dedup(spark, sf_dir):
             # join+window stage it falls out of WholeStageCodegen
             .localCheckpoint(eager=True)
         )
-        seen_dirs = [
-            p for p in _os.listdir(seen_store) if p.startswith("dq_batch=")
-        ]
-        if seen_dirs:
-            # store rows are globally distinct canon_urls (each batch
-            # appends only unseen ones), so the left join is 1:≤1 —
-            # row count preserved, __prior true iff already seen.
-            # r13-opt (guide §1.4): schema pinned + explicit dir list —
-            # no per-batch footer schema inference, no glob/partition
-            # discovery (see the novelty gate's note)
-            seen = (
-                spark.read.schema("canon_url string")
-                .parquet(*[_os.path.join(seen_store, p) for p in seen_dirs])
-                .select("canon_url", F.lit(True).alias("__prior"))
-            )
-            j = sel.join(seen, "canon_url", "left")
-        else:
-            j = sel.withColumn("__prior", F.lit(None).cast("boolean"))
-        j = j.withColumn(
-            "first_arrival",
-            F.min("arrival").over(_W.partitionBy("canon_url")),
-        ).localCheckpoint(eager=True)  # one canonicalize+join, two uses
-        verdicts = j.select(
+
+    def verdicts(j):
+        return j.select(
             "doc_id",
             "variant",
             (
                 F.coalesce(F.col("__prior"), F.lit(False))
-                | (F.col("first_arrival") < F.col("arrival"))
+                | (F.col("__first") < F.col("arrival"))
             ).alias("is_dup"),
         )
-        verdicts.write.mode("overwrite").parquet(
-            _os.path.join(out_store, f"dq_batch={batch_id}")
-        )
-        # arrival ids are unique, so exactly ONE row per canon_url has
-        # arrival == first_arrival; keeping the unseen ones IS the
-        # distinct-unseen set the old distinct + anti-join computed
-        fresh = j.filter(
-            F.col("__prior").isNull()
-            & (F.col("arrival") == F.col("first_arrival"))
-        ).select("canon_url")
-        seen_dir = _os.path.join(seen_store, f"dq_batch={batch_id}")
-        fresh.write.mode("overwrite").parquet(seen_dir)
-        from .extensions import parquet_footer_rows
 
-        STREAM_STATE_METRICS["streaming_url_dedup"].append(
-            {
-                "batch": int(batch_id),
-                # footer counts — exact, no extra jobs (verdicts rows
-                # == batch arrivals: the left join is 1:≤1)
-                "arrivals": parquet_footer_rows(
-                    _os.path.join(out_store, f"dq_batch={batch_id}")
-                ),
-                "state_rows_appended": parquet_footer_rows(seen_dir),
-            }
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(
-            timed_foreach("streaming_url_dedup", score_batch)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.option("basePath", out_store)
-        .parquet(_os.path.join(out_store, "dq_batch=*"))
-        .select("doc_id", "variant", "is_dup")
-    )
+    return first_seen_ledger(
+        spark, "streaming_url_dedup", arrivals, "arrival", "canon_url",
+        canonical, verdicts,
+    ).select("doc_id", "variant", "is_dup")
 
 
 _ARRIVALS_DUCK = " UNION ALL ".join(

@@ -61,6 +61,7 @@ def test_feature_spine_keeps_all_null_borrow_fragment(spark, tmp_path_factory):
 
     import duckdb
 
+    from defi_features_data_pipeline_spark.functions.scalars import epoch_seconds
     from defi_features_data_pipeline_spark.pipelines.defi import run_pipeline
     from defi_features_data_pipeline_spark.pipelines.defi.fixtures import generate
 
@@ -76,7 +77,37 @@ def test_feature_spine_keeps_all_null_borrow_fragment(spark, tmp_path_factory):
     w = "0x" + "ab" * 20
     dep_path = f"{base}/raw/transpose_deposit_events"
     dep = spark.read.parquet(dep_path)
-    tmpl = dep.filter(F.col("quantity") > 0).limit(1)
+    # the template must survive enrich_events: a token with non-zero
+    # decimals, not on the drop list, priced within the as-of lookback.
+    # A fixed order makes the pick independent of the core count.
+    decimals = spark.read.parquet(f"{base}/stage/ethereum_tokens_metadata")
+    dropped = spark.read.parquet(f"{base}/sandbox/defi_events_tokens_to_drop")
+    prices = spark.read.parquet(
+        f"{base}/analytics/features_daily_token_prices"
+    ).select("address", F.col("timestamp").alias("price_ts"))
+    ev_ts = epoch_seconds("timestamp")
+    tmpl = (
+        dep.filter(F.col("quantity") > 0)
+        .join(
+            decimals.filter(F.col("decimals") > 0),
+            F.col("token_address") == F.col("contract_address"),
+            "left_semi",
+        )
+        .join(
+            dropped,
+            F.col("token_address") == F.col("contract_address"),
+            "left_anti",
+        )
+        .join(
+            prices,
+            (F.col("token_address") == F.col("address"))
+            & (F.col("price_ts") <= ev_ts)
+            & (F.col("price_ts") > ev_ts - 86400),
+            "left_semi",
+        )
+        .orderBy("transaction_hash", "log_index")
+        .limit(1)
+    )
     extra = tmpl.withColumn("sender_address", F.lit(w)).withColumn(
         "account_address", F.lit(w)
     ).withColumn("transaction_hash", F.lit("0x" + "cd" * 32))

@@ -617,3 +617,73 @@ def test_stateful_timeout_evicts_state(spark, tmp_path):
     collected.clear()
     run_batch()
     assert set(collected) == {("a", 4, False), ("b", 1, False)}
+
+
+def test_first_seen_ledger_matches_batch_semantics(spark, monkeypatch):
+    """The shared ledger (streaming/ledger.py) over a hand-built stream
+    of three order values, i.e. three range files and three
+    micro-batches: batch 0 carries key "a" twice at the same order
+    value, and later batches repeat a, b and c. The verdicts must equal
+    the batch rule "key first held by a smaller order value", the store
+    must hold each key once, and every store read must list exactly the
+    dirs the earlier batches wrote."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from defi_features_data_pipeline_spark.streaming.ledger import (
+        STREAM_STATE_METRICS,
+        first_seen_ledger,
+    )
+
+    rows = [
+        (1, 0, "a"), (1, 1, "a"), (1, 2, "b"),
+        (2, 3, "b"), (2, 4, "c"),
+        (3, 5, "a"), (3, 6, "c"), (3, 7, "d"),
+    ]
+    src = spark.createDataFrame(rows, "t long, id long, k string")
+
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def spy(self, *paths, **options):
+        reads.append(list(paths))
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", spy)
+    out = first_seen_ledger(
+        spark,
+        "ledger_unit",
+        src,
+        "t",
+        "k",
+        lambda b: b,
+        lambda j: j.select(
+            "id",
+            (
+                F.coalesce(F.col("__prior"), F.lit(False))
+                | (F.col("__first") < F.col("t"))
+            ).alias("dup"),
+        ),
+    )
+    got = {r["id"]: r["dup"] for r in out.collect()}
+    monkeypatch.undo()
+
+    first = {}
+    for t, _, k in rows:
+        first[k] = min(first.get(k, t), t)
+    assert got == {i: first[k] < t for t, i, k in rows}
+
+    metrics = STREAM_STATE_METRICS["ledger_unit"]
+    batches = [m["batch"] for m in metrics]
+    assert len(batches) == 3
+    assert [m["arrivals"] for m in metrics] == [3, 2, 3]
+    assert [m["state_rows_appended"] for m in metrics] == [2, 1, 1]
+
+    store_reads = [r for r in reads if "/seen/" in r[0]]
+    seen_root = os.path.dirname(store_reads[0][0])
+    written = [os.path.join(seen_root, f"batch={b}") for b in batches]
+    assert store_reads == [written[:i] for i in range(1, len(written))]
+    assert sorted(os.listdir(seen_root)) == sorted(
+        os.path.basename(w) for w in written
+    )
+    keys = [r["k"] for r in spark.read.parquet(*written).collect()]
+    assert sorted(keys) == ["a", "b", "c", "d"]

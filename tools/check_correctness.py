@@ -9,6 +9,8 @@ Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [query ...]
 ``--json`` additionally writes a machine-readable artifact (per-query
 status/rows/seconds) so full-suite gate runs are auditable
 round-over-round alongside the driver's fixed-list CORRECTNESS file.
+The artifact records the ``git rev-parse HEAD`` it ran at and whether
+tracked files differed from that commit (``dirty``).
 """
 
 from __future__ import annotations
@@ -16,12 +18,29 @@ from __future__ import annotations
 import json
 import math
 import os
+import subprocess
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+
+def git_stamp() -> dict:
+    """HEAD sha plus whether tracked files differ from it."""
+
+    def git(*args):
+        return subprocess.run(
+            ["git", *args], cwd=REPO, capture_output=True, text=True, check=True
+        ).stdout.strip()
+
+    return {
+        "git_sha": git("rev-parse", "HEAD"),
+        "dirty": bool(git("status", "--porcelain", "--untracked-files=no")),
+    }
+
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -139,6 +158,7 @@ def main():
         with open(json_out, "w") as f:
             json.dump(
                 {
+                    **git_stamp(),
                     "sf_dir": sf_dir,
                     "total": n_run,
                     "matched": n_run - len(failures),
