@@ -457,6 +457,29 @@ def test_lsh_cc_labels_rebuilds_on_stale_meta(spark, tmp_path, monkeypatch):
     X._LSH_CC_CACHE.pop(key, None)
 
 
+def test_incremental_minhash_corrupt_stage_raises(spark, monkeypatch):
+    """A corrupt staged band table fails the gate instead of reading as
+    "zero documents": the stage is probed for parquet files, and only
+    an empty listing means an empty corpus."""
+    import defi_features_data_pipeline_spark.sources.fsutil as fsutil
+    from defi_features_data_pipeline_spark.queries.extensions import (
+        q_dedup_incremental_minhash,
+    )
+
+    listing = fsutil.list_parquet_files
+
+    def corrupt_after_listing(spark_, path):
+        files = listing(spark_, path)
+        for p, _ in files:
+            with open(p.removeprefix("file:"), "wb") as f:
+                f.write(b"not parquet")
+        return files
+
+    monkeypatch.setattr(fsutil, "list_parquet_files", corrupt_after_listing)
+    with pytest.raises(Exception):
+        q_dedup_incremental_minhash(spark, SF_DIR)
+
+
 # ---------------------------------------------------------------------------
 # streaming_count_min — stream/batch sketch equivalence
 # ---------------------------------------------------------------------------
