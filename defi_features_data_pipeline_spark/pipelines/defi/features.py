@@ -1,156 +1,126 @@
-"""Features layer: the 9 feature views + the 27-column defi_features
-assembly, ported 1:1 from
-`/root/reference/src/pipelines/features/transformations/` (file:line in
-each function). ``now_epoch`` is injected everywhere the reference uses
+"""Features layer: the reference's 9 feature views + the 27-column
+defi_features assembly (the reference's
+`src/pipelines/features/transformations/`, file:line in each function). ``now_epoch`` is injected everywhere the reference uses
 ``to_unixtime(current_timestamp)`` (determinism, SURVEY §4.3).
 
-Plan shapes: every per-wallet view is one hash aggregate; the health
-factor stack is two aggregates + a (account, block) sort-merge join;
-the OR-predicate borrow↔health join uses the union-of-equi-joins
-rewrite (J9) instead of Catalyst's nested loop; the final assembly is
-a left-join chain onto the wallet spine (fragments are wallet-grained
-→ AQE broadcasts the small ones).
+Plan shapes: one pass per source. The reference spells every protocol
+and every address role as its own CTE and merges them with FULL OUTER
+joins; here they are conditional aggregates inside one aggregate, and
+only the columns the 27-column contract reads are computed. Each source
+is hash-partitioned once on the key of its aggregate and every later
+level runs in place: the event tables on their wallet key (the
+COUNT(DISTINCT) levels add no exchange), the historical positions on
+account (the (account, block, protocol) rollup, the (account, block)
+borrow window and the join to the borrow pairs), the health-factor legs
+on sender. The latest market snapshot is a broadcast. The assembly is
+one union of wallet-keyed fragments and one aggregate (a single
+exchange) instead of a left-join chain.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ...functions.scalars import HF_CAP, HF_FLOOR, NEVER_SENTINEL
-from ...operators import union_distinct
+from .config import NUMERAIRE_MARKETS, PROTOCOLS
 
-AAVE = "aave-v2-eth"
-COMPOUND = "compound-v2-eth"
+
+def _eth() -> Column:
+    return F.abs(F.col("quantity_in_eth"))
+
+
+def _lender() -> Column:
+    return (F.col("side") == "LENDER") & (F.col("is_collateral") == True)  # noqa: E712
+
+
+def _borrower() -> Column:
+    return F.col("side") == "BORROWER"
+
+
+def _per_protocol(agg, col: Column) -> list[Column]:
+    """``agg`` over each protocol's rows, a missing protocol → 0 (the
+    COALESCE-0 of the reference's per-protocol FULL OUTER merge)."""
+    return [F.coalesce(agg(F.when(F.col("protocol") == p, col)), F.lit(0)) for p in PROTOCOLS]
+
+
+def _total(cols: list[Column]) -> Column:
+    return reduce(operator.add, cols)
+
+
+def _per_key(events: DataFrame, key: str, *aggs: Column) -> DataFrame:
+    """One aggregate over a source, shuffled once on its key: the
+    partial, distinct and final aggregation levels then need no further
+    exchange (a COUNT(DISTINCT) would otherwise add one)."""
+    return events.repartition(key).groupBy(key).agg(*aggs)
 
 
 # ---------------------------------------------------------------------------
-# Simple per-wallet aggregate views
+# Per-wallet event aggregates (credit mix folded in)
 # ---------------------------------------------------------------------------
 
 
 def view_borrow_features(borrow: DataFrame) -> DataFrame:
-    """`view_defi_borrow_features.sql:3-10`."""
-    return borrow.groupBy("sender_address").agg(
-        F.coalesce(F.sum(F.abs(F.col("quantity_in_eth"))), F.lit(0)).alias(
-            "loan_amount_eth_sum"
-        ),
-        F.coalesce(F.avg(F.abs(F.col("quantity_in_eth"))), F.lit(0)).alias(
-            "loan_amount_eth_avg"
-        ),
-        F.coalesce(F.countDistinct("transaction_hash"), F.lit(0)).alias(
-            "borrow_total_borrows"
-        ),
+    """`view_defi_borrow_features.sql:3-10` + the borrow leg of
+    `view_defi_credit_mix_features.sql:14-27`."""
+    return _per_key(
+        borrow, "sender_address",
+        F.sum(_eth()).alias("borrow_amount_sum_eth"),
+        F.avg(_eth()).alias("borrow_amount_avg_eth"),
+        F.countDistinct("transaction_hash").alias("borrow_count"),
+        F.countDistinct("protocol_name").alias("unique_borrow_protocol_count"),
     )
 
 
 def view_repay_features(repay: DataFrame) -> DataFrame:
     """`view_defi_repay_features.sql:3-10`."""
-    return repay.groupBy("sender_address").agg(
-        F.coalesce(F.sum(F.abs(F.col("quantity_in_eth"))), F.lit(0)).alias(
-            "borrow_total_eth_repaid_sum"
-        ),
-        F.coalesce(F.avg(F.abs(F.col("quantity_in_eth"))), F.lit(0)).alias(
-            "borrow_total_eth_repaid_avg"
-        ),
-        F.coalesce(F.countDistinct("transaction_hash"), F.lit(0)).alias(
-            "borrow_total_repays"
-        ),
+    return _per_key(
+        repay, "sender_address",
+        F.sum(_eth()).alias("repay_amount_sum_eth"),
+        F.avg(_eth()).alias("repay_amount_avg_eth"),
+        F.countDistinct("transaction_hash").alias("repay_count"),
     )
 
 
 def view_lending_sum_redeems(withdraw: DataFrame) -> DataFrame:
     """`view_defi_lending_sum_redeems_features.sql:3-7` (withdraws)."""
-    return withdraw.groupBy("sender_address").agg(
-        F.coalesce(F.sum(F.abs(F.col("quantity_in_eth"))), F.lit(0)).alias(
-            "lending_sum_redeems"
-        )
-    )
+    return _per_key(withdraw, "sender_address", F.sum(_eth()).alias("withdraw_amount_sum_eth"))
 
 
 def view_lending_time_and_count(deposit: DataFrame, now_epoch: int) -> DataFrame:
-    """`view_defi_lending_time_and_count_features.sql:3-9` (deposits)."""
-    return deposit.groupBy("sender_address").agg(
-        F.coalesce(F.countDistinct("transaction_hash"), F.lit(0)).alias(
-            "lending_total_deposits"
-        ),
-        (F.lit(now_epoch) - F.min("epoch_timestamp")).alias(
-            "lending_time_since_first_lending"
-        ),
-        F.coalesce(F.sum(F.abs(F.col("quantity_in_eth"))), F.lit(0)).alias(
-            "total_deposits_in_eth"
-        ),
+    """`view_defi_lending_time_and_count_features.sql:3-9` (deposits) +
+    the deposit leg of `view_defi_credit_mix_features.sql:28-41`. The
+    withdraw/repay credit-mix legs only feed ``credit_mix_count_protocol``,
+    which the 27-column contract does not select."""
+    return _per_key(
+        deposit, "sender_address",
+        F.countDistinct("transaction_hash").alias("deposit_count"),
+        (F.lit(now_epoch) - F.min("epoch_timestamp")).alias("time_since_first_deposit"),
+        F.sum(_eth()).alias("deposit_amount_sum_eth"),
+        F.countDistinct("protocol_name").alias("unique_lending_protocol_count"),
     )
 
 
 def view_liquidation_features(liquidation: DataFrame, now_epoch: int) -> DataFrame:
     """`view_defi_liquidation_features.sql:3-17` — grouped by the
     liquidated ACCOUNT, with the 999999999 never-liquidated sentinel."""
-    agg = liquidation.groupBy("account_address").agg(
-        F.coalesce(F.countDistinct("transaction_hash"), F.lit(0)).alias(
-            "liquidation_total_liquidations"
-        ),
-        (F.lit(now_epoch) - F.max("epoch_timestamp")).alias("t_since"),
-        F.coalesce(F.sum(F.abs(F.col("quantity_in_eth"))), F.lit(0)).alias(
-            "liquidation_total_amount_eth"
-        ),
-    )
-    return agg.select(
-        "account_address",
-        "liquidation_total_liquidations",
-        F.coalesce(F.col("liquidation_total_amount_eth"), F.lit(0)).alias(
-            "liquidation_total_amount_eth"
-        ),
-        F.coalesce(F.col("t_since"), F.lit(NEVER_SENTINEL)).alias(
-            "liquidation_time_since_last_liquidated"
-        ),
+    return _per_key(
+        liquidation, "account_address",
+        F.countDistinct("transaction_hash").alias("liquidation_total_liquidations"),
+        F.sum(_eth()).alias("liquidation_total_amount_eth"),
+        F.coalesce(
+            F.lit(now_epoch) - F.max("epoch_timestamp"), F.lit(NEVER_SENTINEL)
+        ).alias("liquidation_time_since_last_liquidated"),
     )
 
 
-def view_distinct_addresses(events_by_type: dict[str, DataFrame]) -> DataFrame:
-    """`view_distinct_defi_events_addresses.sql:2-33`: 10-way UNION ALL
-    + DISTINCT over sender/account of all 5 event tables."""
-    parts = []
-    for df in events_by_type.values():
-        parts.append(df.select(F.col("sender_address").alias("wallet_address")))
-        parts.append(df.select(F.col("account_address").alias("wallet_address")))
-    return union_distinct(parts, out_col="wallet_address")
-
-
-def view_credit_mix(events_by_type: dict[str, DataFrame], spine: DataFrame) -> DataFrame:
-    """`view_defi_credit_mix_features.sql:14-69`: per-event-type
-    COUNT(DISTINCT protocol_name), merged on the spine, GREATEST."""
-    counts = {}
-    for ev in ("borrow", "deposit", "withdraw", "repay"):
-        counts[ev] = (
-            events_by_type[ev]
-            .groupBy("sender_address")
-            .agg(
-                F.coalesce(F.countDistinct("protocol_name"), F.lit(0)).alias(f"cnt_{ev}")
-            )
-        )
-    out = spine
-    for ev, df in counts.items():
-        out = out.join(df, out.wallet_address == df.sender_address, "left").drop(
-            "sender_address"
-        )
-    out = out.select(
-        F.col("wallet_address").alias("sender_address"),
-        F.coalesce("cnt_borrow", F.lit(0)).alias("credit_mix_count_borrow_protocol"),
-        F.coalesce("cnt_deposit", F.lit(0)).alias("credit_mix_count_lending_protocol"),
-        F.coalesce("cnt_withdraw", F.lit(0)).alias("credit_mix_count_withdraw_protocol"),
-        F.coalesce("cnt_repay", F.lit(0)).alias("credit_mix_count_repay_protocol"),
-    )
-    return out.select(
-        "sender_address",
-        "credit_mix_count_borrow_protocol",
-        "credit_mix_count_lending_protocol",
-        F.greatest(
-            "credit_mix_count_borrow_protocol",
-            "credit_mix_count_lending_protocol",
-            "credit_mix_count_withdraw_protocol",
-            "credit_mix_count_repay_protocol",
-        ).alias("credit_mix_count_protocol"),
-    )
+def borrow_pairs(borrow: DataFrame) -> DataFrame:
+    """The distinct borrow (sender, account) pairs through which the
+    account-keyed views reach the borrowing sender
+    (`defi_features_calculation.sql:69-138`)."""
+    return borrow.select("sender_address", "account_address").distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -158,7 +128,7 @@ def view_credit_mix(events_by_type: dict[str, DataFrame], spine: DataFrame) -> D
 # ---------------------------------------------------------------------------
 
 
-def _health_factor_case(num: F.Column, den: F.Column) -> F.Column:
+def _health_factor_case(num: Column, den: Column) -> Column:
     """The reference's 6-branch clamp ladder, encoded once
     (`view_defi_current_health_factor_features.sql:151-158` ==
     `view_defi_historical_health_and_risk_factor.sql:415-422`)."""
@@ -173,420 +143,217 @@ def _health_factor_case(num: F.Column, den: F.Column) -> F.Column:
     )
 
 
-def _borrow_lending_tables(
-    positions: DataFrame, extra_keys: list[str]
-) -> tuple[DataFrame, DataFrame]:
-    """The borrow_table / lending_table rollups (A4) shared by the
-    historical views (`view_defi_historical_health_and_risk_factor.sql:2-25`)."""
-    keys = ["account", *extra_keys]
-    borrow = (
-        positions.filter(F.col("side") == "BORROWER")
-        .groupBy(*keys)
-        .agg(
-            F.sum("balance_in_usd").alias("total_borrow_balance"),
-            F.sum("balance_in_eth").alias("total_borrow_balance_eth"),
-        )
-    )
-    lending = (
-        positions.filter((F.col("side") == "LENDER") & (F.col("is_collateral") == True))  # noqa: E712
-        .groupBy(*keys)
-        .agg(
-            F.sum(F.col("balance_in_usd") * F.col("liquidation_threshold")).alias(
-                "health_factor_numerator"
-            ),
-            F.sum(F.col("balance_in_eth") * F.col("liquidation_threshold")).alias(
-                "misc_available_borrows_eth_collateral"
-            ),
-            F.sum("balance_in_eth").alias("misc_total_collateral_eth"),
-        )
-    )
-    return borrow, lending
-
-
 def _account_health_factor(positions: DataFrame) -> DataFrame:
-    """account_health_factor CTE (`view_defi_historical_health_and_risk_factor.sql:409-442`):
-    lending LEFT JOIN borrow per (account, block), clamp ladder,
-    available-borrows and weighted-risk expressions."""
-    borrow, lending = _borrow_lending_tables(positions, ["block_number", "protocol"])
-    b = borrow.select(
-        F.col("account").alias("b_account"),
-        F.col("block_number").alias("b_block"),
-        F.col("protocol").alias("b_protocol"),
-        "total_borrow_balance",
-        "total_borrow_balance_eth",
+    """account_health_factor CTE
+    (`view_defi_historical_health_and_risk_factor.sql:2-25,409-442`):
+    the borrow_table / lending_table rollups (A4) as one conditional
+    aggregate per (account, block, protocol), then lending LEFT JOIN
+    borrow ON (account, block). That join ignores protocol, so at a
+    block where an account holds both protocols each lending row pairs
+    with every protocol's borrow row; the window collects those borrow
+    rows and ``explode_outer`` keeps a lending row without any.
+
+    Partitioned by account once: the rollup, the window and the join to
+    the borrow pairs (on account) run without another exchange."""
+    usd, eth = F.col("balance_in_usd"), F.col("balance_in_eth")
+    lt = F.col("liquidation_threshold")
+    lend, borrow = _lender(), _borrower()
+    rollup = (
+        positions.repartition("account")
+        .groupBy("account", "block_number", "protocol")
+        .agg(
+            F.count(F.when(lend, 1)).alias("lending_rows"),
+            F.sum(F.when(lend, usd * lt)).alias("health_factor_numerator"),
+            F.sum(F.when(lend, eth * lt)).alias("misc_available_borrows_eth_collateral"),
+            F.sum(F.when(lend, eth)).alias("misc_total_collateral_eth"),
+            F.count(F.when(borrow, 1)).alias("borrow_rows"),
+            F.sum(F.when(borrow, usd)).alias("total_borrow_balance"),
+            F.sum(F.when(borrow, eth)).alias("total_borrow_balance_eth"),
+        )
     )
-    j = lending.join(
-        b,
-        (F.col("b_account") == F.col("account"))
-        & (F.col("b_block") == F.col("block_number")),
-        "left",
+    borrows = F.collect_list(
+        F.when(
+            F.col("borrow_rows") > 0,
+            F.struct("total_borrow_balance", "total_borrow_balance_eth"),
+        )
+    ).over(Window.partitionBy("account", "block_number"))
+    j = (
+        rollup.withColumn("b", borrows)
+        .filter(F.col("lending_rows") > 0)
+        .withColumn("b", F.explode_outer("b"))
     )
+    borrow_eth = F.col("b.total_borrow_balance_eth")
+    available = F.col("misc_available_borrows_eth_collateral")
     hf = _health_factor_case(
-        F.col("health_factor_numerator"), F.col("total_borrow_balance")
+        F.col("health_factor_numerator"), F.col("b.total_borrow_balance")
     )
     return j.select(
         "account",
         "block_number",
-        "health_factor_numerator",
-        "misc_total_collateral_eth",
-        "total_borrow_balance_eth",
+        "protocol",
         hf.alias("health_factor"),
+        F.when(borrow_eth.isNull(), F.lit(0.0))
+        .otherwise(borrow_eth * (F.lit(1.0) / hf))
+        .alias("weighted_risk_factor"),
         F.coalesce(
-            F.when(
-                F.col("total_borrow_balance_eth").isNull(),
-                F.col("misc_available_borrows_eth_collateral"),
-            ).otherwise(
-                F.col("misc_available_borrows_eth_collateral")
-                - F.col("total_borrow_balance_eth")
-            ),
+            F.when(borrow_eth.isNull(), available).otherwise(available - borrow_eth),
             F.lit(0),
         ).alias("misc_available_borrows_eth"),
-        F.when(F.col("total_borrow_balance_eth").isNull(), F.lit(0.0))
-        .otherwise(F.col("total_borrow_balance_eth") * (F.lit(1.0) / hf))
-        .alias("weighted_risk_factor"),
-        F.col("protocol"),
-    )
-
-
-def _historical_per_protocol(
-    borrow_events: DataFrame, hf: DataFrame, protocol: str
-) -> DataFrame:
-    """union_cte + aggregate (`view_defi_historical_health_and_risk_factor.sql:69-103`):
-    borrow rows joined to health factors by account-role and by
-    sender-role, UNION (dedup), then the conditional AVG ladder.
-
-    INNER legs, not left: the reference writes ``LEFT JOIN ...
-    WHERE hf.protocol = x`` — the WHERE on a right-side column
-    rejects the NULL-extended rows, so the join is effectively inner
-    and senders with no health-factor row for the protocol are
-    absent from this view (they re-enter downstream via the feature
-    spine with COALESCE-0). A true left join would keep all-NULL
-    groups, which flips the COUNT(*)=1 branch of avg_health_factor
-    for single-capped-row senders."""
-    b = borrow_events.select("sender_address", "account_address").distinct()
-    hfp = hf.filter(F.col("protocol") == protocol).select(
-        "account",
-        F.col("block_number").alias("block_number_hf"),
-        "health_factor",
-        "weighted_risk_factor",
-        "misc_available_borrows_eth",
         "misc_total_collateral_eth",
     )
-    leg1 = b.join(hfp, b.account_address == hfp.account, "inner")
-    leg2 = b.join(hfp, b.sender_address == hfp.account, "inner")
-    cols = [
+
+
+def view_historical_health_and_risk(pairs: DataFrame, positions: DataFrame) -> DataFrame:
+    """`view_defi_historical_health_and_risk_factor.sql` and
+    `view_defi_historical_count_above_threshold.sql` in one aggregate.
+
+    Legs (`:69-103`): each borrow pair reaches the health factors of
+    its account and of its sender — the OR-predicate join (J9) as one
+    equi-join on the exploded role — and the UNION's dedup becomes a
+    ``distinct`` over the leg values. Both reference views filter
+    ``WHERE protocol = x`` after a LEFT JOIN, which makes the legs
+    inner: a sender with no health-factor row in a protocol has no
+    group there, and re-enters through the assembly's COALESCE-0.
+
+    Per protocol, the FULL OUTER merge of the two per-protocol CTEs is
+    a conditional aggregate (``max``/``avg`` over that protocol's rows,
+    missing → 0), combined by the zero-aware averaging of `:562-571`.
+    The threshold count is COUNT(DISTINCT block WHERE hf < 1.2) per
+    protocol, summed — i.e. distinct (protocol, block) pairs. The
+    reference's avg_health_factor (its COUNT(*)=1 branch) feeds no
+    output column and is not computed."""
+    hf = _account_health_factor(positions)
+    keys = pairs.select(
         "sender_address",
-        "block_number_hf",
-        "health_factor",
-        "weighted_risk_factor",
-        "misc_available_borrows_eth",
-        "misc_total_collateral_eth",
-    ]
-    u = leg1.select(*cols).union(leg2.select(*cols)).distinct()
-    return u.groupBy("sender_address").agg(
-        F.when(F.count(F.lit(1)) == 1, F.avg("health_factor"))
-        .otherwise(
-            F.avg(F.when(F.col("health_factor") != HF_CAP, F.col("health_factor")))
-        )
-        .alias("avg_health_factor"),
-        F.avg(F.lit(1.0) / F.col("health_factor")).alias("historical_average_risk_factor"),
-        F.avg("weighted_risk_factor").alias("historical_weighted_avg_risk_factor"),
-        F.min("health_factor").alias("historical_min_health_factor"),
-        (F.lit(1.0) / F.min("health_factor")).alias("historical_max_risk_factor"),
-        F.avg("misc_available_borrows_eth").alias("misc_avg_available_borrows_eth"),
-        F.avg("misc_total_collateral_eth").alias("misc_avg_total_collateral_eth"),
+        F.explode(F.array("account_address", "sender_address")).alias("account"),
+    )
+    legs = (
+        keys.join(hf, "account")
+        .drop("account")
+        .repartition("sender_address")
+        .distinct()
     )
 
+    h = F.col("health_factor")
 
-def view_historical_health_and_risk(
-    borrow_events: DataFrame, positions: DataFrame
-) -> DataFrame:
-    """`view_defi_historical_health_and_risk_factor.sql` in full: per-
-    protocol aggregates FULL OUTER merged, zero-aware averaging."""
-    hf = _account_health_factor(positions)
-    aave = _historical_per_protocol(borrow_events, hf, AAVE)
-    comp = _historical_per_protocol(borrow_events, hf, COMPOUND)
-
-    a = aave.select([F.col(c).alias(f"a_{c}") for c in aave.columns])
-    c = comp.select([F.col(c).alias(f"c_{c}") for c in comp.columns])
-    m = c.join(a, c.c_sender_address == a.a_sender_address, "full_outer")
-
-    def pair(col: str) -> tuple[F.Column, F.Column]:
-        return (
-            F.coalesce(F.col(f"c_{col}"), F.lit(0)),
-            F.coalesce(F.col(f"a_{col}"), F.lit(0)),
-        )
-
-    c_w, a_w = pair("historical_weighted_avg_risk_factor")
-    c_r, a_r = pair("historical_average_risk_factor")
-    c_mx, a_mx = pair("historical_max_risk_factor")
-    c_col, a_col = pair("misc_avg_total_collateral_eth")
-    c_av, a_av = pair("misc_avg_available_borrows_eth")
-
-    def zero_aware_avg(cc: F.Column, aa: F.Column) -> F.Column:
+    def zero_aware_avg(col: Column) -> Column:
         """`:562-571`: one-sided zero → take the other side, else mean."""
-        return (
-            F.when((aa == 0) & (cc != 0), cc)
-            .when((cc == 0) & (aa != 0), aa)
-            .otherwise((cc + aa) / 2)
-        )
+        x, y = _per_protocol(F.avg, col)
+        return F.when((y == 0) & (x != 0), x).when((x == 0) & (y != 0), y).otherwise((x + y) / 2)
 
-    return m.select(
-        F.coalesce(
-            F.col("c_sender_address"), F.col("a_sender_address")
-        ).alias("sender_address"),
-        F.coalesce(F.greatest(c_mx, a_mx), F.lit(0)).alias("historical_max_risk_factor"),
-        F.coalesce(c_col + a_col, F.lit(0)).alias("misc_avg_total_collateral_eth"),
-        F.coalesce(c_av + a_av, F.lit(0)).alias("misc_avg_available_borrows_eth"),
-        zero_aware_avg(c_w, a_w).alias("historical_weighted_avg_risk_factor"),
-        zero_aware_avg(c_r, a_r).alias("historical_average_risk_factor"),
-    ).distinct()
-
-
-def view_historical_count_above_threshold(
-    borrow_events: DataFrame, positions: DataFrame
-) -> DataFrame:
-    """`view_defi_historical_count_above_threshold.sql`: per protocol,
-    COUNT(DISTINCT blocks where health_factor < 1.2) per borrow sender
-    — the OR-predicate join (J9) rewritten as two equi-join legs
-    unioned (the reference's own pattern elsewhere), then FULL OUTER
-    merge. NOTE the reference filters `where protocol = ...` which in
-    a LEFT JOIN context acts as an inner filter on matched rows — we
-    keep that exact semantics by filtering hf first and using INNER
-    legs, then re-attaching unmatched senders with count 0 via the
-    spine of borrow senders."""
-    hf = _account_health_factor(positions)
-
-    def per_protocol(protocol: str) -> DataFrame:
-        hfp = hf.filter(
-            (F.col("protocol") == protocol) & (F.col("health_factor") < 1.2)
-        ).select("account", F.col("block_number").alias("hf_block"))
-        b = borrow_events.select("sender_address", "account_address")
-        leg1 = b.join(hfp, b.account_address == hfp.account).select(
-            "sender_address", "hf_block"
-        )
-        leg2 = b.join(hfp, b.sender_address == hfp.account).select(
-            "sender_address", "hf_block"
-        )
-        matched = leg1.union(leg2)
-        counts = matched.groupBy("sender_address").agg(
-            F.countDistinct("hf_block").alias("historical_count_above_threshold")
-        )
-        all_senders = borrow_events.select("sender_address").distinct()
-        return all_senders.join(counts, "sender_address", "left").select(
-            "sender_address",
-            F.coalesce("historical_count_above_threshold", F.lit(0)).alias(
-                "historical_count_above_threshold"
-            ),
-        )
-
-    aave = per_protocol(AAVE).withColumnRenamed(
-        "historical_count_above_threshold", "cnt_aave"
+    return legs.groupBy("sender_address").agg(
+        F.greatest(*_per_protocol(lambda c: F.lit(1.0) / F.min(c), h)).alias("max_risk_factor"),
+        _total(_per_protocol(F.avg, F.col("misc_total_collateral_eth")))
+        .alias("total_collateral_avg_eth"),
+        _total(_per_protocol(F.avg, F.col("misc_available_borrows_eth")))
+        .alias("total_available_borrows_avg_eth"),
+        zero_aware_avg(F.col("weighted_risk_factor")).alias("avg_weighted_risk_factor"),
+        zero_aware_avg(F.lit(1.0) / h).alias("avg_risk_factor"),
+        F.countDistinct(
+            F.when(F.col("protocol").isin(*PROTOCOLS) & (h < 1.2),
+                   F.struct("protocol", "block_number"))
+        ).alias("risk_factor_above_threshold_daily_count"),
     )
-    comp = per_protocol(COMPOUND).withColumnRenamed(
-        "historical_count_above_threshold", "cnt_compound"
-    )
-    m = comp.withColumnRenamed("sender_address", "c_sender").join(
-        aave.withColumnRenamed("sender_address", "a_sender"),
-        F.col("c_sender") == F.col("a_sender"),
-        "full_outer",
-    )
-    return m.select(
-        F.coalesce(F.col("c_sender"), F.col("a_sender")).alias("sender_address"),
-        F.coalesce(
-            F.coalesce(F.col("cnt_compound"), F.lit(0))
-            + F.coalesce(F.col("cnt_aave"), F.lit(0)),
-            F.lit(0),
-        ).alias("historical_count_above_threshold"),
-    ).distinct()
 
 
 def view_current_health_factor(
     market_data: DataFrame, current_positions: DataFrame
 ) -> DataFrame:
-    """`view_defi_current_health_factor_features.sql` in full: latest
-    market snapshot (J10 → window rewrite via max-block inner join kept
-    as-is for parity), per-protocol health factors, FULL OUTER merge,
-    LEAST/clamp ladder, final re-group."""
-    last = market_data.groupBy("name").agg(F.max("block_number").alias("max_bn"))
-    cur = market_data.join(
-        F.broadcast(last),
-        (market_data.name == last.name) & (market_data.block_number >= last.max_bn),
-    ).select(
-        market_data.id.alias("cmd_id"),
-        market_data.input_token_price_usd,
-        market_data.decimals,
-        (market_data.liquidation_threshold * 0.01).alias("liquidation_threshold"),
-        market_data.protocol.alias("cmd_protocol"),
-    )
-    numeraire = F.broadcast(
-        market_data.join(
-            F.broadcast(last.select(F.col("name").alias("n2"), "max_bn")),
-            (market_data.name == F.col("n2"))
-            & (market_data.block_number >= F.col("max_bn")),
-        )
-        .filter(F.col("name").isin("Aave interest bearing WETH", "Compound Ether"))
-        .select(
-            F.col("input_token_price_usd").alias("protocol_eth_price"),
-            F.col("protocol").alias("num_protocol"),
-        )
-    )
+    """`view_defi_current_health_factor_features.sql`, the columns
+    `defi_features_calculation.sql` reads: per account, summed collateral
+    and available borrows, and 1 / LEAST(per-protocol health factor).
 
-    pos = (
-        current_positions.join(cur, cur.cmd_id == current_positions.market_id, "inner")
-        .join(numeraire, F.col("num_protocol") == current_positions.protocol, "inner")
+    The latest market snapshot (J10: inner join on the max block per
+    market name, kept for parity) is built once and broadcast, both as
+    the market prices and as the per-protocol ETH numeraire. The two
+    per-protocol CTEs and their FULL OUTER merge are one aggregate per
+    account with conditional sums per (protocol, side). An account
+    appears only if it has lending rows in some protocol (each CTE is
+    lending LEFT JOIN borrow) — an explicit count. Per protocol no
+    further gate is needed: without lending rows the numerator and
+    collateral sums are NULL, which yield exactly the merge's missing-
+    side defaults (HF_CAP, 0). The final GROUP BY of the reference has
+    one row per account and is dropped."""
+    last = market_data.groupBy("name").agg(F.max("block_number").alias("max_bn"))
+    latest = market_data.join(F.broadcast(last), "name").filter(
+        F.col("block_number") >= F.col("max_bn")
     )
-    balance_in_usd = (F.col("balance") * F.col("input_token_price_usd")) / F.pow(
+    markets = latest.select(
+        F.col("id").alias("market_id"),
+        "input_token_price_usd",
+        "decimals",
+        (F.col("liquidation_threshold") * 0.01).alias("liquidation_threshold"),
+    )
+    numeraire = latest.filter(F.col("name").isin(*NUMERAIRE_MARKETS)).select(
+        "protocol", F.col("input_token_price_usd").alias("protocol_eth_price")
+    )
+    pos = current_positions.join(F.broadcast(markets), "market_id").join(
+        F.broadcast(numeraire), "protocol"
+    )
+    usd = (F.col("balance") * F.col("input_token_price_usd")) / F.pow(
         F.lit(10.0), F.col("decimals")
     )
-    balance_in_eth = (F.lit(1.0) / F.col("protocol_eth_price")) * balance_in_usd
-    pos = pos.select(
-        "account",
-        "side",
-        "is_collateral",
-        F.col("protocol"),
-        "liquidation_threshold",
-        balance_in_usd.alias("balance_in_usd"),
-        balance_in_eth.alias("balance_in_eth"),
-    )
+    eth = (F.lit(1.0) / F.col("protocol_eth_price")) * usd
+    lt = F.col("liquidation_threshold")
 
-    def per_protocol(protocol: str) -> DataFrame:
-        borrow = (
-            pos.filter((F.col("protocol") == protocol) & (F.col("side") == "BORROWER"))
-            .groupBy("account")
-            .agg(
-                F.sum("balance_in_usd").alias("total_borrow_balance"),
-                F.sum("balance_in_eth").alias("total_borrow_balance_eth"),
-            )
-        )
-        lending = (
-            pos.filter(
-                (F.col("protocol") == protocol)
-                & (F.col("side") == "LENDER")
-                & (F.col("is_collateral") == True)  # noqa: E712
-            )
-            .groupBy("account")
-            .agg(
-                F.sum(F.col("balance_in_usd") * F.col("liquidation_threshold")).alias(
-                    "health_factor_numerator"
-                ),
-                F.sum(F.col("balance_in_eth") * F.col("liquidation_threshold")).alias(
-                    "misc_available_borrows_eth_collateral"
-                ),
-                F.sum("balance_in_eth").alias("misc_total_collateral_eth"),
-            )
-        )
-        b = borrow.select(
-            F.col("account").alias("b_account"),
-            "total_borrow_balance",
-            "total_borrow_balance_eth",
-        )
-        j = lending.join(b, F.col("b_account") == F.col("account"), "left")
-        hf = _health_factor_case(
-            F.col("health_factor_numerator"), F.col("total_borrow_balance")
-        )
-        return j.select(
-            "account",
-            "health_factor_numerator",
-            "misc_total_collateral_eth",
-            "total_borrow_balance_eth",
-            hf.alias("health_factor"),
-            F.when(
-                F.col("total_borrow_balance_eth").isNull(),
-                F.col("misc_available_borrows_eth_collateral"),
-            )
-            .otherwise(
-                F.col("misc_available_borrows_eth_collateral")
-                - F.col("total_borrow_balance_eth")
-            )
-            .alias("misc_available_borrows_eth"),
-            F.when(F.col("total_borrow_balance_eth").isNull(), F.lit(0.0))
-            .otherwise(F.col("total_borrow_balance_eth") * (F.lit(1.0) / hf))
-            .alias("weighted_risk_factor"),
+    lend, borrow = _lender(), _borrower()
+
+    def side_sum(p: str, side: Column, x: Column) -> Column:
+        return F.sum(F.when((F.col("protocol") == p) & side, x))
+
+    per_protocol = []
+    for p in PROTOCOLS:
+        per_protocol += [
+            side_sum(p, lend, usd * lt).alias(f"num_{p}"),
+            side_sum(p, lend, eth * lt).alias(f"avail_{p}"),
+            side_sum(p, lend, eth).alias(f"coll_{p}"),
+            side_sum(p, borrow, usd).alias(f"borrow_{p}"),
+            side_sum(p, borrow, eth).alias(f"borrow_eth_{p}"),
+        ]
+    acc = pos.groupBy("account").agg(
+        F.count(F.when(F.col("protocol").isin(*PROTOCOLS) & lend, 1)).alias("lending_rows"),
+        *per_protocol,
+    ).filter(F.col("lending_rows") > 0)
+
+    def available(p: str) -> Column:
+        avail, borrow_eth = F.col(f"avail_{p}"), F.col(f"borrow_eth_{p}")
+        return F.coalesce(
+            F.when(borrow_eth.isNull(), avail).otherwise(avail - borrow_eth), F.lit(0)
         )
 
-    a = per_protocol(AAVE)
-    c = per_protocol(COMPOUND)
-    a = a.select([F.col(x).alias(f"a_{x}") for x in a.columns])
-    c = c.select([F.col(x).alias(f"c_{x}") for x in c.columns])
-    merged = c.join(a, F.col("c_account") == F.col("a_account"), "full_outer").select(
-        F.coalesce(F.col("c_account"), F.col("a_account")).alias("account"),
-        F.coalesce(F.col("a_health_factor"), F.lit(HF_CAP)).alias("health_factor_aave"),
-        F.col("a_weighted_risk_factor").alias("weighted_risk_factor_aave"),
-        F.coalesce(F.col("c_health_factor"), F.lit(HF_CAP)).alias(
-            "health_factor_compound"
-        ),
-        F.coalesce(F.col("c_weighted_risk_factor"), F.lit(0)).alias(
-            "weighted_risk_factor_compound"
-        ),
-        F.coalesce(F.col("a_misc_total_collateral_eth"), F.lit(0)).alias(
-            "misc_total_collateral_eth_aave"
-        ),
-        F.coalesce(F.col("c_misc_total_collateral_eth"), F.lit(0)).alias(
-            "misc_total_collateral_eth_compound"
-        ),
-        F.coalesce(F.col("a_misc_available_borrows_eth"), F.lit(0)).alias(
-            "misc_available_borrows_eth_aave"
-        ),
-        F.coalesce(F.col("c_misc_available_borrows_eth"), F.lit(0)).alias(
-            "misc_available_borrows_eth_compound"
-        ),
-        F.coalesce(F.col("a_total_borrow_balance_eth"), F.lit(0)).alias(
-            "total_borrow_balance_eth_aave"
-        ),
-        F.coalesce(F.col("c_total_borrow_balance_eth"), F.lit(0)).alias(
-            "total_borrow_balance_eth_compound"
-        ),
+    least_hf = F.least(*(
+        F.coalesce(_health_factor_case(F.col(f"num_{p}"), F.col(f"borrow_{p}")), F.lit(HF_CAP))
+        for p in PROTOCOLS
+    ))
+    return acc.select(
+        "account",
+        _total([F.coalesce(F.col(f"coll_{p}"), F.lit(0)) for p in PROTOCOLS])
+        .alias("total_collateral_eth"),
+        _total([available(p) for p in PROTOCOLS]).alias("total_available_borrows_eth"),
+        (F.lit(1.0) / least_hf).alias("risk_factor"),
     )
 
-    least_hf = F.least(F.col("health_factor_compound"), F.col("health_factor_aave"))
-    capped_hf = F.when(least_hf > HF_CAP, F.lit(HF_CAP)).otherwise(least_hf)
-    transformed = merged.select(
-        "account",
-        capped_hf.alias("current_health_factor"),
-        (
-            F.col("misc_total_collateral_eth_compound")
-            + F.col("misc_total_collateral_eth_aave")
-        ).alias("total_collateral_eth"),
-        (
-            F.col("misc_available_borrows_eth_compound")
-            + F.col("misc_available_borrows_eth_aave")
-        ).alias("available_borrows_eth"),
-        (
-            F.col("weighted_risk_factor_compound") + F.col("weighted_risk_factor_aave")
-        ).alias("weighted_risk_factor"),
-        (
-            F.col("total_borrow_balance_eth_compound")
-            + F.col("total_borrow_balance_eth_aave")
-        ).alias("total_borrow_balance_eth"),
-        (F.lit(1.0) / least_hf).alias("current_risk_factor"),
-        F.when(F.lit(1.0) / least_hf > HF_CAP, F.lit(HF_CAP))
-        .otherwise(F.lit(1.0) / capped_hf)
-        .alias("borrow_current_risk_factor_capped"),
+
+def view_borrow_account_features(
+    pairs: DataFrame, liquidation_f: DataFrame, current_hf_f: DataFrame
+) -> DataFrame:
+    """`defi_features_calculation.sql:69-138`: the account-keyed
+    liquidation and current-health fragments reach the borrowing sender
+    through the borrow pairs — both LEFT JOINs on the account, one
+    GROUP BY sender. An account never liquidated enters the MIN as 0
+    (the reference's COALESCE-0), so a sender with one such account gets
+    the never-liquidated sentinel."""
+    j = pairs.join(liquidation_f, "account_address", "left").join(
+        current_hf_f, F.col("account_address") == F.col("account"), "left"
     )
-    return transformed.groupBy(
-        "account", "current_health_factor", "current_risk_factor",
-        "borrow_current_risk_factor_capped",
-    ).agg(
-        F.sum("total_collateral_eth").alias("misc_total_collateral_eth"),
-        F.sum("available_borrows_eth").alias("misc_available_borrows_eth"),
-        F.sum("weighted_risk_factor").alias("weighted_risk_factor"),
-        F.sum("total_borrow_balance_eth").alias("total_borrow_balance_eth"),
-        F.coalesce(
-            F.sum("weighted_risk_factor")
-            / F.nullif(F.sum("total_borrow_balance_eth"), F.lit(0)),
-            F.lit(0),
-        ).alias("borrow_weighted_avg_risk_factor"),
-    ).select(
-        "account",
-        "current_health_factor",
-        "misc_total_collateral_eth",
-        "misc_available_borrows_eth",
-        "weighted_risk_factor",
-        "total_borrow_balance_eth",
-        "borrow_weighted_avg_risk_factor",
-        "current_risk_factor",
-        "borrow_current_risk_factor_capped",
+    return j.groupBy("sender_address").agg(
+        F.sum("liquidation_total_liquidations").alias("liquidation_count"),
+        F.sum("liquidation_total_amount_eth").alias("liquidation_amount_sum_eth"),
+        F.min(F.coalesce(F.col("liquidation_time_since_last_liquidated"), F.lit(0)))
+        .alias("time_since_last_liquidated"),
+        F.sum("total_collateral_eth").alias("total_collateral_eth"),
+        F.sum("total_available_borrows_eth").alias("total_available_borrows_eth"),
+        F.max("risk_factor").alias("risk_factor"),
     )
 
 
@@ -596,167 +363,82 @@ def view_current_health_factor(
 
 
 def assemble_defi_features(
-    spine: DataFrame,
-    repay_f: DataFrame,
-    borrow_f: DataFrame,
-    credit_mix_f: DataFrame,
-    redeems_f: DataFrame,
-    lending_f: DataFrame,
-    historical_f: DataFrame,
-    threshold_f: DataFrame,
-    liquidation_f: DataFrame,
-    current_hf_f: DataFrame,
-    borrow_events: DataFrame,
+    events_by_type: dict[str, DataFrame], *fragments: DataFrame
 ) -> DataFrame:
-    """`defi_features_calculation.sql:1-189`: left-join chain onto the
-    wallet spine with COALESCE-0, liquidation/current-health fan-in via
-    borrow (sender, account) pairs, clamped diffs, 27-column contract."""
+    """`defi_features_calculation.sql:1-189`: the wallet spine
+    (`view_distinct_defi_events_addresses.sql:2-33`: sender and account
+    of all 5 event tables) LEFT JOIN every sender-keyed fragment with
+    COALESCE-0, clamped diffs, sentinels, 27-column contract.
 
-    def merge(left: DataFrame, right: DataFrame, rkey: str, cols: dict[str, int]) -> DataFrame:
-        r = right.select(
-            F.col(rkey).alias("__k"), *[F.col(c) for c in cols]
+    The spine and the fragments are unioned and grouped by wallet once:
+    the GROUP BY is the spine's DISTINCT, and each fragment holds at
+    most one row per sender, so ``max`` picks its value. Fragment rows
+    with a NULL sender are dropped, as the left join never matches
+    them."""
+    spine = [
+        df.select(
+            F.explode(F.array("sender_address", "account_address")).alias("wallet_address")
         )
-        out = left.join(r, left.wallet_address == F.col("__k"), "left").drop("__k")
-        for c, default in cols.items():
-            out = out.withColumn(c, F.coalesce(F.col(c), F.lit(default)))
-        return out
-
-    t = spine.select("wallet_address").distinct()
-    t = merge(t, repay_f, "sender_address", {
-        "borrow_total_eth_repaid_sum": 0, "borrow_total_eth_repaid_avg": 0,
-        "borrow_total_repays": 0,
-    })
-    t = merge(t, borrow_f, "sender_address", {
-        "loan_amount_eth_sum": 0, "loan_amount_eth_avg": 0, "borrow_total_borrows": 0,
-    })
-    t = merge(t, credit_mix_f, "sender_address", {
-        "credit_mix_count_borrow_protocol": 0,
-        "credit_mix_count_lending_protocol": 0,
-        "credit_mix_count_protocol": 0,
-    })
-    t = merge(t, redeems_f, "sender_address", {"lending_sum_redeems": 0})
-    t = merge(t, lending_f, "sender_address", {
-        "lending_total_deposits": 0, "lending_time_since_first_lending": 0,
-        "total_deposits_in_eth": 0,
-    })
-    t = merge(t, historical_f, "sender_address", {
-        "historical_max_risk_factor": 0, "misc_avg_total_collateral_eth": 0,
-        "misc_avg_available_borrows_eth": 0, "historical_weighted_avg_risk_factor": 0,
-        "historical_average_risk_factor": 0,
-    })
-    t = merge(t, threshold_f, "sender_address", {"historical_count_above_threshold": 0})
-
-    # borrow (sender, account) pair fan-in (`defi_features_calculation.sql:69-138`)
-    pairs = borrow_events.select("sender_address", "account_address").distinct()
-    liq = (
-        pairs.join(
-            liquidation_f,
-            pairs.account_address == liquidation_f.account_address,
-            "left",
+        for df in events_by_type.values()
+    ]
+    keyed = [
+        f.filter(F.col("sender_address").isNotNull()).withColumnRenamed(
+            "sender_address", "wallet_address"
         )
-        .select(
-            pairs.sender_address,
-            F.coalesce("liquidation_total_liquidations", F.lit(0)).alias("ltl"),
-            F.coalesce("liquidation_total_amount_eth", F.lit(0)).alias("lta"),
-            F.coalesce("liquidation_time_since_last_liquidated", F.lit(0)).alias("lts"),
-        )
-        .groupBy("sender_address")
-        .agg(
-            F.coalesce(F.sum("ltl"), F.lit(0)).alias("liquidation_total_liquidations"),
-            F.coalesce(F.sum("lta"), F.lit(0)).alias("liquidation_total_amount_eth"),
-            F.coalesce(F.min("lts"), F.lit(0)).alias(
-                "liquidation_time_since_last_liquidated"
-            ),
-        )
+        for f in fragments
+    ]
+    union = spine[0]
+    for part in spine[1:] + keyed:
+        union = union.unionByName(part, allowMissingColumns=True)
+    values = [c for f in keyed for c in f.columns if c != "wallet_address"]
+    t = union.groupBy("wallet_address").agg(
+        *(F.coalesce(F.max(c), F.lit(0)).alias(c) for c in values)
     )
-    t = merge(t, liq, "sender_address", {
-        "liquidation_total_liquidations": 0, "liquidation_total_amount_eth": 0,
-        "liquidation_time_since_last_liquidated": 0,
-    })
 
-    chf = (
-        pairs.join(
-            current_hf_f, pairs.account_address == current_hf_f.account, "left"
-        )
-        .select(
-            pairs.sender_address,
-            "misc_total_collateral_eth",
-            "misc_available_borrows_eth",
-            "current_risk_factor",
-            "borrow_weighted_avg_risk_factor",
-            "borrow_current_risk_factor_capped",
-        )
-        .groupBy("sender_address")
-        .agg(
-            F.coalesce(F.sum("misc_total_collateral_eth"), F.lit(0)).alias(
-                "misc_total_collateral_eth"
-            ),
-            F.coalesce(F.sum("misc_available_borrows_eth"), F.lit(0)).alias(
-                "misc_available_borrows_eth"
-            ),
-            F.coalesce(F.max("current_risk_factor"), F.lit(0)).alias(
-                "current_risk_factor"
-            ),
-            F.coalesce(F.max("borrow_weighted_avg_risk_factor"), F.lit(0)).alias(
-                "borrow_weighted_avg_risk_factor"
-            ),
-            F.coalesce(F.max("borrow_current_risk_factor_capped"), F.lit(0)).alias(
-                "borrow_current_risk_factor_capped"
-            ),
-        )
-    )
-    t = merge(t, chf, "sender_address", {
-        "misc_total_collateral_eth": 0, "misc_available_borrows_eth": 0,
-        "current_risk_factor": 0, "borrow_weighted_avg_risk_factor": 0,
-        "borrow_current_risk_factor_capped": 0,
-    })
+    def clamp_diff(a: str, b: str) -> Column:
+        """`:140-152`."""
+        diff = F.col(a) - F.col(b)
+        return F.when(diff < 0, F.lit(0)).otherwise(diff)
 
-    # clamped diffs (`:140-152`)
-    borrow_repay_diff = F.col("loan_amount_eth_sum") - F.col("borrow_total_eth_repaid_sum")
-    withdraw_deposit_diff = F.col("lending_sum_redeems") - F.col("total_deposits_in_eth")
-    t = t.withColumn(
-        "borrow_total_current_loan_eth",
-        F.when(borrow_repay_diff < 0, F.lit(0)).otherwise(borrow_repay_diff),
-    ).withColumn(
-        "withdraw_deposit_diff_if_positive_eth",
-        F.when(withdraw_deposit_diff < 0, F.lit(0)).otherwise(withdraw_deposit_diff),
-    )
+    def sentinel(c: str) -> Column:
+        return (
+            F.when(F.col(c) == 0, F.lit(NEVER_SENTINEL))
+            .otherwise(F.col(c))
+            .cast("bigint")
+            .alias(c)
+        )
 
     # 27-column output contract (`:153-189`)
     return t.select(
         "wallet_address",
-        F.col("credit_mix_count_borrow_protocol").alias("unique_borrow_protocol_count"),
-        F.col("credit_mix_count_lending_protocol").alias("unique_lending_protocol_count"),
-        F.col("misc_total_collateral_eth").alias("total_collateral_eth"),
-        F.col("current_risk_factor").alias("risk_factor"),
-        F.col("misc_available_borrows_eth").alias("total_available_borrows_eth"),
-        F.col("lending_total_deposits").alias("deposit_count"),
-        F.when(F.col("lending_time_since_first_lending") == 0, F.lit(999999999))
-        .otherwise(F.col("lending_time_since_first_lending"))
-        .cast("bigint")
-        .alias("time_since_first_deposit"),
-        F.col("total_deposits_in_eth").alias("deposit_amount_sum_eth"),
-        F.col("liquidation_total_liquidations").alias("liquidation_count"),
-        F.col("liquidation_total_amount_eth").alias("liquidation_amount_sum_eth"),
-        F.when(F.col("liquidation_time_since_last_liquidated") == 0, F.lit(999999999))
-        .otherwise(F.col("liquidation_time_since_last_liquidated"))
-        .cast("bigint")
-        .alias("time_since_last_liquidated"),
-        F.col("lending_sum_redeems").alias("withdraw_amount_sum_eth"),
-        F.col("loan_amount_eth_sum").alias("borrow_amount_sum_eth"),
-        F.col("loan_amount_eth_avg").alias("borrow_amount_avg_eth"),
-        F.col("borrow_total_borrows").alias("borrow_count"),
-        F.col("borrow_total_eth_repaid_sum").alias("repay_amount_sum_eth"),
-        F.col("borrow_total_eth_repaid_avg").alias("repay_amount_avg_eth"),
-        F.col("borrow_total_repays").alias("repay_count"),
-        F.col("borrow_total_current_loan_eth").alias("borrow_repay_diff_eth"),
-        "withdraw_deposit_diff_if_positive_eth",
-        F.col("misc_avg_available_borrows_eth").alias("total_available_borrows_avg_eth"),
-        F.col("historical_weighted_avg_risk_factor").alias("avg_weighted_risk_factor"),
-        F.col("historical_average_risk_factor").alias("avg_risk_factor"),
-        F.col("historical_max_risk_factor").alias("max_risk_factor"),
-        F.col("historical_count_above_threshold").alias(
-            "risk_factor_above_threshold_daily_count"
+        "unique_borrow_protocol_count",
+        "unique_lending_protocol_count",
+        "total_collateral_eth",
+        "risk_factor",
+        "total_available_borrows_eth",
+        "deposit_count",
+        sentinel("time_since_first_deposit"),
+        "deposit_amount_sum_eth",
+        "liquidation_count",
+        "liquidation_amount_sum_eth",
+        sentinel("time_since_last_liquidated"),
+        "withdraw_amount_sum_eth",
+        "borrow_amount_sum_eth",
+        "borrow_amount_avg_eth",
+        "borrow_count",
+        "repay_amount_sum_eth",
+        "repay_amount_avg_eth",
+        "repay_count",
+        clamp_diff("borrow_amount_sum_eth", "repay_amount_sum_eth").alias(
+            "borrow_repay_diff_eth"
         ),
-        F.col("misc_avg_total_collateral_eth").alias("total_collateral_avg_eth"),
+        clamp_diff("withdraw_amount_sum_eth", "deposit_amount_sum_eth").alias(
+            "withdraw_deposit_diff_if_positive_eth"
+        ),
+        "total_available_borrows_avg_eth",
+        "avg_weighted_risk_factor",
+        "avg_risk_factor",
+        "max_risk_factor",
+        "risk_factor_above_threshold_daily_count",
+        "total_collateral_avg_eth",
     )

@@ -1,10 +1,11 @@
 """Pipeline runner — the Airflow DAG collapsed to function-call order
 (`/root/reference/devops/airflow/dags/dag_defi_features.py:211-222`):
 
-per-event raw→stage→analytics (fan-out), market-data + positions
-branches, the merge join point, features assembly, the DQ gate, and
-the serving upsert. Incremental layers use the high-watermark append;
-re-running with no new raw data appends nothing (idempotent).
+raw→stage (5 event tables + the 2 Graph snapshots, one fan-out),
+stage→analytics (5 event enrichments + the market×positions merge + the
+current-positions refresh, one fan-out), features assembly, the DQ
+gate, and the serving upsert. Incremental layers use the high-watermark
+append; re-running with no new raw data appends nothing (idempotent).
 """
 
 from __future__ import annotations
@@ -21,11 +22,10 @@ from .analytics import (
 from .config import EVENTS
 from .features import (
     assemble_defi_features,
+    borrow_pairs,
+    view_borrow_account_features,
     view_borrow_features,
-    view_credit_mix,
     view_current_health_factor,
-    view_distinct_addresses,
-    view_historical_count_above_threshold,
     view_historical_health_and_risk,
     view_lending_sum_redeems,
     view_lending_time_and_count,
@@ -74,12 +74,22 @@ def run_pipeline(
         if metrics is not None:
             metrics.setdefault(layer, {})[name] = appended
 
-    # --- stage layer: per-event incremental normalization -------------------
+    # --- stage layer: per-table incremental normalization --------------------
     # The reference DAG fans the 5 events out in parallel ECS tasks
     # (`dag_defi_features.py:60-102`); here the fan-out is concurrent
     # job submission — Spark's scheduler interleaves the jobs across
-    # executor slots (thread-safe; FIFO pools share the cluster).
+    # executor slots (thread-safe; FIFO pools share the cluster). The
+    # two Graph snapshots are independent of the events and join the
+    # same fan-out.
     from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
+
+    def _fan_out(*calls) -> list:
+        """Run the zero-argument calls concurrently; re-raise the first
+        failure."""
+        with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+            futures = [pool.submit(c) for c in calls]
+            return [f.result() for f in futures]
 
     def _stage_one(name: str) -> None:
         target = cat.path("stage", f"transpose_{name}_events")
@@ -113,9 +123,6 @@ def run_pipeline(
             ),
         )
 
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        list(pool.map(_stage_one, EVENTS))
-
     def _stage_snapshot(raw_name: str, transform) -> None:
         target = cat.path("stage", raw_name)
         if streaming:
@@ -138,8 +145,13 @@ def run_pipeline(
             watermark_col="block_number",
         )
 
-    _stage_snapshot("the_graph_historical_market_data", stage_market_data)
-    _stage_snapshot("the_graph_historical_account_positions", stage_account_positions)
+    _fan_out(
+        *(partial(_stage_one, name) for name in EVENTS),
+        partial(_stage_snapshot, "the_graph_historical_market_data", stage_market_data),
+        partial(
+            _stage_snapshot, "the_graph_historical_account_positions", stage_account_positions
+        ),
+    )
 
     # --- analytics layer -----------------------------------------------------
     tokens_metadata = cat.read("stage", "ethereum_tokens_metadata")
@@ -147,8 +159,8 @@ def run_pipeline(
     token_prices = cat.read("analytics", "features_daily_token_prices")
 
     # same fan-out as the stage layer: the 5 per-event enrich+insert
-    # jobs are independent (separate target tables), so they submit
-    # concurrently and the scheduler interleaves them across slots
+    # jobs, the market×positions merge and the current-positions refresh
+    # write separate tables, so they submit concurrently
     def _analytics_one(item) -> tuple[str, DataFrame]:
         name, cfg = item
         staged = cat.read("stage", f"transpose_{name}_events")
@@ -166,52 +178,55 @@ def run_pipeline(
         )
         return name, spark.read.parquet(path)
 
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        analytics_events = dict(pool.map(_analytics_one, EVENTS.items()))
-
-    merged = merge_market_positions(
-        cat.read("stage", "the_graph_historical_market_data"),
-        cat.read("stage", "the_graph_historical_account_positions"),
-    )
     merged_path = cat.path(
         "analytics", "the_graph_historical_market_data_and_account_positions"
     )
-    _record(
-        "analytics_appended",
-        "market_data_and_account_positions",
-        incremental_insert(spark, merged, merged_path, watermark_col="block_number"),
-    )
-    positions = spark.read.parquet(merged_path)
 
-    current_pos = current_collateral_positions(
-        cat.read("raw", "the_graph_current_collateral_positions"),
-        cat.read("sandbox", "test_set_wallet_addresses"),
+    def _merge() -> None:
+        merged = merge_market_positions(
+            cat.read("stage", "the_graph_historical_market_data"),
+            cat.read("stage", "the_graph_historical_account_positions"),
+        )
+        _record(
+            "analytics_appended",
+            "market_data_and_account_positions",
+            incremental_insert(spark, merged, merged_path, watermark_col="block_number"),
+        )
+
+    def _refresh_current_positions() -> None:
+        current_collateral_positions(
+            cat.read("raw", "the_graph_current_collateral_positions"),
+            cat.read("sandbox", "test_set_wallet_addresses"),
+        ).write.mode("overwrite").parquet(
+            cat.path("analytics", "the_graph_current_collateral_positions")
+        )
+
+    *analytics, _, _ = _fan_out(
+        *(partial(_analytics_one, item) for item in EVENTS.items()),
+        _merge,
+        _refresh_current_positions,
     )
-    current_pos.write.mode("overwrite").parquet(
-        cat.path("analytics", "the_graph_current_collateral_positions")
-    )
+    analytics_events = dict(analytics)
+    positions = spark.read.parquet(merged_path)
     current_pos = cat.read("analytics", "the_graph_current_collateral_positions")
 
     # --- feature views --------------------------------------------------------
-    spine = view_distinct_addresses(analytics_events)
-    borrow_f = view_borrow_features(analytics_events["borrow"])
-    repay_f = view_repay_features(analytics_events["repay"])
-    redeems_f = view_lending_sum_redeems(analytics_events["withdraw"])
-    lending_f = view_lending_time_and_count(analytics_events["deposit"], now_epoch)
-    liquidation_f = view_liquidation_features(analytics_events["liquidation"], now_epoch)
-    credit_mix_f = view_credit_mix(analytics_events, spine)
-    historical_f = view_historical_health_and_risk(analytics_events["borrow"], positions)
-    threshold_f = view_historical_count_above_threshold(
-        analytics_events["borrow"], positions
-    )
-    current_hf_f = view_current_health_factor(
-        cat.read("stage", "the_graph_historical_market_data"), current_pos
-    )
-
+    borrow = analytics_events["borrow"]
+    pairs = borrow_pairs(borrow)
     features = assemble_defi_features(
-        spine, repay_f, borrow_f, credit_mix_f, redeems_f, lending_f,
-        historical_f, threshold_f, liquidation_f, current_hf_f,
-        analytics_events["borrow"],
+        analytics_events,
+        view_borrow_features(borrow),
+        view_repay_features(analytics_events["repay"]),
+        view_lending_sum_redeems(analytics_events["withdraw"]),
+        view_lending_time_and_count(analytics_events["deposit"], now_epoch),
+        view_historical_health_and_risk(pairs, positions),
+        view_borrow_account_features(
+            pairs,
+            view_liquidation_features(analytics_events["liquidation"], now_epoch),
+            view_current_health_factor(
+                cat.read("stage", "the_graph_historical_market_data"), current_pos
+            ),
+        ),
     )
     obs = None
     if metrics is not None:

@@ -62,6 +62,31 @@ def test_27_column_contract(features):
     assert features.columns == EXPECTED_COLUMNS
 
 
+def _initial_plan(df) -> str:
+    """The pre-AQE physical plan of ``df``, looking through the cache."""
+    plan = df._jdf.queryExecution().executedPlan()
+    while True:
+        kind = plan.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            plan = plan.initialPlan()
+        elif kind == "InMemoryTableScanExec":
+            plan = plan.relation().cachedPlan()
+        else:
+            return plan.toString()
+
+
+def test_features_plan_budget(features):
+    """The feature layer reads each source once per aggregate: the
+    initial physical plan of the 27-column frame holds at most 24
+    exchanges (shuffle + broadcast) and 18 parquet scans. The
+    view-per-CTE port it replaced planned 121 and 75."""
+    nodes = [line.lstrip(" :+-") for line in _initial_plan(features).splitlines()]
+    exchanges = sum(n.startswith(("Exchange ", "BroadcastExchange ")) for n in nodes)
+    scans = sum(n.startswith("FileScan parquet ") for n in nodes)
+    assert exchanges <= 24, exchanges
+    assert scans <= 18, scans
+
+
 def test_one_row_per_spine_wallet(features, spark, lake):
     n = features.count()
     assert n == features.select("wallet_address").distinct().count()
