@@ -91,39 +91,16 @@ def run_pipeline(
             futures = [pool.submit(c) for c in calls]
             return [f.result() for f in futures]
 
-    def _stage_one(name: str) -> None:
-        target = cat.path("stage", f"transpose_{name}_events")
-        if streaming:
-            from ...streaming.incremental import stream_append_incremental
-
-            raw_path = cat.path("raw", f"transpose_{name}_events")
-            stream_append_incremental(
-                spark,
-                raw_path,
-                spark.read.parquet(raw_path).schema,
-                lambda df, liq=(name == "liquidation"): stage_events(
-                    df, liquidation=liq
-                ),
-                target,
-                cat.path("_checkpoints", f"stage_transpose_{name}_events"),
-                partition_by=["year", "month"],
-            )
-            return
-        raw = cat.read("raw", f"transpose_{name}_events")
-        staged = stage_events(raw, liquidation=(name == "liquidation"))
-        _record(
-            "stage_appended",
-            name,
-            incremental_insert(
-                spark,
-                staged,
-                target,
-                watermark_col="epoch_timestamp",
-                partition_by=["year", "month"],
-            ),
-        )
-
-    def _stage_snapshot(raw_name: str, transform) -> None:
+    def _stage(
+        raw_name: str,
+        transform,
+        watermark_col: str,
+        partition_by: list[str] | None = None,
+        metric: str | None = None,
+    ) -> None:
+        """raw→stage for one table: a file-source stream in streaming
+        mode, else the high-watermark append (rows appended recorded
+        under ``metric``)."""
         target = cat.path("stage", raw_name)
         if streaming:
             from ...streaming.incremental import stream_append_incremental
@@ -136,20 +113,38 @@ def run_pipeline(
                 transform,
                 target,
                 cat.path("_checkpoints", f"stage_{raw_name}"),
+                partition_by=partition_by,
             )
             return
-        incremental_insert(
+        appended = incremental_insert(
             spark,
             transform(cat.read("raw", raw_name)),
             target,
-            watermark_col="block_number",
+            watermark_col=watermark_col,
+            partition_by=partition_by,
         )
+        if metric is not None:
+            _record("stage_appended", metric, appended)
 
     _fan_out(
-        *(partial(_stage_one, name) for name in EVENTS),
-        partial(_stage_snapshot, "the_graph_historical_market_data", stage_market_data),
+        *(
+            partial(
+                _stage,
+                f"transpose_{name}_events",
+                # looked up per call: the tracer may wrap stage_events
+                lambda df, liq=(name == "liquidation"): stage_events(
+                    df, liquidation=liq
+                ),
+                "epoch_timestamp",
+                ["year", "month"],
+                name,
+            )
+            for name in EVENTS
+        ),
+        partial(_stage, "the_graph_historical_market_data", stage_market_data, "block_number"),
         partial(
-            _stage_snapshot, "the_graph_historical_account_positions", stage_account_positions
+            _stage, "the_graph_historical_account_positions", stage_account_positions,
+            "block_number",
         ),
     )
 

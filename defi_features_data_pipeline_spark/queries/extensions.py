@@ -26,6 +26,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException, PySparkValueError
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 N_MINHASH = 8          # minhash permutations
@@ -472,6 +474,65 @@ def ivf_artifact_dir(sf_dir: str) -> str:
     return os.path.join(IVF_ARTIFACT_ROOT, _artifact_subdir(sf_dir))
 
 
+# How a freshness read of a committed artifact fails, each meaning
+# "rebuild": a garbage, truncated or zero-byte part file
+# (Py4JJavaError), a missing directory (AnalysisException), a meta row
+# without one of the fingerprint columns (PySparkValueError). A
+# zero-row meta is no error: ``first()`` returns None, checked as such.
+_STALE_READ = (Py4JJavaError, AnalysisException, PySparkValueError)
+
+
+def _commit_artifact(spark, path: str, df: DataFrame) -> None:
+    """Write ``df`` to ``<path>.__tmp__`` and swap it in, so readers
+    never see a partial artifact. coalesce(1): the artifacts are small
+    at these SFs (k centroids, ~1e3 edges, one corpus column); at real
+    scale drop the coalesce and keep them partitioned."""
+    from ..sources.fsutil import swap_dirs
+
+    tmp = path + ".__tmp__"
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    swap_dirs(spark, tmp, path)
+
+
+def _fingerprinted_artifact(spark, root, cache, sf_dir, name, fingerprint, build):
+    """Load-or-build of the artifact ``<root>/<name>`` whose corpus
+    identity sits in the one-row table ``<root>/meta``. ``root`` is the
+    corpus's artifact dir; ``cache`` memoizes the checked path and its
+    schema per ``sf_dir``, so a memo hit runs no Spark job (not even a
+    schema inference); ``fingerprint()`` returns the current identity as
+    {column: int} (stored as bigint columns, so parameters such as
+    DBSCAN's can join the corpus terms); ``build()`` returns the
+    artifact's DataFrame. Both thunks run only on a memo miss, and
+    ``build`` only when the meta is absent, unreadable, empty or
+    differs from the fingerprint.
+
+    Data first, meta last: a crash between the two leaves a stale meta,
+    which forces a rebuild, never serves a silently wrong artifact. An
+    error inside ``build``, or while writing its result, propagates
+    with the committed data and meta untouched."""
+    from ..sources.fsutil import has_committed_data
+
+    key = os.path.normpath(sf_dir)
+    if key not in cache:
+        path, meta = os.path.join(root, name), os.path.join(root, "meta")
+        cur = fingerprint()
+        fresh = False
+        if has_committed_data(spark, path) and has_committed_data(spark, meta):
+            try:
+                m = spark.read.parquet(meta).first()
+                fresh = m is not None and [m[c] for c in cur] == [*cur.values()]
+            except _STALE_READ:
+                pass
+        if not fresh:
+            _commit_artifact(spark, path, build())
+            _commit_artifact(spark, meta, spark.createDataFrame(
+                [tuple(cur.values())], ", ".join(f"{c} bigint" for c in cur)
+            ))
+        cache[key] = path, spark.read.parquet(path).schema
+    path, schema = cache[key]
+    return spark.read.schema(schema).parquet(path)
+
+
 # Oracle strings are built against the driver's sf0.01 gate; the local
 # gate rebinds them for other SFs via rebind_ivf_oracle().
 IVF_ORACLE_DIR = ivf_artifact_dir("/root/testdata/sf0.01")
@@ -654,8 +715,6 @@ def _write_ivf_artifacts(
     spark, adir: str, centroids, assign: DataFrame,
     content_checksum: int | None = None,
 ) -> None:
-    from ..sources.fsutil import swap_dirs
-
     cdf = spark.createDataFrame(
         [(int(cid), [float(x) for x in cv]) for cid, cv in centroids],
         "cid int, centroid array<double>",
@@ -671,24 +730,17 @@ def _write_ivf_artifacts(
         p = os.path.join(adir, derived)
         fs = jvm_path(p).getFileSystem(spark._jsc.hadoopConfiguration())
         fs.delete(jvm_path(p), True)
-    # coalesce(1): the artifacts are k rows / n_vec 2-col rows — at real
-    # scale the assignment table would stay partitioned (drop the
-    # coalesce); the swap keeps readers off partial writes.
     writes = [("centroids", cdf), ("assignments", assign)]
     if content_checksum is not None:
-        # one-row corpus CONTENT fingerprint (see _vector_content_checksum):
-        # written LAST so a crash mid-write forces a rebuild, never a
-        # content-unverified serve
+        # one-row corpus CONTENT fingerprint (see _vector_content_checksum),
+        # written last like every meta (see _fingerprinted_artifact)
         writes.append(
             ("meta_fp", spark.createDataFrame(
                 [(int(content_checksum),)], "c bigint"
             ))
         )
     for sub, df in writes:
-        final = os.path.join(adir, sub)
-        tmp = final + ".__tmp__"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        swap_dirs(spark, tmp, final)
+        _commit_artifact(spark, os.path.join(adir, sub), df)
 
 
 def _corpus_fingerprint(corpus_or_assign: DataFrame):
@@ -742,10 +794,11 @@ def _ivf_load_if_current(spark, adir: str, corpus: DataFrame):
             for r in spark.read.parquet(cpath).collect()
         )
         disk_fp = _corpus_fingerprint(spark.read.parquet(apath))
-        disk_c = int(
-            spark.read.parquet(os.path.join(adir, "meta_fp")).first()["c"]
-        )
-    except Exception:  # noqa: BLE001 — unreadable/corrupt/absent ⇒ rebuild
+        meta = spark.read.parquet(os.path.join(adir, "meta_fp")).first()
+        disk_c = None if meta is None else meta["c"]
+    except _STALE_READ:
+        return None
+    if disk_c is None:  # zero-row meta
         return None
     cur_fp = _corpus_fingerprint(corpus)
     if disk_fp != cur_fp or len(cent) != _ivf_k(cur_fp[0]):
@@ -823,7 +876,7 @@ def _ivf_assignments_soft(spark, sf_dir: str) -> DataFrame:
     rule the search side uses), zero k-means passes. Invalidated by
     ``_write_ivf_artifacts`` on every refit. Storage/scan cost is 2×
     the hard assignment — the documented price of the recall."""
-    from ..sources.fsutil import has_committed_data, swap_dirs
+    from ..sources.fsutil import has_committed_data
 
     centroids = _ivf_index(spark, sf_dir)  # ensure built + current
     path = os.path.join(ivf_artifact_dir(sf_dir), "assignments_soft")
@@ -832,18 +885,14 @@ def _ivf_assignments_soft(spark, sf_dir: str) -> DataFrame:
     if has_committed_data(spark, path):
         try:
             soft = spark.read.parquet(path)
-            n, s = _corpus_fingerprint(soft)
-            if (n, s) == (2 * want_n, 2 * want_s):
+            if _corpus_fingerprint(soft) == (2 * want_n, 2 * want_s):
                 return soft
-        except Exception:  # noqa: BLE001 — unreadable ⇒ rebuild
+        except _STALE_READ:
             pass
-    soft = corpus.select(
+    _commit_artifact(spark, path, corpus.select(
         "vec_id",
         F.explode(_ivf_probes(centroids, F.col("v"), 2)).alias("cid"),
-    )
-    tmp = path + ".__tmp__"
-    soft.coalesce(1).write.mode("overwrite").parquet(tmp)
-    swap_dirs(spark, tmp, path)
+    ))
     return spark.read.parquet(path)
 
 
@@ -882,27 +931,24 @@ def _ivf_list_stats(spark, sf_dir: str) -> DataFrame:
     pass when absent (older artifacts predate the stats table), and
     invalidated by ``_write_ivf_artifacts`` on every refit so the
     baseline always describes the centroids actually on disk."""
-    from ..sources.fsutil import has_committed_data, swap_dirs
+    from ..sources.fsutil import has_committed_data
 
     centroids = _ivf_index(spark, sf_dir)  # ensure index current first
     path = os.path.join(ivf_artifact_dir(sf_dir), "list_stats")
     if has_committed_data(spark, path):
         try:
             return spark.read.parquet(path)
-        except Exception:  # noqa: BLE001 — unreadable ⇒ backfill
+        except _STALE_READ:
             pass
     corpus = _vectors(spark, sf_dir, "vec_id", "v", "vn").drop("label")
-    stats = (
+    _commit_artifact(spark, path, (
         _assign_with_dist(corpus, centroids)
         .groupBy("cid")
         .agg(
             F.count(F.lit(1)).alias("n_build"),
             F.round(F.avg("sqdist"), 6).alias("mean_sqdist_build"),
         )
-    )
-    tmp = path + ".__tmp__"
-    stats.coalesce(1).write.mode("overwrite").parquet(tmp)
-    swap_dirs(spark, tmp, path)
+    ))
     return spark.read.parquet(path)
 
 
@@ -5292,7 +5338,7 @@ EXT_ORACLES["returned_item_revenue"] = ORACLE_RETURNED_ITEM_REVENUE
 # ---------------------------------------------------------------------------
 
 LSH_EDGES_ROOT = os.path.join(_REPO_ROOT, "artifacts", "lsh_edges")
-_LSH_EDGES_CACHE: dict[str, str] = {}  # sf key → validated edges path
+_LSH_EDGES_CACHE: dict[str, tuple] = {}  # sf key → (checked path, schema)
 
 
 def lsh_edges_dir(sf_dir: str) -> str:
@@ -5332,47 +5378,21 @@ def _lsh_edges(spark, sf_dir: str) -> DataFrame:
     the redundancy the IVF index round removed for embeddings (round-5
     verdict #3). Steady state: one meta read + one fingerprint
     aggregate, then a plain parquet scan of the edges; the pair
-    pipeline runs only when the corpus changed (edges first, meta
-    last — a crash between the two leaves a stale meta, which forces a
-    rebuild, never a silently wrong graph).
+    pipeline runs only when the corpus changed (see
+    ``_fingerprinted_artifact``).
 
     ``dedup_lsh_verified`` itself stays a LIVE computation — it is the
     pair list's definition and its gate must keep proving the pipeline,
     not the artifact."""
-    key = os.path.normpath(sf_dir)
-    if key in _LSH_EDGES_CACHE:
-        return spark.read.parquet(_LSH_EDGES_CACHE[key])
-    from ..sources.fsutil import has_committed_data, swap_dirs
-
-    adir = lsh_edges_dir(sf_dir)
-    epath = os.path.join(adir, "edges")
-    mpath = os.path.join(adir, "meta")
-    cur = _docs_fingerprint(spark, sf_dir)
-    fresh = False
-    if has_committed_data(spark, epath) and has_committed_data(spark, mpath):
-        try:
-            m = spark.read.parquet(mpath).first()
-            fresh = (int(m["n"]), int(m["s"]), int(m["c"])) == cur
-        except Exception:  # noqa: BLE001 — unreadable meta ⇒ rebuild
-            fresh = False
-    if not fresh:
-        edges = q_dedup_lsh_verified(spark, sf_dir).select("doc_a", "doc_b")
-        # coalesce(1): ~1e3 rows at these SFs; at real scale the edge
-        # list stays partitioned (drop the coalesce) — the swap keeps
-        # readers off partial writes either way.
-        tmp = epath + ".__tmp__"
-        edges.coalesce(1).write.mode("overwrite").parquet(tmp)
-        swap_dirs(spark, tmp, epath)
-        mdf = spark.createDataFrame([cur], "n bigint, s bigint, c bigint")
-        tmpm = mpath + ".__tmp__"
-        mdf.coalesce(1).write.mode("overwrite").parquet(tmpm)
-        swap_dirs(spark, tmpm, mpath)
-    _LSH_EDGES_CACHE[key] = epath
-    return spark.read.parquet(epath)
+    return _fingerprinted_artifact(
+        spark, lsh_edges_dir(sf_dir), _LSH_EDGES_CACHE, sf_dir, "edges",
+        lambda: dict(zip("nsc", _docs_fingerprint(spark, sf_dir))),
+        lambda: q_dedup_lsh_verified(spark, sf_dir).select("doc_a", "doc_b"),
+    )
 
 
 LSH_CC_ROOT = os.path.join(_REPO_ROOT, "artifacts", "lsh_cc_labels")
-_LSH_CC_CACHE: dict[str, str] = {}
+_LSH_CC_CACHE: dict[str, tuple] = {}
 
 
 def _lsh_cc_labels(spark, sf_dir: str) -> DataFrame:
@@ -5381,39 +5401,18 @@ def _lsh_cc_labels(spark, sf_dir: str) -> DataFrame:
     CC run — it is the labeling's definition and its gate keeps
     proving the iteration; consumers that only need the RESULT
     (keeper election) load this artifact instead of paying the
-    multi-round CC again (the ER-edge-cache discipline from round 7:
-    fingerprint freshness, labels-then-meta write order, a crash
-    between the two forces a rebuild, never serves a stale graph)."""
-    key = os.path.normpath(sf_dir)
-    if key in _LSH_CC_CACHE:
-        return spark.read.parquet(_LSH_CC_CACHE[key])
+    multi-round CC again (fingerprint freshness, as for the ER edges:
+    see ``_fingerprinted_artifact``)."""
     from ..operators.graph import connected_components
-    from ..sources.fsutil import has_committed_data, swap_dirs
 
-    adir = os.path.join(LSH_CC_ROOT, _artifact_subdir(sf_dir))
-    lpath = os.path.join(adir, "labels")
-    mpath = os.path.join(adir, "meta")
-    cur = _docs_fingerprint(spark, sf_dir)
-    fresh = False
-    if has_committed_data(spark, lpath) and has_committed_data(spark, mpath):
-        try:
-            m = spark.read.parquet(mpath).first()
-            fresh = (int(m["n"]), int(m["s"]), int(m["c"])) == cur
-        except Exception:  # noqa: BLE001 — unreadable meta ⇒ rebuild
-            fresh = False
-    if not fresh:
-        labels = connected_components(
+    return _fingerprinted_artifact(
+        spark, os.path.join(LSH_CC_ROOT, _artifact_subdir(sf_dir)),
+        _LSH_CC_CACHE, sf_dir, "labels",
+        lambda: dict(zip("nsc", _docs_fingerprint(spark, sf_dir))),
+        lambda: connected_components(
             _lsh_edges(spark, sf_dir), "doc_a", "doc_b", symmetrize=True
-        )
-        tmp = lpath + ".__tmp__"
-        labels.coalesce(1).write.mode("overwrite").parquet(tmp)
-        swap_dirs(spark, tmp, lpath)
-        mdf = spark.createDataFrame([cur], "n bigint, s bigint, c bigint")
-        tmpm = mpath + ".__tmp__"
-        mdf.coalesce(1).write.mode("overwrite").parquet(tmpm)
-        swap_dirs(spark, tmpm, mpath)
-    _LSH_CC_CACHE[key] = lpath
-    return spark.read.parquet(lpath)
+        ),
+    )
 
 
 RFM_NOW = "2002-01-01"  # injected reference instant (A2 discipline: no now())
@@ -6478,7 +6477,7 @@ def _pq_index(spark, sf_dir: str) -> dict[int, list]:
     contract as _ivf_index). Fit: PQ_SUBS independent small k-means
     runs on the sliced subvectors, reusing _kmeans_fit (deterministic
     first-k init + decimal partial sums)."""
-    from ..sources.fsutil import has_committed_data, swap_dirs
+    from ..sources.fsutil import has_committed_data
 
     key = os.path.normpath(sf_dir)
     if key in _PQ_CACHE:
@@ -6492,27 +6491,23 @@ def _pq_index(spark, sf_dir: str) -> dict[int, list]:
 
     if has_committed_data(spark, cpath) and has_committed_data(spark, kpath):
         try:
-            rows = spark.read.parquet(cpath).collect()
             by_sub: dict[int, list] = {}
-            for r in rows:
+            for r in spark.read.parquet(cpath).collect():
                 by_sub.setdefault(int(r["sub"]), []).append(
                     (int(r["cid"]), [float(x) for x in r["centroid"]])
                 )
-            code_n, code_s = _corpus_fingerprint(spark.read.parquet(kpath))
-            disk_c = int(
-                spark.read.parquet(os.path.join(adir, "meta_fp")).first()["c"]
-            )
-            fresh = (
-                code_n == PQ_SUBS * cur_n
-                and code_s == PQ_SUBS * cur_s
-                and disk_c == cur_c  # same ids, regenerated vectors ⇒ stale
+            code_fp = _corpus_fingerprint(spark.read.parquet(kpath))
+            meta = spark.read.parquet(os.path.join(adir, "meta_fp")).first()
+            if (
+                meta is not None  # zero-row meta
+                and meta["c"] == cur_c  # same ids, regenerated vectors ⇒ stale
+                and code_fp == (PQ_SUBS * cur_n, PQ_SUBS * cur_s)
                 and sorted(by_sub) == list(range(PQ_SUBS))
                 and all(len(v) == PQ_K for v in by_sub.values())
-            )
-            if fresh:
+            ):
                 _PQ_CACHE[key] = {s: sorted(v) for s, v in by_sub.items()}
                 return _PQ_CACHE[key]
-        except Exception:  # noqa: BLE001 — unreadable/corrupt ⇒ rebuild
+        except _STALE_READ:
             pass
 
     books: dict[int, list] = {}
@@ -6534,13 +6529,10 @@ def _pq_index(spark, sf_dir: str) -> dict[int, list]:
         "sub int, cid int, centroid array<double>",
     )
     fp = spark.createDataFrame([(int(cur_c),)], "c bigint")
-    # meta_fp LAST: a crash mid-write forces a rebuild, never a
-    # content-unverified serve
+    # meta_fp last, like every meta (see _fingerprinted_artifact)
     for p, df in ((cpath, cent), (kpath, codes),
                   (os.path.join(adir, "meta_fp"), fp)):
-        tmp = p + ".__tmp__"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        swap_dirs(spark, tmp, p)
+        _commit_artifact(spark, p, df)
     _PQ_CACHE[key] = books
     return books
 
@@ -7252,7 +7244,7 @@ EXT_ORACLES["bpe_learn_merges"] = _bpe_learn_oracle()
 # its gate keeps proving the pipeline, not the artifact.
 
 ER_EDGES_ROOT = os.path.join(_REPO_ROOT, "artifacts", "er_edges")
-_ER_EDGES_CACHE: dict[str, str] = {}  # sf key → validated edges path
+_ER_EDGES_CACHE: dict[str, tuple] = {}  # sf key → (checked path, schema)
 
 
 def er_edges_dir(sf_dir: str) -> str:
@@ -7280,38 +7272,13 @@ def _er_edges(spark, sf_dir: str) -> DataFrame:
     """LOAD-first (left_id, right_id) verified match-pair list under
     ``artifacts/er_edges/<sf>/``. Steady state: one meta read + one
     fingerprint aggregate, then a plain parquet scan — the Σ block²
-    Levenshtein pass runs only when the customer table changed (edges
-    first, meta last: a crash between the two forces a rebuild, never
-    serves a silently wrong graph)."""
-    key = os.path.normpath(sf_dir)
-    if key in _ER_EDGES_CACHE:
-        return spark.read.parquet(_ER_EDGES_CACHE[key])
-    from ..sources.fsutil import has_committed_data, swap_dirs
-
-    adir = er_edges_dir(sf_dir)
-    epath = os.path.join(adir, "edges")
-    mpath = os.path.join(adir, "meta")
-    cur = _customer_fingerprint(spark, sf_dir)
-    fresh = False
-    if has_committed_data(spark, epath) and has_committed_data(spark, mpath):
-        try:
-            m = spark.read.parquet(mpath).first()
-            fresh = (int(m["n"]), int(m["s"]), int(m["h"])) == cur
-        except Exception:  # noqa: BLE001 — unreadable meta ⇒ rebuild
-            fresh = False
-    if not fresh:
-        edges = q_entity_match_pairs(spark, sf_dir).select("left_id", "right_id")
-        # coalesce(1): matches are rare (~1e2-1e4 rows at these SFs);
-        # at real scale keep the edge list partitioned
-        tmp = epath + ".__tmp__"
-        edges.coalesce(1).write.mode("overwrite").parquet(tmp)
-        swap_dirs(spark, tmp, epath)
-        mdf = spark.createDataFrame([cur], "n bigint, s bigint, h bigint")
-        tmpm = mpath + ".__tmp__"
-        mdf.coalesce(1).write.mode("overwrite").parquet(tmpm)
-        swap_dirs(spark, tmpm, mpath)
-    _ER_EDGES_CACHE[key] = epath
-    return spark.read.parquet(epath)
+    Levenshtein pass runs only when the customer table changed (see
+    ``_fingerprinted_artifact``)."""
+    return _fingerprinted_artifact(
+        spark, er_edges_dir(sf_dir), _ER_EDGES_CACHE, sf_dir, "edges",
+        lambda: dict(zip("nsh", _customer_fingerprint(spark, sf_dir))),
+        lambda: q_entity_match_pairs(spark, sf_dir).select("left_id", "right_id"),
+    )
 
 
 def q_entity_resolution_clusters(spark, sf_dir):
@@ -12498,7 +12465,7 @@ DBSCAN_EPS = 0.25   # cosine epsilon-neighborhood threshold (6 dp rounded)
 DBSCAN_MINPTS = 4   # neighbors (excluding self) required for a core point
 
 DBSCAN_LABELS_ROOT = os.path.join(_REPO_ROOT, "artifacts", "dbscan_labels")
-_DBSCAN_LABELS_CACHE: dict[str, str] = {}
+_DBSCAN_LABELS_CACHE: dict[str, tuple] = {}
 
 
 def _emb_fingerprint(spark, sf_dir: str):
@@ -12528,48 +12495,23 @@ def _emb_fingerprint(spark, sf_dir: str):
 def _dbscan_labels(spark, sf_dir: str) -> DataFrame:
     """LOAD-first DBSCAN label table (r8 verdict item 5: the epsilon
     graph + CC re-ran on every call — 7.5 s at sf0.1 — while the LSH CC
-    labels loaded warm). Same artifact discipline as _lsh_cc_labels:
-    corpus-fingerprint freshness (embeddings, not documents), the
-    PARAMETERS (eps, minpts) pinned into the meta row so a tuning
-    change can never serve the previous tuning's labels,
-    labels-then-meta write order (a crash between the two forces a
-    rebuild, never serves a stale graph). The gate stays hash-checked
-    against the live DuckDB oracle, so a stale-serve bug surfaces as a
-    gate mismatch, not silence."""
-    from ..sources.fsutil import has_committed_data, swap_dirs
-
-    key = os.path.normpath(sf_dir)
-    if key in _DBSCAN_LABELS_CACHE:
-        return spark.read.parquet(_DBSCAN_LABELS_CACHE[key])
-    adir = os.path.join(DBSCAN_LABELS_ROOT, _artifact_subdir(sf_dir))
-    lpath = os.path.join(adir, "labels")
-    mpath = os.path.join(adir, "meta")
-    n, s, c = _emb_fingerprint(spark, sf_dir)
-    cur = (n, s, c, int(round(DBSCAN_EPS * 1_000_000)), DBSCAN_MINPTS)
-    fresh = False
-    if has_committed_data(spark, lpath) and has_committed_data(spark, mpath):
-        try:
-            m = spark.read.parquet(mpath).first()
-            fresh = (
-                int(m["n"]), int(m["s"]), int(m["c"]),
-                int(m["eps_ppm"]), int(m["minpts"]),
-            ) == cur
-        except Exception:  # noqa: BLE001 — unreadable meta ⇒ rebuild
-            fresh = False
-    if not fresh:
-        labels = _dbscan_compute(spark, sf_dir)
-        tmp = lpath + ".__tmp__"
-        labels.coalesce(1).write.mode("overwrite").parquet(tmp)
-        swap_dirs(spark, tmp, lpath)
-        mdf = spark.createDataFrame(
-            [cur],
-            "n bigint, s bigint, c bigint, eps_ppm bigint, minpts bigint",
-        )
-        tmpm = mpath + ".__tmp__"
-        mdf.coalesce(1).write.mode("overwrite").parquet(tmpm)
-        swap_dirs(spark, tmpm, mpath)
-    _DBSCAN_LABELS_CACHE[key] = lpath
-    return spark.read.parquet(lpath)
+    labels loaded warm). Same artifact discipline as _lsh_cc_labels
+    (``_fingerprinted_artifact``): corpus-fingerprint freshness
+    (embeddings, not documents), with the PARAMETERS (eps, minpts)
+    pinned into the meta row so a tuning change can never serve the
+    previous tuning's labels. The gate stays hash-checked against the
+    live DuckDB oracle, so a stale-serve bug surfaces as a gate
+    mismatch, not silence."""
+    return _fingerprinted_artifact(
+        spark, os.path.join(DBSCAN_LABELS_ROOT, _artifact_subdir(sf_dir)),
+        _DBSCAN_LABELS_CACHE, sf_dir, "labels",
+        lambda: dict(
+            zip("nsc", _emb_fingerprint(spark, sf_dir)),
+            eps_ppm=int(round(DBSCAN_EPS * 1_000_000)),
+            minpts=DBSCAN_MINPTS,
+        ),
+        lambda: _dbscan_compute(spark, sf_dir),
+    )
 
 
 def q_dbscan_clusters_blocked(spark, sf_dir):

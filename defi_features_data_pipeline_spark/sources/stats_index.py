@@ -100,13 +100,14 @@ def build_stats_index(
 ) -> str:
     """Materialize the stats table under ``index_root`` via the
     manifest-commit protocol (atomic publish; readers never see a
-    partial index). Returns the committed data path."""
-    import tempfile
-
+    partial index). Stages beside the index, as
+    ``sinks.upsert_manifested`` does, so the commit is a same-filesystem
+    rename and nothing is left behind. Returns the committed data
+    path."""
     from .fsutil import manifest_commit
 
     stats = collect_file_stats(spark, table_path, columns)
-    staged = tempfile.mkdtemp(prefix="stats_index_") + "/data"
+    staged = index_root.rstrip("/") + ".__stage__"
     stats.coalesce(1).write.mode("overwrite").parquet(staged)
     return manifest_commit(spark, index_root, staged, keep=2)
 

@@ -294,6 +294,32 @@ class TestStatsIndex:
         v_kept = pruned_read(spark, table, index, "v", 0.0, 1.0).inputFiles()
         assert len(v_kept) == n_all
 
+    def test_build_leaves_no_scratch(self, spark, tmp_path, monkeypatch):
+        """Building the index stages beside it, not in the temp dir:
+        two builds leave the temp dir empty and read back the same
+        index."""
+        import os
+        import tempfile
+
+        from defi_features_data_pipeline_spark.sources.stats_index import (
+            build_stats_index,
+        )
+
+        scratch = tmp_path / "scratch"
+        scratch.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+        table = str(tmp_path / "table")
+        index = str(tmp_path / "idx")
+        spark.range(1000).repartition(4).write.parquet(table)
+
+        def build():
+            path = build_stats_index(spark, table, ["id"], index)
+            return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+        assert build() == build()
+        assert os.listdir(scratch) == []
+        assert not os.path.exists(index + ".__stage__")
+
 
 class TestBackfillPartitions:
     def test_backfill_rewrites_only_target_partition(self, spark, tmp_path):

@@ -480,6 +480,94 @@ def test_incremental_minhash_corrupt_stage_raises(spark, monkeypatch):
         q_dedup_incremental_minhash(spark, SF_DIR)
 
 
+def test_fingerprinted_artifact_load_or_build(spark, tmp_path):
+    """The load-or-build helper behind the LSH-edge, LSH-label, ER-edge
+    and DBSCAN artifacts: a garbage, zero-row or column-short meta
+    rebuilds; an error inside ``build`` (raised, or raised by its
+    DataFrame while it is written) propagates and leaves the committed
+    data and meta byte-identical; a memo hit runs no Spark job."""
+    from pyspark.sql import functions as F
+
+    from defi_features_data_pipeline_spark.queries.extensions import (
+        _fingerprinted_artifact,
+    )
+
+    root = str(tmp_path / "artifact")
+    meta = os.path.join(root, "meta")
+    cache: dict = {}
+    builds = []
+    want = [(1, 2), (3, 4)]
+
+    def build():
+        builds.append(1)
+        return spark.createDataFrame(want, "a bigint, b bigint")
+
+    def load(build=build, fp=(2, 4)):
+        cache.clear()
+        df = _fingerprinted_artifact(
+            spark, root, cache, "corpus", "data",
+            lambda: dict(zip("ns", fp)), build,
+        )
+        return sorted(map(tuple, df.collect()))
+
+    def write_meta(rows, schema):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(meta)
+
+    def committed():
+        return {
+            os.path.join(dp, f): open(os.path.join(dp, f), "rb").read()
+            for sub in ("data", "meta")
+            for dp, _, fs in os.walk(os.path.join(root, sub))
+            for f in fs
+        }
+
+    assert load() == want and len(builds) == 1
+    assert load() == want and len(builds) == 1  # fresh meta: a pure load
+
+    for f in os.listdir(meta):  # garbage meta part file
+        if f.endswith(".parquet"):
+            with open(os.path.join(meta, f), "wb") as fh:
+                fh.write(b"not parquet")
+    assert load() == want and len(builds) == 2
+
+    write_meta([], "n bigint, s bigint")  # zero-row meta
+    assert load() == want and len(builds) == 3
+
+    write_meta([(2,)], "n bigint")  # meta missing a fingerprint column
+    assert load() == want and len(builds) == 4
+    assert load() == want and len(builds) == 4
+
+    before = committed()
+
+    def raising():
+        raise RuntimeError("build failed")
+
+    def failing_df():
+        return build().select(F.raise_error(F.lit("write failed")).alias("a"))
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        load(build=raising, fp=(3, 4))
+    with pytest.raises(Exception, match="write failed"):
+        load(build=failing_df, fp=(3, 4))
+    assert committed() == before
+    assert load() == want and len(builds) == 5  # failing_df called build
+
+    sc = spark.sparkContext
+    sc.setJobGroup("fingerprinted_artifact_memo_hit", "memo hit")
+    try:
+        df = _fingerprinted_artifact(
+            spark, root, cache, "corpus", "data", raising, raising
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(
+        "fingerprinted_artifact_memo_hit"
+    ) == []
+    assert sorted(map(tuple, df.collect())) == want
+
+
 # ---------------------------------------------------------------------------
 # streaming_count_min — stream/batch sketch equivalence
 # ---------------------------------------------------------------------------
