@@ -131,7 +131,7 @@ def run_pipeline(
             partial(
                 _stage,
                 f"transpose_{name}_events",
-                # looked up per call: the tracer may wrap stage_events
+                # looked up per call: pipeline_bench/tracing.py wraps stage_events
                 lambda df, liq=(name == "liquidation"): stage_events(
                     df, liquidation=liq
                 ),
