@@ -53,12 +53,12 @@ upstream candidate-generation plan is never re-planned per round.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..sources.fsutil import scratch_dir
 
 
 def connected_components(
@@ -96,8 +96,7 @@ def connected_components(
     from pyspark.sql import Observation
 
     spark = edges.sparkSession
-    workdir = tempfile.mkdtemp(prefix="cc_labels_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("cc_labels", reclaim=False)
 
     def _roundtrip(df: DataFrame, name: str) -> DataFrame:
         path = os.path.join(workdir, name)
@@ -263,8 +262,7 @@ def chain_closure(
     from pyspark.sql import Observation
 
     spark = nodes.sparkSession
-    workdir = tempfile.mkdtemp(prefix="chain_closure_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    workdir = scratch_dir("chain_closure", reclaim=False)
 
     def _roundtrip(df: DataFrame, name: str) -> tuple[DataFrame, int, int]:
         """Write one round's frame; the live-pointer count AND the row

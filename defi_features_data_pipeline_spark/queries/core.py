@@ -24,7 +24,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
 
 from ..operators import (
     asof_join,
@@ -52,9 +51,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events table loader, normalizing ``ts`` to a session-UTC
-    TIMESTAMP whatever physical type the driver wrote:
+def _utc_ts(df: DataFrame) -> DataFrame:
+    """``df`` with its ``ts`` column (if any) as a session-UTC TIMESTAMP,
+    whatever physical type the file holds (``df`` read with
+    ``spark.sql.legacy.parquet.nanosAsLong`` set):
 
     - parquet TIMESTAMP(NANOS): Spark's reader rejects it by default —
       read as nanosecond longs (legacy conf, runtime-settable) and
@@ -65,13 +65,18 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
       the same instant DuckDB's UTC-naive ``epoch()`` computes.
 
     Downstream queries can therefore always ``cast('long')``."""
+    ts = dict(df.dtypes).get("ts")
+    if ts == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events table loader, ``ts`` normalized by ``_utc_ts``."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = _t(spark, sf_dir, "events")
-    if isinstance(ev.schema["ts"].dataType, LongType):
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(ev.schema["ts"].dataType, TimestampNTZType):
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    return ev
+    return _utc_ts(_t(spark, sf_dir, "events"))
 
 
 def _dsum(c) -> F.Column:

@@ -3066,25 +3066,9 @@ def q_streaming_hourly_counts(spark, sf_dir):
     types, driver-collected); the production shape at scale is append
     mode to a real sink with watermark-finalized windows — that
     per-increment path is what tests/test_streaming.py covers."""
-    import uuid
-
     from .core import DEC
 
-    import tempfile
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    static = spark.read.parquet(path)
-    # the file stream source requires a DIRECTORY; expose the single
-    # parquet file through a temp dir symlink (no data copy)
-    d = tempfile.mkdtemp(prefix="stream_events_")
-    os.symlink(path, os.path.join(d, "events.parquet"))
-    ev = spark.readStream.schema(static.schema).parquet(d)
-    if dict(ev.dtypes)["ts"] == "bigint":  # nanos-as-long (see core._events)
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(ev.dtypes)["ts"] == "timestamp_ntz":  # tz-naive micros
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    ev = _stream_table(spark, sf_dir, "events", "streaming_hourly_counts")
     agg = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -3093,16 +3077,7 @@ def q_streaming_hourly_counts(spark, sf_dir):
             F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
         )
     )
-    name = f"stream_hourly_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(
+    return _run_stream(agg, "complete").select(
         F.col("w.start").cast("long").alias("hour_start"),
         "event_type",
         "n_events",
@@ -3131,22 +3106,9 @@ def q_streaming_enriched_revenue(spark, sf_dir):
     complete mode over bounded input equals the batch join+aggregate,
     so it is held to the same DuckDB oracle as every batch query.
     Decimal sums neutralize state-merge order (core.py discipline)."""
-    import tempfile
-    import uuid
-
     from .core import DEC
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    static_schema = spark.read.parquet(path).schema
-    d = tempfile.mkdtemp(prefix="stream_enrich_")
-    os.symlink(path, os.path.join(d, "events.parquet"))
-    ev = spark.readStream.schema(static_schema).parquet(d)
-    if dict(ev.dtypes)["ts"] == "bigint":
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(ev.dtypes)["ts"] == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
+    ev = _stream_table(spark, sf_dir, "events", "streaming_enriched_revenue")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = (
         ev.filter(F.col("event_type") == "purchase")
@@ -3157,16 +3119,7 @@ def q_streaming_enriched_revenue(spark, sf_dir):
             F.sum(F.col("value").cast(DEC)).cast("double").alias("revenue"),
         )
     )
-    name = f"stream_enriched_{uuid.uuid4().hex[:12]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _run_stream(joined, "complete")
 
 
 ORACLE_STREAMING_ENRICHED_REVENUE = """
@@ -3203,7 +3156,7 @@ def q_dedup_incremental_minhash(spark, sf_dir):
 
     Batch split is ``doc_id % 4 == 0`` (deterministic, interleaved ids
     so pair normalization via least/greatest is exercised)."""
-    import tempfile
+    from ..sources.fsutil import list_parquet_files, scratch_dir
 
     sh = _doc_shingles(spark, sf_dir)
     bands = lsh_bands(minhash_signature(sh))
@@ -3219,7 +3172,7 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     # two partition directories, and every later consumer reads parquet
     # instead of recomputing minhashes (1.0 corpus passes vs 1.75, and
     # the result job loses three shingle→minhash subtrees).
-    stage = tempfile.mkdtemp(prefix="lsh_index_")
+    stage = scratch_dir("dedup_incremental_minhash")
     bands.withColumn("__new", is_new.cast("int")).write.partitionBy(
         "__new"
     ).mode("overwrite").parquet(stage)
@@ -3232,8 +3185,6 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     # bands table leaves no parquet at all under the root — that case,
     # and only that case, is an empty frame of the same schema; any
     # other read failure (a corrupt staged file) raises.
-    from ..sources.fsutil import list_parquet_files
-
     if list_parquet_files(spark, stage):
         staged = spark.read.option("basePath", stage).parquet(stage)
         idx = staged.filter(F.col("__new") == 0).drop("__new")
@@ -3263,23 +3214,18 @@ def q_dedup_incremental_minhash(spark, sf_dir):
     probe = _pairs(new_bands, idx, anti_sym=False) # new ↔ existing
     intra = _pairs(new_bands, new_bands, anti_sym=True)  # new ↔ new
 
-    # MATERIALIZE the result before reclaiming the stage: the pair
-    # frames read it lazily; after the eager localCheckpoint the
-    # returned frame references no file paths. The next batch's index
-    # is old + these __new=1 rows (at production scale a version
-    # committed via fsutil.manifest_commit); this gate serves one
-    # batch, so the staging copy is reclaimed rather than appended to.
-    result = (
+    # MATERIALIZE the result: the eager localCheckpoint reads the stage
+    # inside the call, so a corrupt staged file fails the gate here.
+    # The next batch's index is old + these __new=1 rows (at production
+    # scale a version committed via fsutil.manifest_commit); this gate
+    # serves one batch, so the stage is scratch, not appended to.
+    return (
         known.union(probe)
         .union(intra)
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared_bands"))
         .localCheckpoint()  # eager
     )
-    import shutil
-
-    shutil.rmtree(stage, ignore_errors=True)
-    return result
 
 
 # full-recompute oracle — incremental maintenance must be invisible
@@ -3289,32 +3235,50 @@ EXT_QUERIES["dedup_incremental_minhash"] = q_dedup_incremental_minhash
 EXT_ORACLES["dedup_incremental_minhash"] = ORACLE_DEDUP_INCREMENTAL_MINHASH
 
 
-def _stream_events(spark, sf_dir):
-    """readStream over the events table (single parquet exposed through
-    a tempdir symlink — the file source requires a directory), with the
-    same ts physical-type normalization as ``core._events``."""
-    import tempfile
+def _stream_table(spark, sf_dir, table, gate, root=None, tail=None):
+    """``table`` replayed as a bounded file stream: its parquet file is
+    symlinked into ``<root>/src`` (the file source reads a directory;
+    no data copy) and read with the schema ``_t`` reads, one file per
+    micro-batch, ``ts`` normalized by ``core._utc_ts``. ``root`` is the
+    call's scratch dir (``scratch_dir(gate)`` by default; a gate that
+    also stages a sink passes its own).
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ``tail(static)``, if given, maps the static table (in the file's
+    physical schema) to rows staged as a second file, which the stream
+    reads as its own, later micro-batch."""
+    import glob
+
+    from ..sources.fsutil import scratch_dir
+    from .core import _utc_ts
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    static_schema = spark.read.parquet(path).schema
-    d = tempfile.mkdtemp(prefix="stream_events_")
-    os.symlink(path, os.path.join(d, "events.parquet"))
-    ev = spark.readStream.schema(static_schema).parquet(d)
-    if dict(ev.dtypes)["ts"] == "bigint":
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(ev.dtypes)["ts"] == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    return ev
+    static = _t(spark, sf_dir, table)
+    root = root or scratch_dir(gate)
+    src = os.path.join(root, "src")
+    os.mkdir(src)
+    name = f"{table}.parquet"
+    os.symlink(os.path.join(sf_dir, name), os.path.join(src, name))
+    if tail is not None:
+        rows = os.path.join(root, "tail")
+        tail(static).coalesce(1).write.parquet(rows)
+        part = glob.glob(os.path.join(rows, "part-*.parquet"))[0]
+        os.rename(part, os.path.join(src, "tail.parquet"))
+    return _utc_ts(
+        spark.readStream.schema(static.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
 
 
-def _run_stream(df, mode: str):
-    """Execute a bounded stream to a memory sink and return the result
-    table (AvailableNow; the VERIFICATION harness — production writes
-    append-mode to a real sink)."""
+def _run_stream(df, mode: str) -> DataFrame:
+    """Execute a bounded stream to a memory sink and return its result
+    (AvailableNow; the VERIFICATION harness — production writes
+    append-mode to a real sink). The returned frame holds the sink
+    itself, so the sink's temp view is dropped: a session keeps no
+    view per call."""
     import uuid
 
+    spark = df.sparkSession
     name = f"stream_{uuid.uuid4().hex[:12]}"
     q = (
         df.writeStream.format("memory")
@@ -3324,7 +3288,9 @@ def _run_stream(df, mode: str):
         .start()
     )
     q.awaitTermination()
-    return name
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def q_streaming_dedup(spark, sf_dir):
@@ -3336,12 +3302,11 @@ def q_streaming_dedup(spark, sf_dir):
     state store is keyed RocksDB per shuffle partition; with a
     watermark (``dropDuplicatesWithinWatermark``) state is bounded —
     unbounded here because the gate input is bounded."""
-    ev = _stream_events(spark, sf_dir)
+    ev = _stream_table(spark, sf_dir, "events", "streaming_dedup")
     dedup = ev.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    name = _run_stream(dedup, "append")
-    return spark.table(name)
+    return _run_stream(dedup, "append")
 
 
 ORACLE_STREAMING_DEDUP = """
@@ -3362,15 +3327,14 @@ def q_streaming_sessionize(spark, sf_dir):
     arithmetic the oracle runs. Over bounded input the session set
     equals the batch gap-rule sessionization (same rule as the batch
     ``sessionize_events`` gate, there via lag + running sum)."""
-    ev = _stream_events(spark, sf_dir)
+    ev = _stream_table(spark, sf_dir, "events", "streaming_sessionize")
     ev = ev.withColumn("ts", F.col("ts").cast("long").cast("timestamp"))
     sess = (
         ev.withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = _run_stream(sess, "complete")
-    return spark.table(name).select(
+    return _run_stream(sess, "complete").select(
         "user_id",
         F.col("w.start").cast("long").alias("session_start"),
         F.col("w.end").cast("long").alias("session_end"),
@@ -3421,9 +3385,9 @@ def q_streaming_interval_join(spark, sf_dir):
     would buffer forever). Append mode: inner-join matches emit as
     found. Over bounded input this equals the batch interval join, so
     it is held to the same DuckDB oracle as every batch query."""
+    ev = _stream_table(spark, sf_dir, "events", "streaming_interval_join")
     p = (
-        _stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
+        ev.filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("p_id"),
             F.col("user_id").alias("p_user"),
@@ -3432,8 +3396,7 @@ def q_streaming_interval_join(spark, sf_dir):
         .withWatermark("pts", "1 hour")
     )
     v = (
-        _stream_events(spark, sf_dir)
-        .filter(F.col("event_type") == "view")
+        ev.filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("v_id"),
             F.col("user_id").alias("v_user"),
@@ -3447,8 +3410,7 @@ def q_streaming_interval_join(spark, sf_dir):
         & (F.col("vts") >= F.col("pts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("vts") <= F.col("pts") + F.expr("INTERVAL 1 HOUR")),
     )
-    name = _run_stream(j, "append")
-    return spark.table(name).select(
+    return _run_stream(j, "append").select(
         "p_id",
         "v_id",
         F.col("p_user").alias("user_id"),
@@ -4094,7 +4056,7 @@ def q_streaming_stateful_counter(spark, sf_dir):
     production would set an event-time timeout to expire idle keys."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    ev = _stream_events(spark, sf_dir).select(
+    ev = _stream_table(spark, sf_dir, "events", "streaming_stateful_counter").select(
         "user_id", F.col("ts").cast("long").alias("ts_s")
     )
 
@@ -4119,9 +4081,8 @@ def q_streaming_stateful_counter(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = _run_stream(res, "update")
     return (
-        spark.table(name)
+        _run_stream(res, "update")
         .groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"), F.max("last_ts").alias("last_ts"))
     )
@@ -4148,14 +4109,13 @@ def q_streaming_dedup_watermarked(spark, sf_dir):
     that window, so the result is DISTINCT — hash-gated like every
     batch query. Output restricted to the dedup key so which physical
     row survived is invisible."""
-    ev = _stream_events(spark, sf_dir)
+    ev = _stream_table(spark, sf_dir, "events", "streaming_dedup_watermarked")
     dedup = (
         ev.withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = _run_stream(dedup, "append")
-    return spark.table(name)
+    return _run_stream(dedup, "append")
 
 
 ORACLE_STREAMING_DEDUP_WATERMARKED = """
@@ -4182,21 +4142,21 @@ def q_streaming_foreachbatch_upsert(spark, sf_dir):
     semi-join against the store limited to the batch's keys; the
     manifest commit is one marker create. On a Delta/Iceberg cluster
     the merge body becomes a single MERGE INTO."""
-    import tempfile
-
     from pyspark.sql import Window
 
-    from ..sources.fsutil import manifest_resolve, read_manifested
+    from ..sources.fsutil import manifest_resolve, read_manifested, scratch_dir
     from ..sources.sinks import upsert_manifested
 
-    ev = _stream_events(spark, sf_dir).select(
+    gate = "streaming_foreachbatch_upsert"
+    scratch = scratch_dir(gate)
+    ev = _stream_table(spark, sf_dir, "events", gate, root=scratch).select(
         "user_id",
         F.col("ts").cast("long").alias("last_ts"),
         "event_type",
         "event_id",
         "value",
     )
-    root = os.path.join(tempfile.mkdtemp(prefix="stream_upsert_"), "serving")
+    root = os.path.join(scratch, "serving")
     w = Window.partitionBy("user_id").orderBy(
         F.col("last_ts").desc(), F.col("event_id").desc()
     )
@@ -4220,9 +4180,7 @@ def q_streaming_foreachbatch_upsert(spark, sf_dir):
         upsert_manifested(spark, latest, root, "user_id")
 
     q = (
-        ev.writeStream.foreachBatch(
-            timed_foreach("streaming_foreachbatch_upsert", merge_newer)
-        )
+        ev.writeStream.foreachBatch(timed_foreach(gate, merge_newer))
         .trigger(availableNow=True)
         .start()
     )
@@ -4497,7 +4455,7 @@ def q_streaming_hopping_counts(spark, sf_dir):
     watermark - slide finalize and drop."""
     from .core import DEC
 
-    ev = _stream_events(spark, sf_dir)
+    ev = _stream_table(spark, sf_dir, "events", "streaming_hopping_counts")
     ev = ev.withColumn("ts", F.col("ts").cast("long").cast("timestamp"))
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -4507,8 +4465,7 @@ def q_streaming_hopping_counts(spark, sf_dir):
             F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
         )
     )
-    name = _run_stream(agg, "complete")
-    return spark.table(name).select(
+    return _run_stream(agg, "complete").select(
         F.col("w.start").cast("long").alias("win_start"),
         "event_type",
         "n_events",
@@ -6255,61 +6212,30 @@ EXT_ORACLES["pack_training_sequences"] = ORACLE_PACK_TRAINING_SEQUENCES
 
 
 def _stage_events_with_flush(spark, sf_dir):
-    """Staging dir for the outer-join stream: the events file plus ONE
-    far-future '__flush' sentinel row in a second parquet file. The
+    """The outer-join stream: the events file, then ONE far-future
+    '__flush' sentinel row as a second file and micro-batch. The
     sentinel's only job is to advance BOTH sides' event-time watermarks
     past every real row + join interval, so the left-outer state store
     provably evicts and emits its final null matches — the production
     pattern for flushing a stream-stream outer join at end-of-feed.
     The sentinel is built with the file's own physical schema (nanos-
     as-long or timestamp), so the streaming read sees one type."""
-    import glob as _glob
-    import shutil
-    import tempfile
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = os.path.join(sf_dir, "events.parquet")
-    raw = spark.read.parquet(path)
-    ts_type = dict(raw.dtypes)["ts"]
-    mx = raw.agg(F.max("ts").alias("ts"))
-    if ts_type == "bigint":  # nanosecond longs
-        flush_ts = (F.col("ts") + F.lit(30 * 86400 * 10**9)).cast("long")
-    else:
-        flush_ts = F.col("ts") + F.expr("INTERVAL 30 DAYS")
-    exprs = []
-    for f in raw.schema.fields:
-        if f.name == "ts":
-            exprs.append(flush_ts.alias("ts"))
-        elif f.name == "event_id":
-            exprs.append(F.lit(-1).cast(f.dataType).alias(f.name))
-        elif f.name == "user_id":
-            exprs.append(F.lit(-1).cast(f.dataType).alias(f.name))
-        elif f.name == "event_type":
-            exprs.append(F.lit("__flush").cast(f.dataType).alias(f.name))
+    def flush(raw):
+        if dict(raw.dtypes)["ts"] == "bigint":  # nanosecond longs
+            ts = (F.col("ts") + F.lit(30 * 86400 * 10**9)).cast("long")
         else:
-            exprs.append(F.lit(None).cast(f.dataType).alias(f.name))
-    flush = mx.select(*exprs)
+            ts = F.col("ts") + F.expr("INTERVAL 30 DAYS")
+        row = {"ts": ts, "event_id": F.lit(-1), "user_id": F.lit(-1),
+               "event_type": F.lit("__flush")}
+        return raw.agg(F.max("ts").alias("ts")).select(*(
+            row.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in raw.schema.fields
+        ))
 
-    d = tempfile.mkdtemp(prefix="stream_events_flush_")
-    os.symlink(path, os.path.join(d, "a_events.parquet"))
-    tmp_out = tempfile.mkdtemp(prefix="flush_row_")
-    flush.coalesce(1).write.mode("overwrite").parquet(tmp_out)
-    part = _glob.glob(os.path.join(tmp_out, "part-*.parquet"))[0]
-    shutil.copy(part, os.path.join(d, "z_flush.parquet"))
-    shutil.rmtree(tmp_out, ignore_errors=True)
-
-    static_schema = raw.schema
-    ev = (
-        spark.readStream.schema(static_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
+    return _stream_table(
+        spark, sf_dir, "events", "streaming_interval_join_outer", tail=flush
     )
-    if dict(ev.dtypes)["ts"] == "bigint":
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dict(ev.dtypes)["ts"] == "timestamp_ntz":
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-    return ev
 
 
 def q_streaming_interval_join_outer(spark, sf_dir):
@@ -6359,9 +6285,8 @@ def q_streaming_interval_join_outer(spark, sf_dir):
         & (F.col("vts") <= F.col("pts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     )
-    name = _run_stream(j, "append")
     return (
-        spark.table(name)
+        _run_stream(j, "append")
         .filter(F.col("p_id") >= 0)  # drop the sentinel's own row
         .select(
             "p_id",
@@ -7642,20 +7567,20 @@ def q_streaming_bitmap_distinct(spark, sf_dir):
     batch + an OR-merge against only the store's matching
     (type, bucket) rows; the store is id-space-bounded, not
     corpus-bounded."""
-    import tempfile
-
     from ..operators.sketches import (
         bitmap_counts_from_store,
         bitmap_or_merge_sink,
     )
+    from ..sources.fsutil import scratch_dir
 
-    ev = _stream_events(spark, sf_dir).select("event_type", "user_id")
-    root = os.path.join(tempfile.mkdtemp(prefix="stream_bitmap_"), "bitmaps")
+    gate = "streaming_bitmap_distinct"
+    scratch = scratch_dir(gate)
+    ev = _stream_table(spark, sf_dir, "events", gate, root=scratch)
+    ev = ev.select("event_type", "user_id")
+    root = os.path.join(scratch, "bitmaps")
     sink = bitmap_or_merge_sink(spark, root, ["event_type"], "user_id")
     q = (
-        ev.writeStream.foreachBatch(
-            timed_foreach("streaming_bitmap_distinct", sink)
-        )
+        ev.writeStream.foreachBatch(timed_foreach(gate, sink))
         .trigger(availableNow=True)
         .start()
     )
@@ -9312,9 +9237,9 @@ def q_jsonl_ingest_roundtrip(spark, sf_dir):
     the whole corpus TWICE at scale); JSONL splits by line so the read
     parallelizes; corrupt rows are quarantined by predicate, the same
     split-don't-halt shape as the streaming DQ gate."""
-    import tempfile
+    from ..sources.fsutil import scratch_dir
 
-    src = os.path.join(tempfile.mkdtemp(prefix="jsonl_ingest_"), "docs")
+    src = scratch_dir("jsonl_ingest_roundtrip")
     d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     d.write.mode("overwrite").json(src)
     with open(os.path.join(src, "part-corrupt.json"), "w") as fh:
@@ -9362,9 +9287,9 @@ def q_csv_ingest_quoted(spark, sf_dir):
     writer controls parallelism via file count (the repartition
     here); prefer JSONL/parquet upstream when possible — this gate
     exists because crawl feeds don't always cooperate."""
-    import tempfile
+    from ..sources.fsutil import scratch_dir
 
-    src = os.path.join(tempfile.mkdtemp(prefix="csv_ingest_"), "docs")
+    src = scratch_dir("csv_ingest_quoted")
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     tricky = F.concat(
         F.lit('a,"b'),
@@ -12178,10 +12103,10 @@ def q_jsonl_gzip_ingest(spark, sf_dir):
     the READ side — in production the .gz members arrive from the
     crawler; only the read path below is the operator."""
     import gzip
-    import tempfile
 
-    root = os.path.join(tempfile.mkdtemp(prefix="jsonl_gz_"), "docs")
-    os.makedirs(root, exist_ok=True)
+    from ..sources.fsutil import scratch_dir
+
+    root = scratch_dir("jsonl_gzip_ingest")
     d = (
         _t(spark, sf_dir, "documents")
         .select(

@@ -524,11 +524,10 @@ def q_streaming_ewma_user_value(spark, sf_dir):
     state transition depends on arrival ORDER and cannot be verified
     against a batch oracle under micro-batch nondeterminism; the
     anchored form is associative-commutative and exact."""
-    from .extensions import _run_stream, _stream_events
+    from .extensions import _run_stream, _stream_table
 
-    ev = _stream_events(spark, sf_dir).withColumn(
-        "__ep", F.col("ts").cast("long")
-    )
+    ev = _stream_table(spark, sf_dir, "events", "streaming_ewma_user_value")
+    ev = ev.withColumn("__ep", F.col("ts").cast("long"))
     age = F.expr(f"cast(({DECAY_ANCHOR}L - __ep) div 86400 as int)")
     ev = ev.withColumn("__age", F.least(F.lit(DECAY_MAX_AGE_DAYS), age))
     w = F.lit(1.0) / F.expr("cast(shiftleft(1L, __age) as double)")
@@ -537,8 +536,7 @@ def q_streaming_ewma_user_value(spark, sf_dir):
         F.min("__age").alias("freshest_age_days"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    name = _run_stream(agg, "complete")
-    return spark.table(name).select(
+    return _run_stream(agg, "complete").select(
         "user_id",
         F.round(F.col("__dv").cast("double"), 6).alias("decayed_value"),
         "freshest_age_days",

@@ -1541,20 +1541,6 @@ LEARNOPS_QUERIES["training_shard_manifest"] = q_training_shard_manifest
 # ---------------------------------------------------------------------------
 
 
-def _stream_documents(spark, sf_dir) -> DataFrame:
-    """readStream over the documents table (single parquet exposed
-    through a tempdir symlink — the file source requires a directory,
-    same mechanics as extensions._stream_events)."""
-    import tempfile
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(path).schema
-    d = tempfile.mkdtemp(prefix="stream_documents_")
-    os.symlink(path, os.path.join(d, "documents.parquet"))
-    return spark.readStream.schema(schema).parquet(d)
-
-
 def q_streaming_quality_filter(spark, sf_dir):
     """§2.9 STREAMING CLASSIFIER FILTER: fit the quality classifier
     OFFLINE on the static corpus, then score and filter the document
@@ -1567,16 +1553,16 @@ def q_streaming_quality_filter(spark, sf_dir):
 
     Over bounded input the kept set equals the batch score gate
     filtered at p ≥ 0.5, which is what the oracle checks."""
-    from .extensions import _run_stream
+    from .extensions import _run_stream, _stream_table
 
     w, _ = _qc_train(spark, sf_dir)  # offline fit (batch, cached)
-    feats = _qc_feature_frame(_stream_documents(spark, sf_dir))
+    docs = _stream_table(spark, sf_dir, "documents", "streaming_quality_filter")
+    feats = _qc_feature_frame(docs)
     p = _qc_p_col(w)
     kept = feats.select("doc_id", p.alias("p_quality")).filter(
         F.col("p_quality") >= F.lit(0.5)
     )
-    name = _run_stream(kept, "append")
-    return spark.table(name)
+    return _run_stream(kept, "append")
 
 
 LEARNOPS_QUERIES["streaming_quality_filter"] = q_streaming_quality_filter
@@ -3499,17 +3485,17 @@ def q_streaming_conformal_filter(spark, sf_dir):
 
     Over bounded input the kept set equals the batch filter at the
     same threshold, which is what the oracle checks."""
-    from .extensions import _run_stream
+    from .extensions import _run_stream, _stream_table
 
     thr = _conformal_cal_threshold(spark, sf_dir)
     w, _ = _qc_train(spark, sf_dir)
-    feats = _qc_feature_frame(_stream_documents(spark, sf_dir))
+    docs = _stream_table(spark, sf_dir, "documents", "streaming_conformal_filter")
+    feats = _qc_feature_frame(docs)
     ppm = _qc_ppm_col(w)
     kept = feats.select("doc_id", ppm.alias("p_ppm")).filter(
         F.lit(1000000) - F.col("p_ppm") <= F.lit(int(thr))
     )
-    name = _run_stream(kept, "append")
-    return spark.table(name)
+    return _run_stream(kept, "append")
 
 
 LEARNOPS_QUERIES["streaming_conformal_filter"] = q_streaming_conformal_filter

@@ -17,7 +17,49 @@ snapshot commit), which replaces the swap entirely.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import SparkSession
+
+_scratch_root: str | None = None
+_scratch_last: dict[str, str] = {}
+
+
+def scratch_dir(gate: str, reclaim: bool = True) -> str:
+    """Fresh local scratch dir for one call of ``gate``, under
+    one per-process root in ``tempfile.gettempdir()`` that the exit
+    hook removes.
+
+    The frames a gate returns read their files lazily, so the dir
+    cannot be removed when the gate returns. Instead each call first
+    reclaims the dir it gave ``gate`` on the previous call: a gate
+    holds at most one dir, and its result must be collected before the
+    gate runs again. ``reclaim=False`` keeps the dir until exit, for
+    code whose lazy result may still be live when it runs again
+    (``operators.graph``). Scratch holds symlinks and staged fixtures
+    on the local disk, so it uses ``shutil``, not the Hadoop
+    FileSystem."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="defi_scratch_")
+    if reclaim and gate in _scratch_last:
+        shutil.rmtree(_scratch_last.pop(gate), ignore_errors=True)
+    d = tempfile.mkdtemp(prefix=f"{gate}_", dir=_scratch_root)
+    if reclaim:
+        _scratch_last[gate] = d
+    return d
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    """Exit hook: remove the scratch root with every dir under it."""
+    global _scratch_root
+    if _scratch_root is not None:
+        shutil.rmtree(_scratch_root, ignore_errors=True)
+    _scratch_root = None
+    _scratch_last.clear()
 
 
 def _fs(spark: SparkSession, path: str):

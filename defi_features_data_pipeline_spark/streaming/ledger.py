@@ -18,13 +18,14 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 import time
 from collections.abc import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StructType
+
+from ..sources.fsutil import scratch_dir
 
 STREAM_STATE_METRICS: dict[str, list] = {}
 STREAM_OP_SECONDS: dict[str, float] = {}
@@ -74,13 +75,13 @@ def replay(
     ``body(batch_df, batch_id)`` returns the batch's output frame; it is
     written to ``<root>/out/batch=<id>`` with overwrite, so a replayed
     batch replaces its own output. Empty batches are skipped. ``root``
-    is the per-call scratch dir (fresh by default).
+    is the call's scratch dir (``scratch_dir(gate)`` by default).
 
     The file source triggers in (mtime, path) order and parallel part
     writes finish in any order, so the staged files are restamped to
     follow path order, which under ``repartitionByRange`` is ``order``
     range order."""
-    root = root or tempfile.mkdtemp(prefix=f"{gate}_")
+    root = root or scratch_dir(gate)
     src = os.path.join(root, "src")
     source.repartitionByRange(REPLAY_FILES, F.col(order)).write.mode(
         "overwrite"
@@ -149,7 +150,7 @@ def first_seen_ledger(
     only grows by the dir this ledger just wrote.
     ``STREAM_STATE_METRICS[gate]`` reports the rows each batch appended
     to the store."""
-    root = tempfile.mkdtemp(prefix=f"{gate}_")
+    root = scratch_dir(gate)
     store: dict[int, str] = {}
     by_key = Window.partitionBy(key)
 

@@ -687,3 +687,53 @@ def test_first_seen_ledger_matches_batch_semantics(spark, monkeypatch):
     )
     keys = [r["k"] for r in spark.read.parquet(*written).collect()]
     assert sorted(keys) == ["a", "b", "c", "d"]
+
+
+def test_gate_scratch_is_one_dir_per_gate(spark, tmp_path, monkeypatch):
+    """Each scratch-staging gate holds one dir under one per-process
+    root: a second call reclaims the first call's dir (whose frame was
+    collected first), nothing else lands in the temp dir, and the exit
+    hook leaves it empty."""
+    import tempfile
+
+    import __spark_entry__ as entry
+    from defi_features_data_pipeline_spark.sources import fsutil
+    from conftest import SF_DIR
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    monkeypatch.setattr(fsutil, "_scratch_root", None)
+    monkeypatch.setattr(fsutil, "_scratch_last", {})
+    gates = [
+        "streaming_count_min",  # replay
+        "streaming_url_dedup",  # first_seen_ledger
+        "streaming_dedup",  # _stream_table
+        "streaming_foreachbatch_upsert",
+        "jsonl_ingest_roundtrip",
+    ]
+    qs = entry.queries()
+    for _ in range(2):
+        for gate in gates:
+            assert qs[gate](spark, SF_DIR).collect()
+
+    root = fsutil._scratch_root
+    assert os.listdir(tmp) == [os.path.basename(root)]
+    owned = sorted(os.listdir(root))
+    assert len(owned) == len(gates)
+    assert all(any(d.startswith(f"{g}_") for d in owned) for g in gates)
+    fsutil._remove_scratch()
+    assert os.listdir(tmp) == []
+
+
+def test_run_stream_drops_its_view(spark):
+    """The memory-sink harness returns its frame and drops the sink's
+    temp view, so a session keeps no ``stream_*`` view per call."""
+    from defi_features_data_pipeline_spark.queries.extensions import (
+        q_streaming_dedup,
+    )
+    from conftest import SF_DIR
+
+    assert q_streaming_dedup(spark, SF_DIR).collect()
+    names = [t.name for t in spark.catalog.listTables()]
+    assert not [n for n in names if n.startswith("stream_")]

@@ -9,7 +9,9 @@ Per query, after one warm-up execution, reports (median of --runs):
 - construct_s: fn(spark, sf_dir) — plan building + analysis trigger
 - plan_s:      force physical planning via explainString (no jobs)
 - exec_s:      noop write of the pre-built frame
-- jobs/stages/tasks: deltas from the status tracker across the exec
+- jobs/stages/tasks: the jobs the exec started, in any job group
+  (read from the status store), and their stages/tasks;
+  construct_jobs the same for construct_s
 """
 
 from __future__ import annotations
@@ -43,10 +45,29 @@ def main() -> None:
     qs = mod.queries()
     jvm = spark._sc._jvm
     tracker = spark.sparkContext.statusTracker()
+    jsc = spark.sparkContext._jsc.sc()
 
-    def job_stage_task_count():
-        ids = tracker.getJobIdsForGroup(None)
-        n_jobs = len(ids)
+    def jobs_after(mark: int) -> list[int]:
+        """Ids of the jobs started after job ``mark``, in any job group:
+        micro-batch jobs run under their stream's group, so the default
+        group alone misses them. The status store lists newest first."""
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        ids = []
+        for i in range(jobs.size()):
+            jid = jobs.apply(i).jobId()
+            if jid <= mark:
+                break
+            ids.append(jid)
+        return ids
+
+    def newest_job() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return jobs.apply(0).jobId() if jobs.nonEmpty() else -1
+
+    def job_stage_task_count(mark: int):
+        ids = jobs_after(mark)
         n_stages = 0
         n_tasks = 0
         for jid in ids:
@@ -58,7 +79,7 @@ def main() -> None:
                 if si is not None and si.numCompletedTasks > 0:
                     n_stages += 1
                     n_tasks += si.numCompletedTasks
-        return n_jobs, n_stages, n_tasks
+        return len(ids), n_stages, n_tasks
 
     # warm-up
     try:
@@ -82,26 +103,28 @@ def main() -> None:
             continue
         cons, plan, execs, jobs, stages, tasks, cjobs = [], [], [], [], [], [], []
         for _ in range(runs):
-            c0 = job_stage_task_count()
+            c0 = newest_job()
             t0 = time.time()
             df = fn(spark, sf_dir)
             t1 = time.time()
-            c1 = job_stage_task_count()
+            c1 = job_stage_task_count(c0)
+            t1b = time.time()
             jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
             t2 = time.time()
-            j0 = job_stage_task_count()
+            j0 = newest_job()
+            t2b = time.time()
             df.write.format("noop").mode("overwrite").save()
             t3 = time.time()
-            j1 = job_stage_task_count()
+            j1 = job_stage_task_count(j0)
             cons.append(t1 - t0)
-            plan.append(t2 - t1)
-            execs.append(t3 - t2)
-            cjobs.append(c1[0] - c0[0])
-            jobs.append(j1[0] - j0[0])
-            stages.append(j1[1] - j0[1])
-            tasks.append(j1[2] - j0[2])
+            plan.append(t2 - t1b)
+            execs.append(t3 - t2b)
+            cjobs.append(c1[0])
+            jobs.append(j1[0])
+            stages.append(j1[1])
+            tasks.append(j1[2])
         out[name] = {
             "construct_s": round(statistics.median(cons), 3),
             "construct_jobs": int(statistics.median(cjobs)),
