@@ -22,27 +22,22 @@ from __future__ import annotations
 import hashlib
 import os
 import struct
+import zlib
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException, PySparkValueError
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from ..operators.ranking import top_k_per_group
+from .core import _t  # learnops, webops and the tests import it from here
 
 N_MINHASH = 8          # minhash permutations
 N_BANDS = 4            # LSH bands (rows per band = 2)
 SIMHASH_BITS = 16
 JACCARD_THRESHOLD = 0.2
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")  # see core._t
-    from ..sources.splits import multisplit_path
-
-    return spark.read.parquet(
-        multisplit_path(spark, os.path.join(sf_dir, f"{name}.parquet"))
-    )
 
 
 # The streaming gates' replay harness and its per-gate side channels
@@ -381,19 +376,6 @@ ORACLE_DEDUP_SIMHASH = _simhash_oracle()
 # ---------------------------------------------------------------------------
 
 
-def _cos(a, b) -> F.Column:
-    dot = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-    na = F.sqrt(
-        F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
-    nb = F.sqrt(
-        F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
-    )
-    return dot / (na * nb)
-
-
 def _norm(vec) -> F.Column:
     return F.sqrt(
         F.aggregate(F.transform(vec, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v)
@@ -404,6 +386,18 @@ def _dot(a, b) -> F.Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
+
+
+def _cos(a, b, na, nb) -> F.Column:
+    """Cosine of ``a``·``b`` over precomputed norms, rounded to 6 places."""
+    return F.round(_dot(a, b) / (na * nb), 6)
+
+
+def _cos_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of ``scored`` by (cos_sim desc, cand_id asc),
+    keeping the 1-based ``rank`` — the similarity-search output contract."""
+    order = [F.col("cos_sim").desc(), F.col("cand_id").asc()]
+    return top_k_per_group(scored, "query_id", order, k, "rank", keep_rank=True)
 
 
 def _vectors(spark, sf_dir, id_alias: str, vec_alias: str, norm_alias: str):
@@ -1036,8 +1030,6 @@ def q_knn_cosine_topk(spark, sf_dir):
     baseline; values rounded to 6 dp so Spark's ordered fold and
     DuckDB's list_cosine_similarity agree bit-wise after rounding.
     At 100 TB the corpus side stays partitioned; queries broadcast."""
-    from pyspark.sql import Window
-
     q = _vectors(spark, sf_dir, "query_id", "qv", "qn").filter(F.col("query_id") < 10)
     cand = _vectors(spark, sf_dir, "cand_id", "cv", "cn")
     scored = (
@@ -1047,19 +1039,10 @@ def q_knn_cosine_topk(spark, sf_dir):
         .select(
             "query_id",
             "cand_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
+            _cos(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+    return _cos_topk(scored, 5)
 
 
 ORACLE_KNN_COSINE_TOPK = """
@@ -1089,8 +1072,6 @@ def q_ann_ivf_topk(spark, sf_dir):
     against ``artifacts/ivf/<sf>/assignments``) — recomputing the k×d
     distance expression per corpus row per search would redo the
     index build's work on every query."""
-    from pyspark.sql import Window
-
     asg = _ivf_assignments(spark, sf_dir)
     q = (
         _vectors(spark, sf_dir, "query_id", "qv", "qn")
@@ -1112,19 +1093,10 @@ def q_ann_ivf_topk(spark, sf_dir):
         .select(
             "query_id",
             "cand_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
+            _cos(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+    return _cos_topk(scored, 3)
 
 
 ORACLE_ANN_IVF_TOPK = f"""
@@ -1274,6 +1246,34 @@ FROM documents
 # ---------------------------------------------------------------------------
 
 
+def _payload_rows(payloads: DataFrame, per_row, schema: str) -> DataFrame:
+    """One Arrow-batched ``mapInPandas`` stage over ``payloads``:
+    ``per_row`` gets each row's columns in order — ``(doc_id,)`` for an
+    encode stage, ``(doc_id, payload)`` for a decode stage — and returns
+    zero or more output tuples in ``schema`` order. Map-only: the stage
+    adds no shuffle, and an empty partition yields an empty typed frame."""
+    cols = [field.split()[0] for field in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = pdf.itertuples(index=False, name=None)
+            yield pd.DataFrame([o for r in rows for o in per_row(*r)], columns=cols)
+
+    return payloads.mapInPandas(run, schema=schema)
+
+
+def _utf8_payloads(spark, sf_dir, *extra: str) -> DataFrame:
+    """(doc_id, payload = UTF-8 bytes of the text, *extra) per document."""
+    d = _spread(spark, _t(spark, sf_dir, "documents"))
+    return d.select(
+        "doc_id", F.encode(F.col("text"), "utf-8").alias("payload"), *extra
+    )
+
+
+def _extract_payload(doc_id, payload: bytes, lang):
+    return [(doc_id, len(payload), hashlib.md5(payload).hexdigest(), lang)]
+
+
 def q_multimodal_extract(spark, sf_dir):
     """Multimodal column plumbing: treat content as an opaque binary
     payload + typed metadata, run feature extraction as an
@@ -1282,26 +1282,10 @@ def q_multimodal_extract(spark, sf_dir):
     partitioning is the part under test). Payload here is the UTF-8
     encoding of the text column so the oracle can validate byte
     lengths and digests."""
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
-    payloads = d.select(
-        "doc_id", F.encode(F.col("text"), "utf-8").alias("payload"), "lang"
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "byte_len": [len(b) for b in pdf["payload"]],
-                    "content_md5": [
-                        hashlib.md5(bytes(b)).hexdigest() for b in pdf["payload"]
-                    ],
-                    "lang": pdf["lang"],
-                }
-            )
-
-    return payloads.mapInPandas(
-        extract, schema="doc_id long, byte_len long, content_md5 string, lang string"
+    return _payload_rows(
+        _utf8_payloads(spark, sf_dir, "lang"),
+        _extract_payload,
+        "doc_id long, byte_len long, content_md5 string, lang string",
     )
 
 
@@ -1382,6 +1366,46 @@ def _wav_bytes(doc_id: int) -> bytes:
     )
 
 
+def _codec_roundtrip(spark, sf_dir, to_bytes, decode, schema: str) -> DataFrame:
+    """Encode one deterministic ``to_bytes(doc_id)`` payload per document
+    in one mapInPandas stage, then ``decode`` the ACTUAL bytes in a
+    second, independent one (``_payload_rows`` both times)."""
+    d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id")
+    payloads = _payload_rows(
+        d, lambda doc_id: [(doc_id, to_bytes(doc_id))], "doc_id long, payload binary"
+    )
+    return _payload_rows(payloads, decode, schema)
+
+
+def _luma(rgb: np.ndarray) -> int:
+    """Exact integer luma sum Σ(299·R + 587·G + 114·B) (milli-scaled
+    BT.601) over int64 pixels whose last axis is R, G, B."""
+    return int((299 * rgb[..., 0] + 587 * rgb[..., 1] + 114 * rgb[..., 2]).sum())
+
+
+def _dib_rgb(buf: bytes, offset: int, w: int, h: int) -> np.ndarray:
+    """Uncompressed 24-bit DIB pixels at ``offset`` — BGR byte order,
+    rows padded to 4 bytes, bottom-up unless ``h`` is negative — as
+    top-down int64 RGB of shape (|h|, w, 3)."""
+    stride = (w * 3 + 3) // 4 * 4
+    ah = abs(h)
+    arr = np.frombuffer(buf, dtype=np.uint8, count=stride * ah, offset=offset)
+    pix = arr.reshape(ah, stride)[:, : w * 3].reshape(ah, w, 3)
+    if h > 0:
+        pix = pix[::-1]  # bottom-up → top-down
+    return pix[..., ::-1].astype(np.int64)  # BGR → RGB
+
+
+def _decode_bmp(doc_id, buf: bytes):
+    if buf[:2] != b"BM":
+        raise ValueError(f"doc {doc_id}: not a BMP payload")
+    offset = struct.unpack_from("<I", buf, 10)[0]
+    hdr_sz, w, h, planes, bpp = struct.unpack_from("<IiiHH", buf, 14)
+    if hdr_sz != 40 or planes != 1 or bpp != 24:
+        raise ValueError(f"doc {doc_id}: unsupported BMP variant")
+    return [(doc_id, w, abs(h), w * abs(h), _luma(_dib_rgb(buf, offset, w, h)))]
+
+
 def q_multimodal_decode_bmp(spark, sf_dir):
     """IMAGE DECODE over a binary column: one mapInPandas stage encodes
     a deterministic BMP per document, a SECOND independent mapInPandas
@@ -1398,60 +1422,12 @@ def q_multimodal_decode_bmp(spark, sf_dir):
     the binary column — no shuffle at all (the final sort is the
     driver compare's, not the plan's); a real corpus swaps the encode
     stage for a parquet binary column read, decode unchanged."""
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_bmp_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out_ids, widths, heights, npix, luma = [], [], [], [], []
-        for pdf in batches:
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(buf)
-                if buf[:2] != b"BM":
-                    raise ValueError(f"doc {doc_id}: not a BMP payload")
-                offset = struct.unpack_from("<I", buf, 10)[0]
-                hdr_sz, w, h, planes, bpp = struct.unpack_from("<IiiHH", buf, 14)
-                if hdr_sz != 40 or planes != 1 or bpp != 24:
-                    raise ValueError(f"doc {doc_id}: unsupported BMP variant")
-                stride = (w * 3 + 3) // 4 * 4
-                ah = abs(h)
-                arr = np.frombuffer(
-                    buf, dtype=np.uint8, count=stride * ah, offset=offset
-                ).reshape(ah, stride)
-                pix = arr[:, : w * 3].reshape(ah, w, 3)
-                if h > 0:
-                    pix = pix[::-1]  # bottom-up → top-down
-                b = pix[..., 0].astype(np.int64)
-                g = pix[..., 1].astype(np.int64)
-                r = pix[..., 2].astype(np.int64)
-                out_ids.append(doc_id)
-                widths.append(w)
-                heights.append(ah)
-                npix.append(w * ah)
-                luma.append(int((299 * r + 587 * g + 114 * b).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_ids,
-                    "width": widths,
-                    "height": heights,
-                    "n_pixels": npix,
-                    "luma_milli": luma,
-                }
-            )
-            out_ids, widths, heights, npix, luma = [], [], [], [], []
-
-    payloads = d.mapInPandas(encode, schema="doc_id long, payload binary")
-    return payloads.mapInPandas(
-        decode,
-        schema="doc_id long, width long, height long, n_pixels long, "
-        "luma_milli long",
+    return _codec_roundtrip(
+        spark,
+        sf_dir,
+        _bmp_bytes,
+        _decode_bmp,
+        "doc_id long, width long, height long, n_pixels long, luma_milli long",
     )
 
 
@@ -1473,6 +1449,38 @@ GROUP BY doc_id, w, h
 """
 
 
+def _riff_chunks(buf: bytes, pos: int, end: int) -> Iterator[tuple[bytes, int, int]]:
+    """(chunk id, payload offset, payload size) for each word-aligned
+    RIFF chunk in ``buf[pos:end]``."""
+    while pos + 8 <= end:
+        sz = struct.unpack_from("<I", buf, pos + 4)[0]
+        yield buf[pos : pos + 4], pos + 8, sz
+        pos += 8 + sz + (sz & 1)
+
+
+def _wav_samples(doc_id, buf: bytes) -> tuple[int, np.ndarray]:
+    """RIFF/WAVE magic, chunk walk to the ``fmt `` and ``data`` chunks,
+    PCM-16 mono check → (sample_rate, int64 samples)."""
+    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
+        raise ValueError(f"doc {doc_id}: not a WAV payload")
+    sr = bits = channels = data = None
+    for cid, off, sz in _riff_chunks(buf, 12, len(buf)):
+        if cid == b"fmt ":
+            fmt_code, channels, sr, _, _, bits = struct.unpack_from("<HHIIHH", buf, off)
+            if fmt_code != 1:
+                raise ValueError(f"doc {doc_id}: not PCM")
+        elif cid == b"data":
+            data = buf[off : off + sz]
+    if data is None or bits != 16 or channels != 1:
+        raise ValueError(f"doc {doc_id}: unsupported WAV layout")
+    return sr, np.frombuffer(data, dtype="<i2").astype(np.int64)
+
+
+def _decode_wav(doc_id, buf: bytes):
+    sr, s = _wav_samples(doc_id, buf)
+    return [(doc_id, sr, len(s), int(np.abs(s).sum()), int((s * s).sum()))]
+
+
 def q_multimodal_decode_wav(spark, sf_dir):
     """AUDIO DECODE over a binary column — the WAV sibling of
     ``multimodal_decode_bmp``: encode a deterministic PCM-16 mono WAV
@@ -1482,60 +1490,12 @@ def q_multimodal_decode_wav(spark, sf_dir):
     count from the headers, Σ|s| and the energy Σs² from the samples
     (both integer-exact). Oracle is the analytic twin of the
     generator formula. Map-only Arrow-batched, no shuffle."""
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_wav_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, srs, ns, sabs, energy = [], [], [], [], []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(buf)
-                if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                    raise ValueError(f"doc {doc_id}: not a WAV payload")
-                pos, sr, bits, channels, data = 12, None, None, None, None
-                while pos + 8 <= len(buf):
-                    cid = buf[pos : pos + 4]
-                    sz = struct.unpack_from("<I", buf, pos + 4)[0]
-                    if cid == b"fmt ":
-                        fmt_code, channels, sr, _, _, bits = struct.unpack_from(
-                            "<HHIIHH", buf, pos + 8
-                        )
-                        if fmt_code != 1:
-                            raise ValueError(f"doc {doc_id}: not PCM")
-                    elif cid == b"data":
-                        data = buf[pos + 8 : pos + 8 + sz]
-                    pos += 8 + sz + (sz & 1)  # chunks are word-aligned
-                if data is None or bits != 16 or channels != 1:
-                    raise ValueError(f"doc {doc_id}: unsupported WAV layout")
-                s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                ids.append(doc_id)
-                srs.append(sr)
-                ns.append(len(s))
-                sabs.append(int(np.abs(s).sum()))
-                energy.append(int((s * s).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "sample_rate": srs,
-                    "n_samples": ns,
-                    "sum_abs": sabs,
-                    "energy": energy,
-                }
-            )
-
-    payloads = d.mapInPandas(encode, schema="doc_id long, payload binary")
-    return payloads.mapInPandas(
-        decode,
-        schema="doc_id long, sample_rate long, n_samples long, "
-        "sum_abs long, energy long",
+    return _codec_roundtrip(
+        spark,
+        sf_dir,
+        _wav_bytes,
+        _decode_wav,
+        "doc_id long, sample_rate long, n_samples long, sum_abs long, energy long",
     )
 
 
@@ -1605,7 +1565,7 @@ def q_dedup_embedding_cosine(spark, sf_dir):
     a = _vectors(spark, sf_dir, "id_a", "va", "na_").drop("label")
     b = _vectors(spark, sf_dir, "id_b", "vb", "nb_").drop("label")
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    cos = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na_") * F.col("nb_")), 6)
+    cos = _cos(F.col("va"), F.col("vb"), F.col("na_"), F.col("nb_"))
     return (
         pairs.select("id_a", "id_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= COSINE_DUP_THRESHOLD)
@@ -1820,8 +1780,6 @@ def q_knn_cosine_topk_vectorized(spark, sf_dir):
     numeric hot path. Same output contract as knn_cosine_topk (round-6
     + id tiebreak), verified against the same oracle."""
     import numpy as np
-    from pyspark.sql import Window
-
     e = _spread(spark, _t(spark, sf_dir, "embeddings"))
     qrows = e.filter(F.col("vec_id") < 10).select("vec_id", "embedding").collect()
     Q = np.array([r["embedding"] for r in qrows], dtype=np.float64)
@@ -1847,14 +1805,7 @@ def q_knn_cosine_topk_vectorized(spark, sf_dir):
     out = e.select("vec_id", "embedding").mapInPandas(
         score, "query_id long, cand_id long, cos_sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        out.filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-    )
+    return _cos_topk(out.filter(F.col("query_id") != F.col("cand_id")), 5)
 
 
 EXT_QUERIES["knn_cosine_topk_vectorized"] = q_knn_cosine_topk_vectorized
@@ -2077,7 +2028,7 @@ def q_dedup_embedding_blocked(spark, sf_dir):
     )
     va = _vectors(spark, sf_dir, "id_a", "va", "na_").drop("label")
     vb = _vectors(spark, sf_dir, "id_b", "vb", "nb_").drop("label")
-    cos = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na_") * F.col("nb_")), 6)
+    cos = _cos(F.col("va"), F.col("vb"), F.col("na_"), F.col("nb_"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -2388,9 +2339,7 @@ def _ann_multiprobe_scored(spark, sf_dir, nprobe: int, soft: bool = False):
     return matched.select(
         "query_id",
         "cand_id",
-        F.round(
-            _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-        ).alias("cos_sim"),
+        _cos(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos_sim"),
     )
 
 
@@ -2403,17 +2352,8 @@ def q_ann_ivf_multiprobe(spark, sf_dir):
     cross join, and the probe fan-out is a constant factor, not a
     data one. The DuckDB oracle reproduces the probe choice from the
     materialized centroids/assignments tables."""
-    from pyspark.sql import Window
-
     scored = _ann_multiprobe_scored(spark, sf_dir, 2)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+    return _cos_topk(scored, 3)
 
 
 def ann_recall_curve(
@@ -2427,12 +2367,7 @@ def ann_recall_curve(
     the table shows where the curve saturates and what each recall
     point costs. Driver-side state: |queries|×max(k) id pairs per
     operating point — metadata."""
-    from pyspark.sql import Window
-
     kmax = max(ks)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
     q = _vectors(spark, sf_dir, "query_id", "qv", "qn").filter(
         F.col("query_id") < 10
     )
@@ -2444,17 +2379,10 @@ def ann_recall_curve(
         .select(
             "query_id",
             "cand_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
+            _cos(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos_sim"),
         )
     )
-    exact = (
-        exact_scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kmax)
-        .select("query_id", "cand_id", "rank")
-        .collect()
-    )
+    exact = _cos_topk(exact_scored, kmax).select("query_id", "cand_id", "rank").collect()
     exact_at = {
         k: {(r["query_id"], r["cand_id"]) for r in exact if r["rank"] <= k}
         for k in ks
@@ -2465,12 +2393,7 @@ def ann_recall_curve(
         for nprobe in nprobes:
             scored = _ann_multiprobe_scored(spark, sf_dir, nprobe, soft=soft)
             n_cand = scored.count()
-            got = (
-                scored.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= kmax)
-                .select("query_id", "cand_id", "rank")
-                .collect()
-            )
+            got = _cos_topk(scored, kmax).select("query_id", "cand_id", "rank").collect()
             point: dict[str, float] = {
                 "mean_candidates_per_query": round(n_cand / n_queries, 1)
             }
@@ -2540,17 +2463,8 @@ def q_ann_ivf_soft_topk(spark, sf_dir):
     candidate cost. The DuckDB oracle reproduces probe choice AND the
     replica join (with the same pair de-dup) from the materialized
     artifacts."""
-    from pyspark.sql import Window
-
     scored = _ann_multiprobe_scored(spark, sf_dir, 2, soft=True)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+    return _cos_topk(scored, 3)
 
 
 ORACLE_ANN_IVF_SOFT_TOPK = f"""
@@ -2612,8 +2526,6 @@ def q_ann_ivf_quantized(spark, sf_dir):
     exactly twice, keyed by id, for 8 rows per query. Shortlist and
     final ranking break ties by cand_id on 6-dp-rounded scores, so
     the DuckDB oracle reproduces both orderings bit-for-bit."""
-    from pyspark.sql import Window
-
     asg = _ivf_assignments(spark, sf_dir)
     v = _vectors(spark, sf_dir, "vec_id", "v", "vn").drop("label")
     absmax = F.aggregate(
@@ -2661,28 +2573,17 @@ def q_ann_ivf_quantized(spark, sf_dir):
         .filter(F.col("query_id") != F.col("cand_id"))
         .select("query_id", "cand_id", approx.alias("approx_sim"))  # NARROW
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sim").desc(), F.col("cand_id").asc()
-    )
-    shortlist = (
-        pairs.withColumn("ar", F.row_number().over(w1))
-        .filter(F.col("ar") <= 8)
-        .drop("ar")
-    )
+    order = [F.col("approx_sim").desc(), F.col("cand_id").asc()]
+    shortlist = top_k_per_group(pairs, "query_id", order, 8, "ar")
     # exact rescore: float vectors join in BY ID, shortlist rows only
     qv = _vectors(spark, sf_dir, "query_id", "qv", "rqn").drop("label")
     cv = _vectors(spark, sf_dir, "cand_id", "cv", "rcn").drop("label")
-    exact = F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("rqn") * F.col("rcn")), 6)
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
+    exact = _cos(F.col("qv"), F.col("cv"), F.col("rqn"), F.col("rcn"))
+    return _cos_topk(
         shortlist.join(qv, "query_id")
         .join(cv, "cand_id")
-        .select("query_id", "cand_id", "approx_sim", exact.alias("cos_sim"))
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "approx_sim", "cos_sim", "rank")
+        .select("query_id", "cand_id", "approx_sim", exact.alias("cos_sim")),
+        3,
     )
 
 
@@ -3564,6 +3465,18 @@ EXT_QUERIES["dedup_clusters_incremental"] = q_dedup_clusters_incremental
 EXT_ORACLES["dedup_clusters_incremental"] = ORACLE_DEDUP_CLUSTERS_LSH
 
 
+FRAME_STRIDE, FRAME_LEN = 256, 64  # one 64-char frame every 256 chars
+
+
+def _sample_frames(doc_id, payload: bytes):
+    text = payload.decode("utf-8")  # the "decode" stage
+    frames = enumerate(range(0, len(text), FRAME_STRIDE))
+    return [
+        (doc_id, i, off, hashlib.md5(text[off : off + FRAME_LEN].encode()).hexdigest())
+        for i, off in frames
+    ]
+
+
 def q_multimodal_frame_sample(spark, sf_dir):
     """Multimodal FRAME SAMPLING plumbing: the binary payload is
     "decoded" (here: utf-8 — the deterministic stand-in for a video
@@ -3575,30 +3488,10 @@ def q_multimodal_frame_sample(spark, sf_dir):
     the oracle validate every sampled window byte-for-byte. At 100 TB
     the payload column stays off-heap in Arrow batches; only frame
     metadata + digests leave the UDF."""
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
-    payloads = d.select(
-        "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
-    )
-    STRIDE, FLEN = 256, 64
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_off": [], "frame_md5": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                text = bytes(payload).decode("utf-8")  # the "decode" stage
-                for i in range(0, (len(text) + STRIDE - 1) // STRIDE):
-                    frame = text[i * STRIDE : i * STRIDE + FLEN]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_off"].append(i * STRIDE)
-                    out["frame_md5"].append(
-                        hashlib.md5(frame.encode("utf-8")).hexdigest()
-                    )
-            yield pd.DataFrame(out)
-
-    return payloads.mapInPandas(
-        sample,
-        schema="doc_id long, frame_idx long, frame_off long, frame_md5 string",
+    return _payload_rows(
+        _utf8_payloads(spark, sf_dir),
+        _sample_frames,
+        "doc_id long, frame_idx long, frame_off long, frame_md5 string",
     )
 
 
@@ -3703,8 +3596,6 @@ def q_tfidf_top_terms(spark, sf_dir):
     per-doc window partitions by doc_id — no global sort. The df join
     has unbounded vocabulary, so the strategy is left to AQE (same
     reasoning as token_rarity_score)."""
-    from pyspark.sql import Window
-
     d = _spread(spark, _t(spark, sf_dir, "documents"))
     toks = (
         d.withColumn("__toks", F.expr(TOKENS_SPARK))
@@ -3717,13 +3608,9 @@ def q_tfidf_top_terms(spark, sf_dir):
     scored = tf.join(dfreq, "t").withColumn(
         "tfidf", F.round(F.col("tf") * F.log(n.scalar() / F.col("df")), 6)
     )
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("t").asc()
-    )
-    return (
-        scored.withColumn("__rnk", F.row_number().over(w))
-        .filter(F.col("__rnk") <= 3)
-        .select("doc_id", F.col("t").alias("term"), "tfidf")
+    order = [F.col("tfidf").desc(), F.col("t").asc()]
+    return top_k_per_group(scored, "doc_id", order, 3, "__rnk").select(
+        "doc_id", F.col("t").alias("term"), "tfidf"
     )
 
 
@@ -4142,8 +4029,6 @@ def q_streaming_foreachbatch_upsert(spark, sf_dir):
     semi-join against the store limited to the batch's keys; the
     manifest commit is one marker create. On a Delta/Iceberg cluster
     the merge body becomes a single MERGE INTO."""
-    from pyspark.sql import Window
-
     from ..sources.fsutil import manifest_resolve, read_manifested, scratch_dir
     from ..sources.sinks import upsert_manifested
 
@@ -4157,25 +4042,16 @@ def q_streaming_foreachbatch_upsert(spark, sf_dir):
         "value",
     )
     root = os.path.join(scratch, "serving")
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("last_ts").desc(), F.col("event_id").desc()
-    )
+    order = [F.col("last_ts").desc(), F.col("event_id").desc()]
 
     def merge_newer(batch_df, _batch_id):
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = top_k_per_group(batch_df, "user_id", order, 1, "__rn")
         if manifest_resolve(spark, root) is not None:
             prev = read_manifested(spark, root).join(
                 latest.select("user_id"), "user_id", "semi"
             )
-            latest = (
-                prev.unionByName(latest)
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
+            latest = top_k_per_group(
+                prev.unionByName(latest), "user_id", order, 1, "__rn"
             )
         upsert_manifested(spark, latest, root, "user_id")
 
@@ -4219,20 +4095,14 @@ def q_dedup_keep_best(spark, sf_dir):
     via one window over the member list joined to the doc metadata →
     anti-join for the untouched singletons. Everything keys on doc_id
     or the cluster label; no new wide shapes beyond the CC engine's."""
-    from pyspark.sql import Window
-
     labels = _lsh_cc_labels(spark, sf_dir)
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     members = labels.join(d, labels.node == d.doc_id).select(
         "label", "doc_id", "n_chars"
     )
-    w = Window.partitionBy("label").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id").asc()
-    )
-    keepers = (
-        members.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("doc_id", F.lit("keeper").alias("reason"))
+    order = [F.col("n_chars").desc(), F.col("doc_id").asc()]
+    keepers = top_k_per_group(members, "label", order, 1, "__rn").select(
+        "doc_id", F.lit("keeper").alias("reason")
     )
     singletons = d.join(
         labels.select(F.col("node").alias("doc_id")), "doc_id", "left_anti"
@@ -6583,16 +6453,9 @@ def q_ann_pq_adc(spark, sf_dir):
             .alias("adc_dist")
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "adc_dist", F.col("rank").cast("int"))
-    )
+    order = [F.col("adc_dist").asc(), F.col("cand_id").asc()]
+    top = top_k_per_group(scored, "query_id", order, 3, "rank", keep_rank=True)
+    return top.select("query_id", "cand_id", "adc_dist", F.col("rank").cast("int"))
 
 
 ORACLE_ANN_PQ_ADC = f"""
@@ -6686,14 +6549,8 @@ def q_ann_pq_rescore(spark, sf_dir):
             .alias("adc_dist")
         )
     )
-    from pyspark.sql import Window
-
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("cand_id").asc()
-    )
-    shortlist = adc.withColumn("__rn", F.row_number().over(w1)).filter(
-        F.col("__rn") <= PQ_SHORTLIST
-    )
+    order = [F.col("adc_dist").asc(), F.col("cand_id").asc()]
+    shortlist = top_k_per_group(adc, "query_id", order, PQ_SHORTLIST, "__rn")
     cand_vecs = emb.select(
         F.col("vec_id").alias("__cid2"), F.col("embedding").alias("cv")
     )
@@ -6713,14 +6570,9 @@ def q_ann_pq_rescore(spark, sf_dir):
         .alias("exact_dist")
     )
     rescored = joined.select("query_id", "cand_id", exact_d)
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("exact_dist").asc(), F.col("cand_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "exact_dist", F.col("rank").cast("int"))
-    )
+    order = [F.col("exact_dist").asc(), F.col("cand_id").asc()]
+    top = top_k_per_group(rescored, "query_id", order, 3, "rank", keep_rank=True)
+    return top.select("query_id", "cand_id", "exact_dist", F.col("rank").cast("int"))
 
 
 def _pq_rescore_chain_sql() -> str:
@@ -6791,8 +6643,6 @@ def q_knn_graph_ivf(spark, sf_dir):
     exchanges a kNN-graph build must pay; recall follows the IVF
     nprobe=1 contract (raise via multiprobe if the graph consumer
     needs it)."""
-    from pyspark.sql import Window
-
     asg = _ivf_assignments(spark, sf_dir)
     q = (
         _vectors(spark, sf_dir, "query_id", "qv", "qn")
@@ -6812,19 +6662,10 @@ def q_knn_graph_ivf(spark, sf_dir):
         .select(
             "query_id",
             "cand_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
+            _cos(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+    return _cos_topk(scored, 3)
 
 
 ORACLE_KNN_GRAPH_IVF = f"""
@@ -6902,6 +6743,14 @@ EXT_ORACLES["dedup_jaccard_prefix"] = ORACLE_DEDUP_NGRAM_JACCARD
 RESIZE_STRIDE = 4  # keep every 4th sample — a 4x "downscale"
 
 
+def _resize_payload(doc_id, payload: bytes):
+    text = payload.decode("utf-8")  # the "decode" stage
+    resized = text[::RESIZE_STRIDE]
+    return [
+        (doc_id, len(text), len(resized), hashlib.md5(resized.encode("utf-8")).hexdigest())
+    ]
+
+
 def q_multimodal_resize(spark, sf_dir):
     """Multimodal RESIZE plumbing: the downscale stage of an
     image/audio pipeline as an Arrow-batched mapInPandas — decode the
@@ -6920,34 +6769,10 @@ def q_multimodal_resize(spark, sf_dir):
     no shuffle, output is metadata+digest (bytes never leave the
     executor); a real resize would write the resized binary back to a
     payload column in the same batch shape."""
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
-    payloads = d.select(
-        "doc_id", F.encode(F.col("text"), "utf-8").alias("payload")
-    )
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "doc_id": [],
-                "orig_len": [],
-                "resized_len": [],
-                "resized_md5": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                text = bytes(payload).decode("utf-8")  # the "decode" stage
-                resized = text[::RESIZE_STRIDE]
-                out["doc_id"].append(doc_id)
-                out["orig_len"].append(len(text))
-                out["resized_len"].append(len(resized))
-                out["resized_md5"].append(
-                    hashlib.md5(resized.encode("utf-8")).hexdigest()
-                )
-            yield pd.DataFrame(out)
-
-    return payloads.mapInPandas(
-        resize,
-        schema="doc_id long, orig_len long, resized_len long, "
-        "resized_md5 string",
+    return _payload_rows(
+        _utf8_payloads(spark, sf_dir),
+        _resize_payload,
+        "doc_id long, orig_len long, resized_len long, resized_md5 string",
     )
 
 
@@ -7801,9 +7626,7 @@ def q_hybrid_search_rrf(spark, sf_dir):
         .filter(F.col("cand_id") != F.col("query_id"))
         .select(
             "cand_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_sim"),
+            _cos(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos_sim"),
         )
     )
     dense = (
@@ -7872,6 +7695,16 @@ EXT_ORACLES["hybrid_search_rrf"] = ORACLE_HYBRID_SEARCH_RRF
 AUDIO_WINDOW_SAMPLES = 16  # tumbling energy-window width
 
 
+def _decode_wav_windows(doc_id, buf: bytes):
+    _, s = _wav_samples(doc_id, buf)
+    W = AUDIO_WINDOW_SAMPLES
+    segs = [s[k * W : (k + 1) * W] for k in range((len(s) + W - 1) // W)]
+    return [
+        (doc_id, k, len(seg), int(np.abs(seg).sum()), int((seg * seg).sum()))
+        for k, seg in enumerate(segs)
+    ]
+
+
 def q_audio_energy_windows(spark, sf_dir):
     """AUDIO ENERGY PROFILE: tumbling 16-sample windows over the
     decoded PCM stream, emitting Σ|s| and Σs² per window — the
@@ -7886,63 +7719,12 @@ def q_audio_energy_windows(spark, sf_dir):
     shuffle); the analytic oracle recomputes every window from the
     generator formula, so any sample-indexing mistake (window offsets,
     last-partial-window length) breaks the hash."""
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_wav_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        W = AUDIO_WINDOW_SAMPLES
-        for pdf in batches:
-            ids, wins, cnts, sabs, energy = [], [], [], [], []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(buf)
-                if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                    raise ValueError(f"doc {doc_id}: not a WAV payload")
-                pos, bits, channels, data = 12, None, None, None
-                while pos + 8 <= len(buf):
-                    cid = buf[pos : pos + 4]
-                    sz = struct.unpack_from("<I", buf, pos + 4)[0]
-                    if cid == b"fmt ":
-                        fmt_code, channels, _, _, _, bits = struct.unpack_from(
-                            "<HHIIHH", buf, pos + 8
-                        )
-                        if fmt_code != 1:
-                            raise ValueError(f"doc {doc_id}: not PCM")
-                    elif cid == b"data":
-                        data = buf[pos + 8 : pos + 8 + sz]
-                    pos += 8 + sz + (sz & 1)
-                if data is None or bits != 16 or channels != 1:
-                    raise ValueError(f"doc {doc_id}: unsupported WAV layout")
-                s = np.frombuffer(data, dtype="<i2").astype(np.int64)
-                for k in range((len(s) + W - 1) // W):
-                    seg = s[k * W : (k + 1) * W]
-                    ids.append(doc_id)
-                    wins.append(k)
-                    cnts.append(len(seg))
-                    sabs.append(int(np.abs(seg).sum()))
-                    energy.append(int((seg * seg).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "win": wins,
-                    "n_in_win": cnts,
-                    "sum_abs": sabs,
-                    "energy": energy,
-                }
-            )
-
-    payloads = d.mapInPandas(encode, schema="doc_id long, payload binary")
-    return payloads.mapInPandas(
-        decode,
-        schema="doc_id long, win long, n_in_win long, sum_abs long, "
-        "energy long",
+    return _codec_roundtrip(
+        spark,
+        sf_dir,
+        _wav_bytes,
+        _decode_wav_windows,
+        "doc_id long, win long, n_in_win long, sum_abs long, energy long",
     )
 
 
@@ -8034,6 +7816,33 @@ def _avi_bytes(doc_id: int) -> bytes:
     return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
+def _decode_avi(doc_id, buf: bytes):
+    if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
+        raise ValueError(f"doc {doc_id}: not an AVI payload")
+    w = h = nf = None
+    frames = []
+    for cid, off, sz in _riff_chunks(buf, 12, len(buf)):
+        if cid != b"LIST":
+            continue
+        ltype = buf[off : off + 4]
+        for icid, ioff, isz in _riff_chunks(buf, off + 4, off + sz):
+            if ltype == b"hdrl" and icid == b"avih":
+                nf = struct.unpack_from("<I", buf, ioff + 16)[0]
+                w, h = struct.unpack_from("<II", buf, ioff + 32)
+            elif ltype == b"movi" and icid == b"00db":
+                frames.append((ioff, isz))
+    if w is None or nf is None or len(frames) != nf:
+        raise ValueError(f"doc {doc_id}: malformed AVI")
+    out = []
+    for f, (off, fsz) in enumerate(frames):
+        if f % AVI_SAMPLE_EVERY:
+            continue  # sampling: skip pixel decode entirely
+        if fsz != (w * 3 + 3) // 4 * 4 * h:
+            raise ValueError(f"doc {doc_id}: bad frame size")
+        out.append((doc_id, f, w, h, _luma(_dib_rgb(buf, off, w, h))))
+    return out
+
+
 def q_multimodal_decode_avi(spark, sf_dir):
     """VIDEO FRAME-SAMPLE over a binary column — completes the
     image (``multimodal_decode_bmp``) / audio (``multimodal_decode_wav``)
@@ -8053,90 +7862,12 @@ def q_multimodal_decode_avi(spark, sf_dir):
     100 TB notes: both stages stay map-only Arrow-batched passes over
     the binary column — no shuffle; a real corpus swaps the encode
     stage for a parquet binary read, demux unchanged."""
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_avi_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, fidx, widths, heights, luma = [], [], [], [], []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(buf)
-                if buf[:4] != b"RIFF" or buf[8:12] != b"AVI ":
-                    raise ValueError(f"doc {doc_id}: not an AVI payload")
-                w = h = nf = None
-                frames = []
-                pos = 12
-                while pos + 8 <= len(buf):
-                    cid = buf[pos : pos + 4]
-                    sz = struct.unpack_from("<I", buf, pos + 4)[0]
-                    if cid == b"LIST":
-                        ltype = buf[pos + 8 : pos + 12]
-                        if ltype == b"hdrl":
-                            ip = pos + 12
-                            end = pos + 8 + sz
-                            while ip + 8 <= end:
-                                icid = buf[ip : ip + 4]
-                                isz = struct.unpack_from("<I", buf, ip + 4)[0]
-                                if icid == b"avih":
-                                    nf, w, h = struct.unpack_from(
-                                        "<I", buf, ip + 8 + 16
-                                    )[0], *struct.unpack_from("<II", buf, ip + 8 + 32)
-                                ip += 8 + isz + (isz & 1)
-                        elif ltype == b"movi":
-                            ip = pos + 12
-                            end = pos + 8 + sz
-                            while ip + 8 <= end:
-                                icid = buf[ip : ip + 4]
-                                isz = struct.unpack_from("<I", buf, ip + 4)[0]
-                                if icid == b"00db":
-                                    frames.append((ip + 8, isz))
-                                ip += 8 + isz + (isz & 1)
-                    pos += 8 + sz + (sz & 1)
-                if w is None or nf is None or len(frames) != nf:
-                    raise ValueError(f"doc {doc_id}: malformed AVI")
-                stride = (w * 3 + 3) // 4 * 4
-                for f, (off, fsz) in enumerate(frames):
-                    if f % AVI_SAMPLE_EVERY:
-                        continue  # sampling: skip pixel decode entirely
-                    if fsz != stride * h:
-                        raise ValueError(f"doc {doc_id}: bad frame size")
-                    arr = np.frombuffer(
-                        buf, dtype=np.uint8, count=fsz, offset=off
-                    ).reshape(h, stride)
-                    pix = arr[:, : w * 3].reshape(h, w, 3)[::-1]  # top-down
-                    b_, g_, r_ = (
-                        pix[..., 0].astype(np.int64),
-                        pix[..., 1].astype(np.int64),
-                        pix[..., 2].astype(np.int64),
-                    )
-                    ids.append(doc_id)
-                    fidx.append(f)
-                    widths.append(w)
-                    heights.append(h)
-                    luma.append(int((299 * r_ + 587 * g_ + 114 * b_).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame_idx": fidx,
-                    "width": widths,
-                    "height": heights,
-                    "luma_milli": luma,
-                }
-            )
-
-    payloads = d.mapInPandas(encode, schema="doc_id long, payload binary")
-    return payloads.mapInPandas(
-        decode,
-        schema="doc_id long, frame_idx long, width long, height long, "
-        "luma_milli long",
+    return _codec_roundtrip(
+        spark,
+        sf_dir,
+        _avi_bytes,
+        _decode_avi,
+        "doc_id long, frame_idx long, width long, height long, luma_milli long",
     )
 
 
@@ -9667,8 +9398,6 @@ def q_label_propagation(spark, sf_dir):
     + (node, label) count + per-node argmax window (high-cardinality
     partition key → parallel). At 100 TB each round would
     parquet-round-trip like connected_components."""
-    from pyspark.sql import Window
-
     pairs = _lsh_edges(spark, sf_dir)
     ed = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -9684,9 +9413,7 @@ def q_label_propagation(spark, sf_dir):
         .distinct()
         .select(F.col("src").alias("node"), F.col("src").alias("lab"))
     )
-    w = Window.partitionBy("dst").orderBy(
-        F.col("cnt").desc(), F.col("lab").asc()
-    )
+    order = [F.col("cnt").desc(), F.col("lab").asc()]
     for _ in range(LPA_ROUNDS):
         c = (
             ed.join(labels, ed["src"] == labels["node"])
@@ -9694,10 +9421,8 @@ def q_label_propagation(spark, sf_dir):
             .groupBy("dst", "lab")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = (
-            c.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("dst").alias("node"), "lab")
+        labels = top_k_per_group(c, "dst", order, 1).select(
+            F.col("dst").alias("node"), "lab"
         )
     return labels.select(
         F.col("node").alias("doc_id"), F.col("lab").alias("community")
@@ -9770,7 +9495,7 @@ def q_bm25_dense_rerank(spark, sf_dir):
         .select(
             "doc_id",
             "bm25",
-            F.round(_dot(F.col("cv"), qlit) / (F.col("cn") * F.lit(qn)), 6).alias(
+            _cos(F.col("cv"), qlit, F.col("cn"), F.lit(qn)).alias(
                 "cos_q"
             ),
         )
@@ -10296,13 +10021,8 @@ def q_embedding_matryoshka_agreement(spark, sf_dir):
         .select(
             "query_id",
             "cand_id",
-            F.round(
-                _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
-            ).alias("cos_full"),
-            F.round(
-                _dot(F.col("qh"), F.col("ch")) / (F.col("qhn") * F.col("chn")),
-                6,
-            ).alias("cos_half"),
+            _cos(F.col("qv"), F.col("cv"), F.col("qn"), F.col("cn")).alias("cos_full"),
+            _cos(F.col("qh"), F.col("ch"), F.col("qhn"), F.col("chn")).alias("cos_half"),
         )
     )
     wf = Window.partitionBy("query_id").orderBy(
@@ -11366,12 +11086,9 @@ def q_changepoint_cusum(spark, sf_dir):
             F.col("n_days") * F.col("prefix") - F.col("d_idx") * F.col("total"),
         )
     )
-    wpick = Window.partitionBy("event_type").orderBy(
-        F.abs(F.col("s_scaled")).desc(), F.col("day").asc()
-    )
+    pick = [F.abs(F.col("s_scaled")).desc(), F.col("day").asc()]
     return (
-        scored.withColumn("__rk", F.row_number().over(wpick))
-        .filter(F.col("__rk") == 1)
+        top_k_per_group(scored, "event_type", pick, 1, "__rk")
         .select(
             "event_type",
             F.col("day").alias("change_day"),
@@ -11496,8 +11213,6 @@ def _png_bytes(doc_id: int) -> bytes:
     concatenate), per-row filter bytes — type 0 (None) on even rows,
     type 1 (Sub) on odd rows so a decoder that skips unfiltering
     produces wrong pixels — and real CRC-32s on every chunk."""
-    import zlib
-
     w, h = _png_width_height(doc_id)
 
     def chunk(typ: bytes, data: bytes) -> bytes:
@@ -11532,6 +11247,39 @@ def _png_bytes(doc_id: int) -> bytes:
     )
 
 
+def _decode_png(doc_id, buf: bytes):
+    if buf[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError(f"doc {doc_id}: not a PNG payload")
+    pos, idat, w = 8, b"", None
+    while pos < len(buf):
+        (ln,) = struct.unpack_from(">I", buf, pos)
+        typ = buf[pos + 4 : pos + 8]
+        data = buf[pos + 8 : pos + 8 + ln]
+        (crc,) = struct.unpack_from(">I", buf, pos + 8 + ln)
+        if zlib.crc32(typ + data) & 0xFFFFFFFF != crc:
+            raise ValueError(f"doc {doc_id}: CRC mismatch in {typ!r}")
+        if typ == b"IHDR":
+            w, h, depth, ctype, _, _, ilace = struct.unpack(">IIBBBBB", data)
+            if (depth, ctype, ilace) != (8, 2, 0):
+                raise ValueError(f"doc {doc_id}: unsupported PNG variant")
+        elif typ == b"IDAT":
+            idat += data
+        elif typ == b"IEND":
+            break
+        pos += 12 + ln
+    rows = np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(h, 1 + w * 3)
+    pix = np.empty((h, w * 3), dtype=np.uint8)
+    for y in range(h):
+        filt, row = rows[y, 0], rows[y, 1:].copy()
+        if filt == 1:  # Sub: add the byte one pixel left
+            for i in range(3, len(row)):
+                row[i] = (int(row[i]) + int(row[i - 3])) % 256
+        elif filt != 0:
+            raise ValueError(f"doc {doc_id}: filter {filt}")
+        pix[y] = row
+    return [(doc_id, w, h, w * h, _luma(pix.reshape(h, w, 3).astype(np.int64)))]
+
+
 def q_multimodal_decode_png(spark, sf_dir):
     """COMPRESSED-IMAGE DECODE over a binary column: encodes a real
     PNG per document (DEFLATE-compressed scanlines split across two
@@ -11549,88 +11297,12 @@ def q_multimodal_decode_png(spark, sf_dir):
 
     100 TB notes: two map-only Arrow-batched passes, no shuffle; a
     real corpus swaps the encode stage for a parquet binary read."""
-    import zlib
-
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_png_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, widths, heights, npix, luma = [], [], [], [], []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(buf)
-                if buf[:8] != b"\x89PNG\r\n\x1a\n":
-                    raise ValueError(f"doc {doc_id}: not a PNG payload")
-                pos, idat, w = 8, b"", None
-                while pos < len(buf):
-                    (ln,) = struct.unpack_from(">I", buf, pos)
-                    typ = buf[pos + 4 : pos + 8]
-                    data = buf[pos + 8 : pos + 8 + ln]
-                    (crc,) = struct.unpack_from(">I", buf, pos + 8 + ln)
-                    if zlib.crc32(typ + data) & 0xFFFFFFFF != crc:
-                        raise ValueError(f"doc {doc_id}: CRC mismatch in {typ!r}")
-                    if typ == b"IHDR":
-                        w, h, depth, ctype, _, _, ilace = struct.unpack(
-                            ">IIBBBBB", data
-                        )
-                        if (depth, ctype, ilace) != (8, 2, 0):
-                            raise ValueError(
-                                f"doc {doc_id}: unsupported PNG variant"
-                            )
-                    elif typ == b"IDAT":
-                        idat += data
-                    elif typ == b"IEND":
-                        break
-                    pos += 12 + ln
-                raw = zlib.decompress(idat)
-                stride = 1 + w * 3
-                rows = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride)
-                pix = np.empty((h, w * 3), dtype=np.uint8)
-                for y in range(h):
-                    filt, row = rows[y, 0], rows[y, 1:].copy()
-                    if filt == 1:  # Sub: add the byte one pixel left
-                        for i in range(3, len(row)):
-                            row[i] = (int(row[i]) + int(row[i - 3])) % 256
-                    elif filt != 0:
-                        raise ValueError(f"doc {doc_id}: filter {filt}")
-                    pix[y] = row
-                rgb = pix.reshape(h, w, 3).astype(np.int64)
-                out_ids.append(doc_id)
-                widths.append(w)
-                heights.append(h)
-                npix.append(w * h)
-                luma.append(
-                    int(
-                        (
-                            299 * rgb[..., 0]
-                            + 587 * rgb[..., 1]
-                            + 114 * rgb[..., 2]
-                        ).sum()
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_ids,
-                    "width": widths,
-                    "height": heights,
-                    "n_pixels": npix,
-                    "luma_milli": luma,
-                }
-            )
-
-    payloads = d.mapInPandas(encode, schema="doc_id long, payload binary")
-    return payloads.mapInPandas(
-        decode,
-        schema="doc_id long, width long, height long, n_pixels long, "
-        "luma_milli long",
+    return _codec_roundtrip(
+        spark,
+        sf_dir,
+        _png_bytes,
+        _decode_png,
+        "doc_id long, width long, height long, n_pixels long, luma_milli long",
     )
 
 
@@ -11984,6 +11656,14 @@ def _jpeg_decode(buf: bytes, want: str = "pixels"):
     return w, h, pixels
 
 
+def _decode_jpeg(doc_id, buf: bytes):
+    w, h, pix = _jpeg_decode(buf)
+    # per-block reconstructed DC (top-left sample − 128): its energy
+    # pins every block independently of the sum
+    ks = pix[::8, ::8].astype(np.int64) - 128
+    return [(doc_id, w, h, w * h, int(pix.astype(np.int64).sum()), int((ks * ks).sum()))]
+
+
 def q_multimodal_decode_jpeg(spark, sf_dir):
     """JPEG BASELINE DECODE over a binary column: encodes one real
     SOF0 grayscale JPEG per document (canonical-Huffman entropy scan,
@@ -12006,46 +11686,12 @@ def q_multimodal_decode_jpeg(spark, sf_dir):
     per-row cost is the decoder itself — on a real corpus the encode
     stage is a parquet binary read and this operator is
     embarrassingly parallel."""
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_jpeg_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, np_, psum, den = [], [], [], [], [], []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, pix = _jpeg_decode(bytes(buf))
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                np_.append(w * h)
-                psum.append(int(pix.astype(np.int64).sum()))
-                # per-block reconstructed DC (top-left sample − 128):
-                # its energy pins every block independently of the sum
-                ks = pix[::8, ::8].astype(np.int64) - 128
-                den.append(int((ks * ks).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": ws,
-                    "height": hs,
-                    "n_pixels": np_,
-                    "pixel_sum": psum,
-                    "dc_energy": den,
-                }
-            )
-
-    payloads = d.mapInPandas(encode, schema="doc_id long, payload binary")
-    return payloads.mapInPandas(
-        decode,
-        schema="doc_id long, width long, height long, n_pixels long, "
+    return _codec_roundtrip(
+        spark,
+        sf_dir,
+        _jpeg_bytes,
+        _decode_jpeg,
+        "doc_id long, width long, height long, n_pixels long, "
         "pixel_sum long, dc_energy long",
     )
 
@@ -12488,9 +12134,7 @@ def _dbscan_compute(spark, sf_dir):
     )
     va = _vectors(spark, sf_dir, "ia", "va", "na_").drop("label")
     vb = _vectors(spark, sf_dir, "ib", "vb", "nb_").drop("label")
-    cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (F.col("na_") * F.col("nb_")), 6
-    )
+    cos = _cos(F.col("va"), F.col("vb"), F.col("na_"), F.col("nb_"))
     from pyspark.storagelevel import StorageLevel
 
     pairs = (
@@ -12677,9 +12321,7 @@ def q_mmr_diverse_rerank(spark, sf_dir):
     pairs_lit = spark.createDataFrame(pair_rows, "ia long, ib long")
     va = _vectors(spark, sf_dir, "ia", "va", "na_").drop("label")
     vb = _vectors(spark, sf_dir, "ib", "vb", "nb_").drop("label")
-    cos = F.round(
-        _dot(F.col("va"), F.col("vb")) / (F.col("na_") * F.col("nb_")), 6
-    )
+    cos = _cos(F.col("va"), F.col("vb"), F.col("na_"), F.col("nb_"))
     sim_rows = (
         pairs_lit.join(va.withColumnRenamed("ia", "__a"),
                        F.col("ia") == F.col("__a"), "left")
@@ -13256,6 +12898,36 @@ def _gif_bytes(doc_id: int) -> bytes:
 _gif_bytes.__doc__ = _gif_bytes.__doc__.format(ce=GIF_CLEAR_EVERY)
 
 
+def _decode_gif(doc_id, buf: bytes):
+    if buf[:6] != b"GIF87a":
+        raise ValueError(f"doc {doc_id}: not a GIF87a payload")
+    packed = buf[10]
+    if not packed & 0x80:
+        raise ValueError(f"doc {doc_id}: no global color table")
+    n_colors = 2 << (packed & 0x07)
+    pos = 13
+    pal = [tuple(buf[pos + 3 * c : pos + 3 * c + 3]) for c in range(n_colors)]
+    pos += 3 * n_colors
+    if buf[pos] != 0x2C:
+        raise ValueError(f"doc {doc_id}: expected image descriptor")
+    iw, ih = struct.unpack_from("<HH", buf, pos + 5)
+    if buf[pos + 9] & 0xC0:
+        raise ValueError(f"doc {doc_id}: unsupported GIF variant")
+    min_code = buf[pos + 10]
+    pos += 11
+    comp = bytearray()
+    while ln := buf[pos]:
+        comp += buf[pos + 1 : pos + 1 + ln]
+        pos += 1 + ln
+    if buf[pos + 1] != 0x3B:
+        raise ValueError(f"doc {doc_id}: missing trailer")
+    idx = _lzw_decode_gif(bytes(comp), min_code)
+    if len(idx) != iw * ih:
+        raise ValueError(f"doc {doc_id}: decoded {len(idx)} != {iw * ih} px")
+    rgb = np.array([pal[i] for i in idx], dtype=np.int64)
+    return [(doc_id, iw, ih, iw * ih, _luma(rgb))]
+
+
 def q_multimodal_decode_gif(spark, sf_dir):
     """GIF87a DECODE over a binary column: encodes a real GIF per
     document (16-color global palette, LZW variable-width codes with
@@ -13273,85 +12945,12 @@ def q_multimodal_decode_gif(spark, sf_dir):
 
     100 TB notes: two map-only Arrow-batched passes, no shuffle; a
     real corpus swaps the encode stage for a parquet binary read."""
-    d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [_gif_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, widths, heights, npix, luma = [], [], [], [], []
-            for doc_id, buf in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(buf)
-                if buf[:6] != b"GIF87a":
-                    raise ValueError(f"doc {doc_id}: not a GIF87a payload")
-                w, h = struct.unpack_from("<HH", buf, 6)
-                packed = buf[10]
-                if not packed & 0x80:
-                    raise ValueError(f"doc {doc_id}: no global color table")
-                n_colors = 2 << (packed & 0x07)
-                pos = 13
-                pal = [
-                    tuple(buf[pos + 3 * c : pos + 3 * c + 3])
-                    for c in range(n_colors)
-                ]
-                pos += 3 * n_colors
-                if buf[pos] != 0x2C:
-                    raise ValueError(f"doc {doc_id}: expected image descriptor")
-                iw, ih = struct.unpack_from("<HH", buf, pos + 5)
-                if buf[pos + 9] & 0xC0:
-                    raise ValueError(f"doc {doc_id}: unsupported GIF variant")
-                pos += 10
-                min_code = buf[pos]
-                pos += 1
-                comp = bytearray()
-                while True:
-                    ln = buf[pos]
-                    pos += 1
-                    if ln == 0:
-                        break
-                    comp += buf[pos : pos + ln]
-                    pos += ln
-                if buf[pos] != 0x3B:
-                    raise ValueError(f"doc {doc_id}: missing trailer")
-                idx = _lzw_decode_gif(bytes(comp), min_code)
-                if len(idx) != iw * ih:
-                    raise ValueError(
-                        f"doc {doc_id}: decoded {len(idx)} != {iw * ih} px"
-                    )
-                rgb = np.array([pal[i] for i in idx], dtype=np.int64)
-                out_ids.append(doc_id)
-                widths.append(iw)
-                heights.append(ih)
-                npix.append(iw * ih)
-                luma.append(
-                    int(
-                        (
-                            299 * rgb[:, 0] + 587 * rgb[:, 1] + 114 * rgb[:, 2]
-                        ).sum()
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "doc_id": out_ids,
-                    "width": widths,
-                    "height": heights,
-                    "n_pixels": npix,
-                    "luma_milli": luma,
-                }
-            )
-
-    payloads = d.mapInPandas(encode, schema="doc_id long, payload binary")
-    return payloads.mapInPandas(
-        decode,
-        schema="doc_id long, width long, height long, n_pixels long, "
-        "luma_milli long",
+    return _codec_roundtrip(
+        spark,
+        sf_dir,
+        _gif_bytes,
+        _decode_gif,
+        "doc_id long, width long, height long, n_pixels long, luma_milli long",
     )
 
 

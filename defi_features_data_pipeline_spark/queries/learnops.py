@@ -36,6 +36,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.ranking import top_k_per_group
 from .core import D2D_SQL
 from .extensions import H_SQL, TOKENS_DUCK, TOKENS_SPARK, _h, _spread, _t
 
@@ -2884,14 +2885,9 @@ def q_naive_bayes_langid(spark, sf_dir):
         .join(F.broadcast(prior), F.col("lang_cand") == F.col("p_lang"))
         .withColumn("score", F.col("s") + F.col("prior").cast("decimal(38,10)"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("score").desc(), F.col("lang_cand").asc()
-    )
+    order = [F.col("score").desc(), F.col("lang_cand").asc()]
     return (
-        scores.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        top_k_per_group(scores, "doc_id", order, 1, "__rn")
         .select(
             "doc_id",
             "lang_true",

@@ -69,6 +69,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..operators.ranking import top_k_per_group
 from .core import _davg, davg_sql
 from .extensions import _spread, _t
 
@@ -1043,8 +1044,6 @@ def q_crawl_budget_waves(spark, sf_dir):
     NOT used here; it exists for the opposite shape (5 languages over
     100 TB). AQE skew-split handles mega-hosts. rank/wave cast to
     BIGINT to match the window dialect of the oracle."""
-    from pyspark.sql import Window
-
     b, w_max = CRAWL_BUDGET_PER_WAVE, CRAWL_MAX_WAVES
     d = _docs_with_url(spark, sf_dir)
     hosts = (
@@ -1065,12 +1064,10 @@ def q_crawl_budget_waves(spark, sf_dir):
         .withColumn("__q", F.least(F.col("n_chars"), F.lit(400)))
         .select("doc_id", "host", "__q")
     )
-    win = Window.partitionBy("host").orderBy(
-        F.col("__q").desc(), F.col("doc_id").asc()
-    )
+    order = [F.col("__q").desc(), F.col("doc_id").asc()]
     return (
-        hosts.withColumn("host_rank", F.row_number().over(win).cast("long"))
-        .filter(F.col("host_rank") <= b * w_max)
+        top_k_per_group(hosts, "host", order, b * w_max, "host_rank", keep_rank=True)
+        .withColumn("host_rank", F.col("host_rank").cast("long"))
         .withColumn(
             "wave", F.expr(f"CAST((host_rank - 1) div {b} AS BIGINT)")
         )

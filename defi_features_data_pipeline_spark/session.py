@@ -15,18 +15,16 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _default_local_dir() -> str:
+def _default_local_dir() -> str | None:
     """Scratch dir when SPARK_GRAFT_LOCAL_DIR is unset: the checkout
     root when this package sits inside a git checkout (the one
     location with observed multi-hour file longevity on this box),
-    else the stdlib tempdir (a site-packages install must not write
-    scratch next to site-packages)."""
+    else None — Spark then uses java.io.tmpdir, where it creates and
+    removes its own blockmgr-*/spark-* dirs."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if os.path.isdir(os.path.join(repo, ".git")):
         return os.path.join(repo, ".spark_scratch")
-    import tempfile
-
-    return os.path.join(tempfile.gettempdir(), "spark_graft_scratch")
+    return None
 
 
 def get_spark(
@@ -85,15 +83,13 @@ def get_spark(
         # The repo tree is the one location with observed multi-hour
         # file longevity (testdata_scale/ persists across the whole
         # round), so scratch now defaults INSIDE the repo, gitignored.
-        # That rationale only holds for a git-checkout layout — in a
-        # site-packages install the __file__-relative path would land
-        # scratch next to site-packages, so fall back to the stdlib
-        # tempdir there (SPARK_GRAFT_LOCAL_DIR overrides either way).
-        .config(
-            "spark.local.dir",
-            os.environ.get("SPARK_GRAFT_LOCAL_DIR", _default_local_dir()),
-        )
+        # That rationale only holds for a git-checkout layout; anywhere
+        # else Spark's own default applies (SPARK_GRAFT_LOCAL_DIR
+        # overrides either way).
     )
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR") or _default_local_dir()
+    if local_dir:
+        builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

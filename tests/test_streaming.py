@@ -322,9 +322,6 @@ def test_bitmap_distinct_invariant_to_microbatching(spark, tmp_path):
     (maxFilesPerTrigger=1 with duplicate users split across batches)
     — OR is commutative/associative/idempotent, so any batch slicing
     yields the same store."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from defi_features_data_pipeline_spark.operators.sketches import (
@@ -342,7 +339,7 @@ def test_bitmap_distinct_invariant_to_microbatching(spark, tmp_path):
         ).write.mode("append").parquet(src)
     schema = spark.read.parquet(src).schema
     ev = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    root = os.path.join(tempfile.mkdtemp(prefix="bm_inv_"), "bitmaps")
+    root = str(tmp_path / "bitmaps")
     sink = bitmap_or_merge_sink(spark, root, ["event_type"], "user_id")
     q = ev.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
     q.awaitTermination(120)
