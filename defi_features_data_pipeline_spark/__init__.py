@@ -10,19 +10,20 @@ analysis, multimodal plumbing) a 100 TB pipeline needs.
 Layout
 ------
 - ``session``    SparkSession factory (AQE, Arrow, UTC, tuned shuffle).
-- ``sources``    table catalog over Parquet dirs; sinks (partitioned
-                 append, CTAS, overwrite, key-upsert).
+- ``sources``    table catalog over Parquet dirs; sinks (incremental
+                 append, key-upsert); the raw-layer API extractors.
 - ``operators``  reusable relational operators the reference composes in
                  SQL: as-of join, latest-per-group, disjunctive join,
-                 union-distinct spine, incremental watermark append —
-                 plus dedup / similarity / multimodal extensions.
+                 union-distinct spine — plus dedup / similarity /
+                 multimodal extensions.
 - ``functions``  scalar expression helpers (address normalization, epoch
                  math, clamp ladders, text analysis).
 - ``pipelines``  the DeFi feature pipeline itself (stage → analytics →
                  features → data-quality), mirroring the reference's SQL
                  semantics 1:1 (file:line cited in each docstring).
 - ``streaming``  Structured-Streaming variants of the incremental layer.
-- ``plans``      plan-inspection helpers (assert broadcast, pushdown).
+- ``plans``      plan-inspection helpers (explain text, corpus-broadcast
+                 audit).
 """
 
 __version__ = "0.1.0"

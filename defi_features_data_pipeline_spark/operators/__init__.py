@@ -11,7 +11,6 @@ from .ranking import (
 )
 from .sets import union_distinct
 from .skew import salted_join
-from .incremental import high_watermark
 from .interval import point_in_interval_join
 
 __all__ = [
@@ -27,6 +26,5 @@ __all__ = [
     "top_k_per_group",
     "union_distinct",
     "salted_join",
-    "high_watermark",
     "point_in_interval_join",
 ]

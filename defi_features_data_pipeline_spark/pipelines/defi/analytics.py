@@ -172,16 +172,3 @@ def current_collateral_positions(
         .withColumn("balance", F.col("balance").cast("double"))
         .withColumn("is_collateral", F.col("is_collateral").cast("boolean"))
     )
-
-
-def daily_first_blocks(blocks: DataFrame) -> DataFrame:
-    """`src/pipelines/utils.py:35-44`: MIN(number) per UTC day."""
-    return (
-        blocks.groupBy(
-            F.date_format("timestamp", "yy").alias("year"),
-            F.date_format("timestamp", "MM").alias("month"),
-            F.date_format("timestamp", "dd").alias("day"),
-        )
-        .agg(F.min("number").alias("block_number"))
-        .orderBy("year", "month", "day")
-    )

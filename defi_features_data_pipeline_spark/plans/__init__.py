@@ -1,3 +1,3 @@
-from .inspect import explain_str, has_broadcast_join, pushed_filters
+from .inspect import explain_str
 
-__all__ = ["explain_str", "has_broadcast_join", "pushed_filters"]
+__all__ = ["explain_str"]

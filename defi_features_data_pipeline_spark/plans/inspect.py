@@ -15,20 +15,6 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     )
 
 
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in explain_str(df)
-
-
-def pushed_filters(df: DataFrame) -> list[str]:
-    """PushedFilters lines from the formatted plan (parquet scans)."""
-    out = []
-    for line in explain_str(df).splitlines():
-        line = line.strip()
-        if line.startswith("PushedFilters:"):
-            out.append(line)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Corpus-broadcast audit — the structural form of the sf10 lesson
 # ---------------------------------------------------------------------------

@@ -1656,7 +1656,7 @@ CORE_ORACLES.update({
 
 def q_incremental_agg_equivalence(spark, sf_dir):
     """Incremental aggregate-view maintenance (S7 at the aggregate
-    level, `sources/maintenance.py::merge_incremental_aggregate`): the
+    level): the
     corpus split at a time cutoff into two increments, each partially
     aggregated, then folded — must equal the full recompute (the
     oracle). Decimal partials so the fold is order-independent."""

@@ -5007,7 +5007,7 @@ def q_incremental_join_equivalence(spark, sf_dir):
 
     100 TB notes: each maintenance cycle joins a small delta against
     the accumulated side instead of recomputing A⋈B — with both sides
-    bucketed by the join key (sources/bucketing.py) the three delta
+    bucketed by the join key (``bucketBy``) the three delta
     joins are shuffle-free on the accumulated side; the deltas
     broadcast. Aggregates fold through decimal partials, so the
     four-way union needs no global order."""
@@ -5575,7 +5575,7 @@ def q_cdc_snapshot_diff(spark, sf_dir):
     build identical snapshots and the diff is exactly reproducible.
 
     100 TB: the diff shuffles each snapshot once on the key (or zero
-    times if both versions are bucketed on it — sources/bucketing.py);
+    times if both versions are bucketed on it with ``bucketBy``);
     unchanged rows are dropped BEFORE the output projection, so the
     result is proportional to the churn, not the table.
 
@@ -7437,20 +7437,15 @@ def q_zorder_cells(spark, sf_dir):
     """Z-ORDER CLUSTERING KEY, hash-gated: rank-bucketize (user_id, ts)
     into 2^6 equal-frequency buckets each (deterministic total order —
     ties broken by event_id), Morton-interleave the bucket ids
-    (``sources.layout.interleave_bits`` — the k=2 bit layout
-    ``write_zordered`` clusters files by), and aggregate per top-8-bit
+    (``sources.layout.interleave_bits``), and aggregate per top-8-bit
     curve cell. The oracle reproduces the bit arithmetic integer-for-
-    integer in DuckDB, so the gate pins the interleave itself; the
-    LAYOUT effect (tight per-file min/max in both dimensions, files
-    skipped under 2-D predicate boxes) is measured from real parquet
-    footers in tests/test_layout.py.
+    integer in DuckDB, so the gate pins the interleave itself.
 
-    The equal-FREQUENCY bucketing here complements ``zorder_code``'s
-    min/max normalization: rank buckets are skew-robust (a hot key
-    cannot capture every cell), at the cost of a global window — at
-    real scale swap in approxQuantile-derived boundaries (one pass, no
-    window) with the same interleave downstream. The aggregate is
-    map-side combinable on a 64-bit key."""
+    Equal-FREQUENCY buckets, unlike min/max normalization, are
+    skew-robust (a hot key cannot capture every cell), at the cost of
+    a global window — at real scale swap in approxQuantile-derived
+    boundaries (one pass, no window) with the same interleave
+    downstream. The aggregate is map-side combinable on a 64-bit key."""
     from pyspark.sql import Window
 
     from ..sources.layout import interleave_bits
@@ -12282,7 +12277,6 @@ EXT_ORACLES["dbscan_clusters_blocked"] = ORACLE_DBSCAN_CLUSTERS_BLOCKED
 # ---------------------------------------------------------------------------
 
 MMR_K = 10          # results to select
-MMR_LAMBDA = 0.5    # exact 2^-1: relevance/diversity trade-off
 
 
 def q_mmr_diverse_rerank(spark, sf_dir):

@@ -400,7 +400,7 @@ def q_merge_apply_changes(spark, sf_dir):
     oracle is the identical FULL OUTER JOIN + CASE SQL.
 
     100 TB notes: one shuffle per side on the merge key (or zero for
-    the base if the snapshot is bucketed by key — sources/bucketing);
+    the base if the snapshot is bucketed by key with ``bucketBy``);
     the changeset is typically ≪ base and broadcasts. D-keys absent
     from base fall out via the same filter that drops matched-D —
     tombstones for never-seen keys are a no-op, not an error."""

@@ -1,18 +1,8 @@
-from .catalog import Catalog, MetastoreCatalog, load_testdata, register_testdata_views
-from .sinks import (
-    create_table_like,
-    incremental_insert,
-    upsert_parquet,
-    write_partitioned,
-)
+from .catalog import Catalog
+from .sinks import incremental_insert, upsert_parquet
 
 __all__ = [
     "Catalog",
-    "MetastoreCatalog",
-    "load_testdata",
-    "register_testdata_views",
-    "create_table_like",
     "incremental_insert",
     "upsert_parquet",
-    "write_partitioned",
 ]

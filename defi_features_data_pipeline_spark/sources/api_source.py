@@ -43,7 +43,6 @@ WINDOW_SECONDS = 86_400  # one partition per day of events
 # ingestion semantics pinned from the reference (r6 verdict item 7):
 MAX_RETRIES = 5  # `historical_market_data.py:19-37` (for i in range(0,5))
 MAX_TIMEWINDOW_DAYS = 10  # `config/settings.toml:10` MAX_TIMEWINDOW_DAYS
-NUMBER_OF_THREADS = 5  # `config/settings.toml:11` — fetch-concurrency bound
 
 
 def fetch_page(

@@ -3,10 +3,9 @@
 The reference organizes tables into medallion-layer databases on S3 +
 Glue (`/root/reference/README.md:121-143`; layer writes
 `src/pipelines/raw/defi_events.py:38-45`). Here a Catalog maps
-``(layer, table)`` to a Parquet path rooted at a base dir and registers
-Spark temp views; on a real cluster the base dir is an object-store
-prefix and the registration is `saveAsTable` into a metastore —
-the call sites don't change.
+``(layer, table)`` to a Parquet path rooted at a base dir; on a real
+cluster the base dir is an object-store prefix and the call sites
+don't change.
 """
 
 from __future__ import annotations
@@ -15,36 +14,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load the driver-generated TPC-H-ish tables from ``sf_dir``."""
-    return {
-        t: spark.read.parquet(os.path.join(sf_dir, f"{t}.parquet"))
-        for t in TESTDATA_TABLES
-    }
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load + register each table as a temp view named after itself."""
-    dfs = load_testdata(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs
-
-
 class Catalog:
     """Layered Parquet catalog: ``base/<layer>/<table>/`` directories.
 
@@ -52,8 +21,6 @@ class Catalog:
     (db_raw/db_stage/db_analytics/db_sandbox) without a metastore
     dependency; swap ``base`` for an object-store URI in production.
     """
-
-    LAYERS = ("raw", "stage", "analytics", "sandbox", "features")
 
     def __init__(self, spark: SparkSession, base: str):
         self.spark = spark
@@ -71,70 +38,3 @@ class Catalog:
 
     def read(self, layer: str, table: str) -> DataFrame:
         return self.spark.read.parquet(self.path(layer, table))
-
-    def write(
-        self,
-        df: DataFrame,
-        layer: str,
-        table: str,
-        mode: str = "append",
-        partition_by: list[str] | None = None,
-    ) -> None:
-        """Partitioned Parquet write (reference S5/S6/S8:
-        `src/pipelines/raw/defi_events.py:38-45`,
-        `src/pipelines/features/save_defi_features_datalake.py:45-53`)."""
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(layer, table))
-
-    def view(self, layer: str, table: str, view_name: str | None = None) -> DataFrame:
-        df = self.read(layer, table)
-        df.createOrReplaceTempView(view_name or table)
-        return df
-
-
-class MetastoreCatalog:
-    """Metastore-backed variant of Catalog: medallion layers as real
-    Spark catalog DATABASES (`CREATE DATABASE db_raw` ... — the SURVEY
-    §1.1 mapping of the reference's Glue databases), tables registered
-    via saveAsTable so they are queryable by name from SQL and show up
-    in ``spark.catalog``. Same read/write surface as the path Catalog."""
-
-    def __init__(self, spark: SparkSession, prefix: str = "db"):
-        self.spark = spark
-        self.prefix = prefix
-        for layer in Catalog.LAYERS:
-            spark.sql(f"CREATE DATABASE IF NOT EXISTS {self._db(layer)}")
-
-    def _db(self, layer: str) -> str:
-        return f"{self.prefix}_{layer}"
-
-    def qualified(self, layer: str, table: str) -> str:
-        return f"{self._db(layer)}.{table}"
-
-    def write(
-        self,
-        df: DataFrame,
-        layer: str,
-        table: str,
-        mode: str = "append",
-        partition_by: list[str] | None = None,
-        bucket_by: tuple[int, str] | None = None,
-    ) -> None:
-        w = df.write.mode(mode).format("parquet")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        if bucket_by:
-            n, col = bucket_by
-            w = w.bucketBy(n, col).sortBy(col)
-        w.saveAsTable(self.qualified(layer, table))
-
-    def read(self, layer: str, table: str) -> DataFrame:
-        return self.spark.table(self.qualified(layer, table))
-
-    def tables(self, layer: str) -> list[str]:
-        return [t.name for t in self.spark.catalog.listTables(self._db(layer))]
-
-    def drop(self, layer: str, table: str) -> None:
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.qualified(layer, table)}")

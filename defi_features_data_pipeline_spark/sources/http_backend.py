@@ -105,7 +105,8 @@ class SyntheticAPIServer:
                      PAGE_SIZE to force real multi-page offset loops).
 
     Telemetry (read after the run):
-      max_in_flight — peak number of concurrently open requests, the
+      max_in_flight — peak number of concurrently open requests (open
+                      from arrival until the response is ready), the
                       measured check on the reader's ``max_parallel``
                       concurrency bound;
       n_requests    — total requests served (including injected 500s).
@@ -138,39 +139,42 @@ class SyntheticAPIServer:
                     key = self.path + "|" + body.decode()
                     outer._attempts[key] = outer._attempts.get(key, 0) + 1
                     attempt = outer._attempts[key]
+                # the request counts as finished once its response is
+                # ready, before the first byte is written: a client's
+                # next request can only follow the last byte of this
+                # response, so a sequential client never overlaps itself
                 try:
-                    if attempt <= outer.fail_first:
-                        self.send_response(500)
-                        self.end_headers()
-                        self.wfile.write(b"injected failure")
-                        return
-                    p = json.loads(body)
-                    if self.path == "/query":
-                        rows = fetch_page(
-                            p["event"],
-                            p["window_start"],
-                            p["window_end"],
-                            p["offset"],
-                            p["limit"],
-                            per_window=outer.per_window,
-                        )
-                    elif self.path == "/positions":
-                        rows = fetch_positions(
-                            p["block_number"], p["last_id"], p["limit"]
-                        )
-                    else:
-                        self.send_response(404)
-                        self.end_headers()
-                        return
-                    out = json.dumps({"rows": rows}).encode()
-                    self.send_response(200)
-                    self.send_header("Content-Type", "application/json")
-                    self.send_header("Content-Length", str(len(out)))
-                    self.end_headers()
-                    self.wfile.write(out)
+                    status, out = self._respond(attempt, body)
                 finally:
                     with outer._lock:
                         outer._in_flight -= 1
+                self.send_response(status)
+                if status == 200:
+                    self.send_header("Content-Type", "application/json")
+                    self.send_header("Content-Length", str(len(out)))
+                self.end_headers()
+                self.wfile.write(out)
+
+            def _respond(self, attempt: int, body: bytes) -> tuple[int, bytes]:
+                if attempt <= outer.fail_first:
+                    return 500, b"injected failure"
+                p = json.loads(body)
+                if self.path == "/query":
+                    rows = fetch_page(
+                        p["event"],
+                        p["window_start"],
+                        p["window_end"],
+                        p["offset"],
+                        p["limit"],
+                        per_window=outer.per_window,
+                    )
+                elif self.path == "/positions":
+                    rows = fetch_positions(
+                        p["block_number"], p["last_id"], p["limit"]
+                    )
+                else:
+                    return 404, b""
+                return 200, json.dumps({"rows": rows}).encode()
 
         # port 0 = ephemeral: parallel test sessions never collide
         self._server = ThreadingHTTPServer(("127.0.0.1", 0), _Handler)

@@ -1,42 +1,20 @@
-"""Multi-dimensional data layout (Z-order) for parquet min/max skipping.
+"""Morton (Z-order) bit interleaving as a Spark column expression.
 
-The reference's only layout lever is its 256-way address bucketing
-(`/root/reference/src/pipelines/analytics/defi_events.py:123`), which
-clusters ONE key. At 100 TB the scan cost of a query filtered on a
-column you did NOT partition by is the whole table — unless the row
-groups are laid out so that every file covers a small range of EVERY
-filter column. That is what Z-ordering does: interleave the bits of k
-normalized columns into one Morton code, range-sort by it, and each
-output file becomes a k-dimensional tile; parquet footer min/max stats
-then prune files/row-groups for predicates on ANY of the k columns
-(the same idea behind OPTIMIZE ZORDER in lakehouse engines).
-
-All column math is plain Spark expressions (codegen); the only
-non-distributed step is one min/max aggregate per column (a scalar
-row to the driver) to normalize domains. The write is
-``repartitionByRange(z)`` + ``sortWithinPartitions(z)`` — a standard
-parallel range sort, no single-task stage.
-
-Trade-off encoded in the docstring rather than hidden: Z-order helps
-selective multi-column point/range predicates and costs nothing extra
-at write beyond the sort; for single-column access a plain sort on
-that column skips better.
+Interleaving the bits of two normalized columns into one code orders
+rows along a Z-curve, so rows close in BOTH columns get close codes.
+The ``zorder_cells`` gate aggregates per code prefix with this
+expression, and its DuckDB oracle reproduces the same integer
+arithmetic.
 """
 
 from __future__ import annotations
 
-import functools
-import operator
-
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
 
 def interleave_bits(x: "F.Column", y: "F.Column", bits: int) -> "F.Column":
     """Morton-interleave two non-negative ``bits``-bit ints: bit b of
-    ``x`` lands at position 2b, bit b of ``y`` at 2b+1 — exactly the
-    k=2 bit layout ``zorder_code`` produces (column i contributes bit b
-    at ``b*k+i``). Shared so the hash-gated ``zorder_cells`` query pins
-    the same integer arithmetic a DuckDB oracle reproduces. Pure
+    ``x`` lands at position 2b, bit b of ``y`` at 2b+1. Pure
     shift/mask expression; ``Column.bitwiseOR/AND`` because Python's
     ``&``/``|`` on Columns are logical operators."""
     if 2 * bits > 62:
@@ -53,63 +31,3 @@ def interleave_bits(x: "F.Column", y: "F.Column", bits: int) -> "F.Column":
             F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1)
         )
     return z
-
-
-def zorder_code(df: DataFrame, cols: list[str], bits: int = 8) -> "F.Column":
-    """Morton (Z-order) code column: each column min/max-normalized to
-    ``bits`` bits, bits interleaved (column i contributes bit b to
-    output position ``b * k + i``). Numeric columns only; NULLs map
-    to bucket 0 (sort first)."""
-    k = len(cols)
-    if k < 2:
-        raise ValueError("zorder needs >= 2 columns (use a plain sort for 1)")
-    if bits * k > 63:
-        raise ValueError(f"bits*cols = {bits * k} exceeds a signed 64-bit code")
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"mx_{c}") for c in cols],
-    ).collect()[0]
-    top = (1 << bits) - 1
-    parts = []
-    for i, c in enumerate(cols):
-        mn, mx = stats[f"mn_{c}"], stats[f"mx_{c}"]
-        if mn is None or mx is None:  # empty / all-NULL column: constant code
-            mn, mx = 0.0, 0.0
-        span = (mx - mn) or 1.0
-        norm = F.least(
-            F.lit(top),
-            F.greatest(
-                F.lit(0),
-                F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(span) * top),
-            ),
-        )
-        norm = F.coalesce(norm, F.lit(0)).cast("long")
-        for b in range(bits):
-            parts.append(
-                F.shiftleft(F.shiftright(norm, b).bitwiseAND(F.lit(1)), b * k + i)
-            )
-    # every part occupies a distinct bit, so + IS bitwise OR (and stays
-    # a plain long-typed expression; Column.__or__ is boolean)
-    return functools.reduce(operator.add, parts).alias("__z")
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as parquet tiled on ``cols``: range-partition and
-    sort by the Z-code so each file's min/max footer stats are tight
-    on every Z column."""
-    z = df.withColumn("__z", zorder_code(df, cols, bits))
-    n = n_files or max(df.rdd.getNumPartitions(), 8)
-    (
-        z.repartitionByRange(n, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -1,34 +1,13 @@
-"""Serving-sink adapters (S10): one upsert-by-key contract, two
-transports.
+"""Serving sink (S10): the upsert-by-key contract ``upsert(df) /
+read()``.
 
 The reference serves features by upserting into MongoDB keyed on
 ``walletAddress`` (`/root/reference/src/pipelines/features/
-save_defi_features_features_db.py:28-34,78-88`). The engine's contract
-is ``upsert(df) / read()``; the two implementations are:
-
-- ``ParquetServingSink`` — the hermetic default: manifest-pointer
-  upsert on any Hadoop filesystem (sinks.upsert_manifested), used by
-  every test and gate in this repo;
-- ``MongoServingSink`` — the mongo-spark-connector translation KNOWN
-  LIMITS §5 promised as "a drop-in at the same call site", now tested
-  code: ``upsert`` maps to one ``format("mongodb")`` write with
-  ``operationType=replace`` + ``idFieldList=<key>`` (document-replace
-  keyed by the business key — exactly the reference's
-  ``replace_one(upsert=True)`` loop, executed distributed by the
-  connector instead of row-at-a-time through pymongo), and ``read``
-  maps to the connector's partitioned scan.
-
-The option translation is PURE (``write_options()`` /
-``read_options()``), so the mapping is unit-tested without a server;
-the behavioral CONTRACT test (tests/test_serving_contract.py) runs the
-same suite against both sinks — parquet always, Mongo live when the
-environment provides a connector jar + a reachable server
-(``SPARK_GRAFT_MONGO_URI``), skipped otherwise.
-
-100 TB notes: the connector write is executor-parallel (one bulk
-writer per partition); key-partitioned upserts don't shuffle — the
-write inherits the upstream partitioning. ``read`` pushes projections
-and filters down via the connector's aggregation-pipeline pushdown.
+save_defi_features_features_db.py:28-34,78-88`). ``ParquetServingSink``
+implements the same contract as a manifest-pointer upsert on any Hadoop
+filesystem (sinks.upsert_manifested); tests/test_serving_contract.py
+holds its behavioral suite. A Mongo transport is out of scope
+(KNOWN_LIMITS §5).
 """
 
 from __future__ import annotations
@@ -58,76 +37,3 @@ class ParquetServingSink:
                 f"no committed version under {self.table_root}"
             )
         return self.spark.read.parquet(current)
-
-
-class MongoServingSink:
-    """mongo-spark-connector (v10+) translation of the same contract.
-
-    The reference's serving write is a per-row
-    ``replace_one({'walletAddress': ...}, doc, upsert=True)``; the
-    connector expresses that as a single distributed write job with
-    ``operationType=replace`` and the key in ``idFieldList``."""
-
-    FORMAT = "mongodb"
-
-    def __init__(self, spark, uri: str, database: str, collection: str,
-                 key: str):
-        self.spark = spark
-        self.uri = uri
-        self.database = database
-        self.collection = collection
-        self.key = key
-
-    def write_options(self) -> dict[str, str]:
-        """The exact option map handed to the connector — pure, so the
-        translation is asserted without a live server."""
-        return {
-            "connection.uri": self.uri,
-            "database": self.database,
-            "collection": self.collection,
-            # upsert-by-business-key: replace the whole served document
-            # (the reference's replace_one(upsert=True) semantics; use
-            # "update" for field-merge semantics instead)
-            "operationType": "replace",
-            "upsertDocument": "true",
-            "idFieldList": self.key,
-        }
-
-    def read_options(self) -> dict[str, str]:
-        return {
-            "connection.uri": self.uri,
-            "database": self.database,
-            "collection": self.collection,
-        }
-
-    def upsert(self, df: DataFrame) -> None:
-        w = df.write.format(self.FORMAT).mode("append")
-        for k, v in self.write_options().items():
-            w = w.option(k, v)
-        w.save()
-
-    def read(self) -> DataFrame:
-        r = self.spark.read.format(self.FORMAT)
-        for k, v in self.read_options().items():
-            r = r.option(k, v)
-        # the connector maps idFieldList into _id; served frames expose
-        # the business key column, not Mongo's internal one
-        return r.load().drop("_id")
-
-
-def mongo_available(spark) -> str | None:
-    """Live-Mongo precondition for the contract test: a connector jar
-    on the session classpath AND a reachable server URI in
-    ``SPARK_GRAFT_MONGO_URI``. Returns the URI or None (→ skip)."""
-    import os
-
-    uri = os.environ.get("SPARK_GRAFT_MONGO_URI")
-    if not uri:
-        return None
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "com.mongodb.spark.sql.connector.MongoTableProvider"
-        )
-    except Exception:  # noqa: BLE001 — no jar ⇒ not available
-        return None
-    return uri

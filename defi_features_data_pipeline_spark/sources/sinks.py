@@ -1,33 +1,14 @@
-"""Sinks: partitioned append, empty-schema create, incremental insert,
-key-upsert.
+"""Sinks: incremental insert and key-upsert.
 
 Reference equivalents:
-- S5 partitioned Parquet append  `src/pipelines/raw/defi_events.py:38-45`
-- S6 CTAS                        `src/pipelines/stage/ddl/transpose_borrow_events.sql:1-6`
 - S7 incremental INSERT INTO     `stage_tranformation_queries.py:2,25`
-- S8 full refresh                `save_defi_features_datalake.py:34-53`
 - S10 Mongo key-upsert           `save_defi_features_features_db.py:28-34,78-88`
-- S11 empty-partition CTAS trick `analytics/ddl/transpose_borrow_events.sql:56`
+  (served here as a parquet key-upsert; KNOWN_LIMITS §5)
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def write_partitioned(
-    df: DataFrame, path: str, partition_by: list[str], mode: str = "append"
-) -> None:
-    """S5: dynamic-partition Parquet write. Spark writes any number of
-    partitions in one job, so the reference's 256-bucket / 3-chunk
-    INSERT dance (`analytics/defi_events.py:123,172-174`) disappears."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
-
-
-def create_table_like(df: DataFrame, path: str) -> None:
-    """S11: create an empty table with ``df``'s schema (the reference's
-    `WHERE year='1970'` zero-row CTAS trick, expressed honestly)."""
-    df.limit(0).write.mode("overwrite").parquet(path)
 
 
 def incremental_insert(
@@ -130,30 +111,3 @@ def upsert_manifested(
     tmp = table_root.rstrip("/") + ".__stage__"
     merged.write.mode("overwrite").parquet(tmp)
     manifest_commit(spark, table_root, tmp, keep=keep)
-
-
-def backfill_partitions(df: DataFrame, path: str, partition_by: list[str]) -> None:
-    """Selective partition BACKFILL: rewrite ONLY the partitions present
-    in ``df``, leaving every other partition of the lake untouched —
-    the production repair flow for "month X was computed from bad
-    upstream data" (re-run that month, never the table).
-
-    Mechanism: ``mode("overwrite")`` under Spark's dynamic partition
-    overwrite (``spark.sql.sources.partitionOverwriteMode=dynamic``,
-    set in session.py). With the default STATIC mode the same call
-    would silently DELETE every other partition first — the classic
-    footgun this helper (and its test) exists to pin. The conf is
-    re-asserted here so the helper is safe under any caller session.
-
-    Scale note: the overwrite job only lists/commits directories for
-    the partition values it writes; untouched partitions' files are
-    never read, staged, or rewritten (the test asserts identical file
-    inodes), so a 1-month backfill on a 100 TB lake costs one month,
-    not a table rewrite."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

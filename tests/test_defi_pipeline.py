@@ -232,21 +232,6 @@ def test_cli_entry_point(spark, lake, features, capsys):
     assert f"defi_features: {features.count()} wallets" in out
 
 
-def test_daily_first_blocks(spark, lake):
-    """A9/J12: daily-first-block grid from ethereum_blocks
-    (`src/pipelines/utils.py:35-44`)."""
-    from defi_features_data_pipeline_spark.pipelines.defi.analytics import (
-        daily_first_blocks,
-    )
-
-    blocks = spark.read.parquet(f"{lake}/raw/ethereum_blocks")
-    grid = daily_first_blocks(blocks).collect()
-    assert len(grid) in (60, 61)  # one row per fixture day (+1 partial)
-    assert all(len(r["year"]) == 2 and len(r["month"]) == 2 for r in grid)
-    nums = [r["block_number"] for r in grid]
-    assert nums == sorted(nums)
-
-
 def test_run_metrics_observability(spark, lake, features):
     """``run_pipeline(metrics=...)`` reports rows appended per
     incremental layer and the features row count (measured by

@@ -1,128 +1,9 @@
-"""Z-order layout: each output file must be a tight multi-dimensional
-tile so parquet min/max stats prune on EVERY z column — compared
-against a linear sort, where the secondary column's per-file span is
-the whole domain (no pruning possible)."""
+"""Storage layout: the ORC round trip, and the Morton bit-interleave
+expression the ``zorder_cells`` gate shares."""
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
 import pyspark.sql.functions as F
-
-from defi_features_data_pipeline_spark.sources.layout import write_zordered
-
-DOMAIN = 1000
-
-
-def _mean_span(path: str, col: str) -> float:
-    """Mean per-file (max-min)/domain for ``col`` from parquet footers."""
-    fractions = []
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index(col)
-        mn = min(md.row_group(i).column(idx).statistics.min for i in range(md.num_row_groups))
-        mx = max(md.row_group(i).column(idx).statistics.max for i in range(md.num_row_groups))
-        fractions.append((mx - mn) / (DOMAIN - 1))
-    assert fractions
-    return sum(fractions) / len(fractions)
-
-
-def test_zorder_layout_tightens_minmax(spark, tmp_path):
-    df = spark.range(40_000).select(
-        F.pmod(F.hash(F.col("id")), F.lit(DOMAIN)).alias("x"),
-        F.pmod(F.hash(F.col("id") + 7), F.lit(DOMAIN)).alias("y"),
-    )
-    linear = str(tmp_path / "linear")
-    zorder = str(tmp_path / "zorder")
-    (
-        df.repartitionByRange(8, F.col("x"))
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(linear)
-    )
-    write_zordered(df, zorder, ["x", "y"], n_files=8)
-
-    # same rows either way
-    assert spark.read.parquet(zorder).count() == 40_000
-
-    # linear sort: x prunes, y cannot (every file spans ~the whole domain)
-    assert _mean_span(linear, "x") < 0.35
-    assert _mean_span(linear, "y") > 0.9
-    # z-order: BOTH columns' per-file spans are fractions of the domain
-    assert _mean_span(zorder, "x") < 0.6
-    assert _mean_span(zorder, "y") < 0.6
-
-
-def test_zorder_rejects_bad_args(spark):
-    import pytest
-
-    df = spark.range(10).select(F.col("id").alias("x"), (F.col("id") * 2).alias("y"))
-    from defi_features_data_pipeline_spark.sources.layout import zorder_code
-
-    with pytest.raises(ValueError, match=">= 2 columns"):
-        zorder_code(df, ["x"])
-    with pytest.raises(ValueError, match="64-bit"):
-        zorder_code(df, ["x", "y"], bits=32)
-
-
-def _rows_scanned(df) -> int:
-    """The scan node's numOutputRows after running df: rows SURVIVING
-    parquet row-group min/max skipping + pushed filters — the stat
-    that shows whether the layout let the reader skip data. (numFiles
-    only counts the listing; min/max skipping happens inside the
-    reader, per row group.) collect() drives df's OWN QueryExecution,
-    so the metric belongs to the run we just made."""
-    df.collect()
-    node = df._jdf.queryExecution().executedPlan()
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        name = n.getClass().getSimpleName()
-        if "FileSourceScan" in name or "BatchScan" in name:
-            metrics = n.metrics()
-            if metrics.contains("numOutputRows"):
-                return int(metrics.apply("numOutputRows").value())
-        for i in range(n.children().size()):
-            stack.append(n.children().apply(i))
-        if name == "AdaptiveSparkPlanExec":
-            stack.append(n.executedPlan())
-        if "QueryStage" in name:
-            stack.append(n.plan())
-    raise AssertionError("no file scan node found")
-
-
-def test_zorder_layout_skips_files_on_secondary_column(spark, tmp_path):
-    """End-to-end data-skipping evidence (not just footer tightness): a
-    selective predicate on the SECONDARY column must scan materially
-    fewer rows from the z-ordered lake than from the x-sorted one,
-    where every row group spans y's whole domain and nothing can be
-    skipped. This is the scan-cost argument for Z-order at 100 TB,
-    measured from the executed plan's own scan metrics."""
-    df = spark.range(40_000).select(
-        F.pmod(F.hash(F.col("id")), F.lit(DOMAIN)).alias("x"),
-        F.pmod(F.hash(F.col("id") + 7), F.lit(DOMAIN)).alias("y"),
-    )
-    linear = str(tmp_path / "linear")
-    zorder = str(tmp_path / "zorder")
-    (
-        df.repartitionByRange(8, F.col("x"))
-        .sortWithinPartitions("x")
-        .write.mode("overwrite")
-        .parquet(linear)
-    )
-    write_zordered(df, zorder, ["x", "y"], n_files=8)
-
-    pred = (F.col("y") >= 10) & (F.col("y") < 60)  # 5% of the y domain
-    linear_rows = _rows_scanned(spark.read.parquet(linear).filter(pred))
-    z_rows = _rows_scanned(spark.read.parquet(zorder).filter(pred))
-    assert linear_rows == 40_000, "x-sorted lake cannot skip row groups on y"
-    assert z_rows <= linear_rows // 2, (z_rows, linear_rows)
-
-    # and the filtered results agree
-    a = spark.read.parquet(linear).filter(pred)
-    b = spark.read.parquet(zorder).filter(pred)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_orc_roundtrip_matches_parquet_source(spark, tmp_path):
@@ -152,7 +33,7 @@ def test_orc_roundtrip_matches_parquet_source(spark, tmp_path):
 
 
 def test_interleave_bits_matches_python_reference(spark):
-    """The shared Morton expression (gate + writer) against a plain
+    """The Morton expression the gate uses, against a plain
     Python bit-interleave, over an exhaustive small domain."""
     from defi_features_data_pipeline_spark.sources.layout import interleave_bits
 
@@ -170,22 +51,3 @@ def test_interleave_bits_matches_python_reference(spark):
     )
     for r in df.collect():
         assert r["z"] == py_morton(r["x"], r["y"], bits), (r["x"], r["y"])
-
-
-def test_interleave_matches_zorder_code_layout(spark):
-    """interleave_bits IS zorder_code's k=2 bit layout: on a frame
-    whose two columns already span [0, 2^bits), the normalized Morton
-    code equals the raw interleave for every row."""
-    from defi_features_data_pipeline_spark.sources.layout import (
-        interleave_bits,
-        zorder_code,
-    )
-
-    bits = 4
-    top = (1 << bits) - 1
-    rows = [(x, y) for x in range(top + 1) for y in range(top + 1)]
-    df = spark.createDataFrame(rows, "a long, b long")
-    got = df.withColumn("zc", zorder_code(df, ["a", "b"], bits)).withColumn(
-        "il", interleave_bits(F.col("a"), F.col("b"), bits)
-    )
-    assert got.filter(F.col("zc") != F.col("il")).count() == 0

@@ -1,39 +1,6 @@
-"""Lakehouse maintenance ops: compaction, incremental aggregate
-maintenance, schema-evolution reads."""
-
-import pyspark.sql.functions as F
-
-from defi_features_data_pipeline_spark.sources.maintenance import (
-    compact_parquet,
-    merge_incremental_aggregate,
-    read_with_schema_evolution,
-)
-
-
-def test_compact_parquet(spark, tmp_path):
-    path = str(tmp_path / "frag")
-    # 20 tiny appends -> many small files
-    for i in range(20):
-        spark.createDataFrame([(i, float(i))], "id long, v double").coalesce(
-            1
-        ).write.mode("append").parquet(path)
-    before_rows = spark.read.parquet(path).count()
-    n_before, n_after = compact_parquet(spark, path, target_file_mb=512)
-    assert n_before >= 20
-    assert n_after == 1  # tiny data -> single target file
-    after = spark.read.parquet(path)
-    assert after.count() == before_rows
-    assert {r["id"] for r in after.collect()} == set(range(20))
-
-
-def test_compact_missing_table_is_noop(spark, tmp_path):
-    """Compacting (listing) a not-yet-written table must be a no-op,
-    not a JVM FileNotFoundException."""
-    from defi_features_data_pipeline_spark.sources.fsutil import list_parquet_files
-
-    missing = str(tmp_path / "never_written")
-    assert list_parquet_files(spark, missing) == []
-    assert compact_parquet(spark, missing, target_file_mb=512) == (0, 0)
+"""Lakehouse commit protocols: the directory swap's rollback, the
+manifest-pointer commit, time travel, cross-table snapshots and
+text-format ingestion."""
 
 
 def test_swap_dirs_rolls_back_on_failed_promote(spark, tmp_path):
@@ -51,67 +18,6 @@ def test_swap_dirs_rolls_back_on_failed_promote(spark, tmp_path):
         swap_dirs(spark, str(tmp_path / "no_such_tmp"), final)
     assert spark.read.parquet(final).count() == 1  # rolled back, not gone
 
-
-def test_merge_incremental_aggregate(spark):
-    day1 = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("b", 10.0)], "k string, v double"
-    )
-    day2 = spark.createDataFrame([("a", 4.0), ("c", 7.0)], "k string, v double")
-    stored = merge_incremental_aggregate(None, day1, ["k"], ["v"])
-    merged = merge_incremental_aggregate(stored, day2, ["k"], ["v"])
-    got = {r["k"]: (r["v"], r["n"]) for r in merged.collect()}
-    assert got == {"a": (7.0, 3), "b": (10.0, 1), "c": (7.0, 1)}
-    # equivalent to the full recompute
-    full = (
-        day1.unionByName(day2)
-        .groupBy("k")
-        .agg(F.sum("v").alias("v"), F.count(F.lit(1)).alias("n"))
-    )
-    assert got == {r["k"]: (r["v"], r["n"]) for r in full.collect()}
-
-
-def test_schema_evolution_read(spark, tmp_path):
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "x")], "id long, a string").write.mode("append").parquet(path)
-    spark.createDataFrame(
-        [(2, "y", 9.5)], "id long, a string, new_col double"
-    ).write.mode("append").parquet(path)
-    df = read_with_schema_evolution(spark, path)
-    assert "new_col" in df.columns
-    rows = {r["id"]: r["new_col"] for r in df.collect()}
-    assert rows == {1: None, 2: 9.5}
-
-
-def test_metastore_catalog(spark):
-    """Medallion layers as real catalog databases; SQL-by-name access
-    and bucketed table registration."""
-    from defi_features_data_pipeline_spark.sources import MetastoreCatalog
-
-    cat = MetastoreCatalog(spark, prefix="t_db")
-    try:
-        df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-        cat.write(df, "raw", "events_t", mode="overwrite")
-        assert spark.sql("SELECT count(*) AS n FROM t_db_raw.events_t").first()["n"] == 2
-        assert "events_t" in cat.tables("raw")
-        # bucketed write registers bucket metadata
-        cat.write(df, "analytics", "events_b", mode="overwrite", bucket_by=(4, "id"))
-        assert cat.read("analytics", "events_b").count() == 2
-    finally:
-        cat.drop("raw", "events_t")
-        cat.drop("analytics", "events_b")
-
-
-def test_create_table_like(spark, tmp_path):
-    """S11: empty-schema create (the reference's WHERE year='1970'
-    zero-row CTAS trick, expressed honestly)."""
-    from defi_features_data_pipeline_spark.sources import create_table_like
-
-    df = spark.createDataFrame([(1, "a", 2.5)], "id long, k string, v double")
-    path = str(tmp_path / "empty_t")
-    create_table_like(df, path)
-    got = spark.read.parquet(path)
-    assert got.count() == 0
-    assert got.schema == df.schema
 
 
 class TestManifestCommit:
@@ -245,152 +151,6 @@ class TestTimeTravel:
             read_manifested(spark, root, version=99)
 
 
-class TestStatsIndex:
-    def test_pruned_read_is_transparent_and_skips_files(self, spark, tmp_path):
-        """File-skipping index over plain parquet: (a) the index-pruned
-        read + residual filter returns EXACTLY the plain filtered read
-        (pruning is invisible); (b) for a selective range on the sort
-        column it reads a strict subset of files; (c) NULL-bearing
-        files are kept conservatively."""
-        from pyspark.sql import functions as F
-
-        from defi_features_data_pipeline_spark.sources.fsutil import (
-            list_parquet_files,
-        )
-        from defi_features_data_pipeline_spark.sources.stats_index import (
-            build_stats_index,
-            pruned_read,
-        )
-
-        table = str(tmp_path / "table")
-        index = str(tmp_path / "idx")
-        df = spark.range(20_000).select(
-            F.col("id").alias("k"),
-            F.when(F.col("id") % 997 == 0, None)
-            .otherwise((F.col("id") % 1000).cast("double"))
-            .alias("v"),
-        )
-        # range-sorted on k -> tight per-file k stats; v is uniform
-        df.repartitionByRange(10, F.col("k")).sortWithinPartitions(
-            "k"
-        ).write.mode("overwrite").parquet(table)
-        build_stats_index(spark, table, ["k", "v"], index)
-
-        lo, hi = 3000.0, 4999.0
-        pruned = pruned_read(spark, table, index, "k", lo, hi).filter(
-            F.col("k").between(lo, hi)
-        )
-        plain = spark.read.parquet(table).filter(F.col("k").between(lo, hi))
-        assert pruned.exceptAll(plain).count() == 0
-        assert plain.exceptAll(pruned).count() == 0
-        assert pruned.count() == 2000
-
-        n_all = len(list_parquet_files(spark, table))
-        n_kept = pruned_read(spark, table, index, "k", lo, hi).inputFiles()
-        assert n_all == 10
-        assert len(n_kept) <= 2, n_kept  # 10%-selective range on the sort col
-
-        # v has NULLs in every file -> conservative keep-all on v
-        v_kept = pruned_read(spark, table, index, "v", 0.0, 1.0).inputFiles()
-        assert len(v_kept) == n_all
-
-    def test_build_leaves_no_scratch(self, spark, tmp_path, monkeypatch):
-        """Building the index stages beside it, not in the temp dir:
-        two builds leave the temp dir empty and read back the same
-        index."""
-        import os
-        import tempfile
-
-        from defi_features_data_pipeline_spark.sources.stats_index import (
-            build_stats_index,
-        )
-
-        scratch = tmp_path / "scratch"
-        scratch.mkdir()
-        monkeypatch.setattr(tempfile, "tempdir", str(scratch))
-        table = str(tmp_path / "table")
-        index = str(tmp_path / "idx")
-        spark.range(1000).repartition(4).write.parquet(table)
-
-        def build():
-            path = build_stats_index(spark, table, ["id"], index)
-            return sorted(map(tuple, spark.read.parquet(path).collect()))
-
-        assert build() == build()
-        assert os.listdir(scratch) == []
-        assert not os.path.exists(index + ".__stage__")
-
-
-class TestBackfillPartitions:
-    def test_backfill_rewrites_only_target_partition(self, spark, tmp_path):
-        """Dynamic-partition backfill: the repaired month is replaced,
-        every other month's FILES are bit-identical (same paths, sizes,
-        mtimes — never rewritten), and the table afterwards equals
-        full-recompute."""
-        import os
-
-        from defi_features_data_pipeline_spark.sources.sinks import (
-            backfill_partitions,
-            write_partitioned,
-        )
-
-        path = str(tmp_path / "lake")
-        rows = [(i, f"2024-{m:02d}", float(i)) for m in (1, 2, 3) for i in range(10)]
-        df = spark.createDataFrame(rows, "id long, month string, v double")
-        write_partitioned(df, path, ["month"], mode="overwrite")
-
-        def listing(exclude: str):
-            out = {}
-            for root, _, files in os.walk(path):
-                if exclude in root:
-                    continue
-                for f in files:
-                    if f.endswith(".parquet"):
-                        p = os.path.join(root, f)
-                        st = os.stat(p)
-                        out[p] = (st.st_size, st.st_mtime_ns)
-            return out
-
-        before = listing(exclude="month=2024-02")
-        fixed = spark.createDataFrame(
-            [(i, "2024-02", float(i) * 10) for i in range(10)],
-            "id long, month string, v double",
-        )
-        backfill_partitions(fixed, path, ["month"])
-        assert listing(exclude="month=2024-02") == before
-        got = spark.read.parquet(path)
-        assert got.count() == 30
-        feb = {r["id"]: r["v"] for r in got.filter("month = '2024-02'").collect()}
-        assert feb == {i: float(i) * 10 for i in range(10)}
-        jan = {r["id"]: r["v"] for r in got.filter("month = '2024-01'").collect()}
-        assert jan == {i: float(i) for i in range(10)}
-
-    def test_static_mode_would_clobber(self, spark, tmp_path):
-        """The footgun the helper guards: the SAME write under static
-        partitionOverwriteMode deletes the untouched partitions."""
-        from defi_features_data_pipeline_spark.sources.sinks import (
-            write_partitioned,
-        )
-
-        path = str(tmp_path / "lake")
-        rows = [(i, f"2024-{m:02d}", float(i)) for m in (1, 2) for i in range(5)]
-        write_partitioned(
-            spark.createDataFrame(rows, "id long, month string, v double"),
-            path,
-            ["month"],
-            mode="overwrite",
-        )
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.createDataFrame(
-                [(0, "2024-02", 99.0)], "id long, month string, v double"
-            ).write.mode("overwrite").partitionBy("month").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        left = spark.read.parquet(path)
-        assert left.filter("month = '2024-01'").count() == 0  # clobbered
-        assert left.count() == 1
 
 
 class TestCrossTableSnapshot:
@@ -561,55 +321,3 @@ class TestTextFormatIngestion:
                 .option("mode", "FAILFAST")
                 .json(p)
             ).collect()
-
-
-def test_optimize_zorder_compacts_and_tiles(spark, tmp_path):
-    """OPTIMIZE+ZORDER in one pass: a many-small-file table written in
-    time order becomes few files whose footer min/max are tight in
-    BOTH z dimensions — data identical, fewer files, and a selective
-    predicate on the SECOND dimension can skip most files (impossible
-    in the time-ordered layout, where every file spans the full
-    user_id domain)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from defi_features_data_pipeline_spark.sources.maintenance import (
-        optimize_zorder,
-    )
-
-    from defi_features_data_pipeline_spark.queries.core import _events
-
-    path = str(tmp_path / "events_tbl")
-    ev = _events(spark, "/root/testdata/sf0.01").select(
-        "event_id", F.col("ts").cast("long").alias("t"), "user_id", "value"
-    )
-    # simulate a daily append history: 20 time-ordered files
-    ev.orderBy("t").repartitionByRange(20, "t").write.mode("overwrite").parquet(path)
-    before_rows = sorted(map(tuple, spark.read.parquet(path).collect()))
-
-    def files_hit(p, col, lo, hi):
-        hit, total = 0, 0
-        for f in sorted(glob.glob(f"{p}/part-*.parquet")):
-            md = pq.read_metadata(f)
-            idx = md.schema.names.index(col)
-            cmin = min(md.row_group(g).column(idx).statistics.min
-                       for g in range(md.num_row_groups))
-            cmax = max(md.row_group(g).column(idx).statistics.max
-                       for g in range(md.num_row_groups))
-            total += 1
-            hit += int(cmax >= lo and cmin <= hi)
-        return hit, total
-
-    # time-ordered layout: a narrow user_id predicate prunes nothing
-    lo, hi = 10, 20
-    hit0, total0 = files_hit(path, "user_id", lo, hi)
-    assert total0 == 20 and hit0 == total0
-
-    nb, na = optimize_zorder(spark, path, ["t", "user_id"], n_files=8)
-    assert nb == 20 and na == 8  # compacted 20 -> 8
-    after_rows = sorted(map(tuple, spark.read.parquet(path).collect()))
-    assert after_rows == before_rows  # rewrite loses nothing
-
-    hit1, total1 = files_hit(path, "user_id", lo, hi)
-    assert hit1 < total1, "z-ordered files should prune on user_id"

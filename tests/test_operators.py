@@ -5,7 +5,6 @@ import pyspark.sql.functions as F
 from defi_features_data_pipeline_spark.operators import (
     asof_join,
     disjunctive_join,
-    high_watermark,
     latest_per_group,
     top_k_per_group,
     union_distinct,
@@ -498,13 +497,6 @@ def test_union_distinct(spark):
     out = union_distinct([a, b], out_col="wallet")
     assert out.columns == ["wallet"]
     assert {r["wallet"] for r in out.collect()} == {"x", "y", "z"}
-
-
-def test_high_watermark(spark):
-    df = spark.createDataFrame([(5,), (9,)], "ts long")
-    assert high_watermark(df, "ts") == 9
-    empty = df.filter("ts > 100")
-    assert high_watermark(empty, "ts", default=0) == 0
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -1258,114 +1250,6 @@ def test_multiprobe_candidate_superset_real_index(spark):
     for r in rows:
         assert r["probes"][0] == r["own"], r  # superset guarantee
         assert len(r["probes"]) == 2 and r["probes"][0] != r["probes"][1]
-
-
-class TestIncrementalReadPruned:
-    def test_month_boundary_exact(self, spark, tmp_path):
-        """Watermark exactly at a month boundary: the boundary month is
-        kept (>=), earlier months pruned, and the ts residual drops the
-        boundary row itself (strict >)."""
-        import datetime
-
-        from defi_features_data_pipeline_spark.operators.incremental import (
-            incremental_read_pruned,
-            with_calendar_partitions,
-        )
-        from defi_features_data_pipeline_spark.sources.sinks import write_partitioned
-
-        rows = [
-            (1, datetime.datetime(2025, 2, 28, 23, 59, 59)),
-            (2, datetime.datetime(2025, 3, 1, 0, 0, 0)),   # == watermark
-            (3, datetime.datetime(2025, 3, 1, 0, 0, 1)),
-            (4, datetime.datetime(2025, 4, 15, 12, 0, 0)),
-        ]
-        df = spark.createDataFrame(rows, "id long, ts timestamp")
-        path = str(tmp_path / "lake")
-        write_partitioned(with_calendar_partitions(df), path, ["year", "month"], "overwrite")
-        wm = int(datetime.datetime(2025, 3, 1, tzinfo=datetime.timezone.utc).timestamp())
-        got = sorted(
-            r["id"] for r in incremental_read_pruned(spark.read.parquet(path), wm).collect()
-        )
-        assert got == [3, 4]
-
-    def test_subsecond_rows_inside_watermark_second_kept(self, spark, tmp_path):
-        """A row at wm + 0.5s must be KEPT: the residual compares at
-        timestamp precision, not whole seconds (ADVICE r5 — a long
-        cast truncated sub-second rows into the watermark and dropped
-        them, diverging from newer_than_watermark)."""
-        import datetime
-
-        from defi_features_data_pipeline_spark.operators.incremental import (
-            incremental_read_pruned,
-            with_calendar_partitions,
-        )
-        from defi_features_data_pipeline_spark.sources.sinks import write_partitioned
-
-        rows = [
-            (1, datetime.datetime(2025, 3, 1, 0, 0, 0, 500000)),  # wm + 0.5s
-            (2, datetime.datetime(2025, 3, 1, 0, 0, 0)),          # == wm: dropped
-            (3, datetime.datetime(2025, 3, 2, 0, 0, 0)),
-        ]
-        df = spark.createDataFrame(rows, "id long, ts timestamp")
-        path = str(tmp_path / "lake")
-        write_partitioned(
-            with_calendar_partitions(df), path, ["year", "month"], "overwrite"
-        )
-        wm = int(
-            datetime.datetime(2025, 3, 1, tzinfo=datetime.timezone.utc).timestamp()
-        )
-        got = sorted(
-            r["id"]
-            for r in incremental_read_pruned(spark.read.parquet(path), wm).collect()
-        )
-        assert got == [1, 3]
-
-    def test_non_utc_session_calendar_agrees(self, spark, tmp_path):
-        """Partition derivation and the watermark→partition mapping
-        must share the UTC calendar even when the session timezone is
-        not UTC (ADVICE r5 medium): a row just after a UTC month
-        boundary (still the previous month on the session-local wall
-        clock) must survive the pruned incremental read."""
-        import datetime
-
-        from defi_features_data_pipeline_spark.operators.incremental import (
-            incremental_read_pruned,
-            with_calendar_partitions,
-        )
-        from defi_features_data_pipeline_spark.sources.sinks import write_partitioned
-
-        tz_before = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-        try:
-            # 2025-03-01 00:30 UTC == 2025-02-28 16:30 in LA
-            epoch_row = int(
-                datetime.datetime(
-                    2025, 3, 1, 0, 30, tzinfo=datetime.timezone.utc
-                ).timestamp()
-            )
-            df = spark.createDataFrame(
-                [(1, epoch_row)], "id long, epoch long"
-            ).select("id", F.timestamp_seconds("epoch").alias("ts"))
-            part = with_calendar_partitions(df).first()
-            assert (part["year"], part["month"]) == (2025, 3)  # UTC calendar
-            path = str(tmp_path / "lake")
-            write_partitioned(
-                with_calendar_partitions(df), path, ["year", "month"], "overwrite"
-            )
-            wm = int(
-                datetime.datetime(
-                    2025, 3, 1, tzinfo=datetime.timezone.utc
-                ).timestamp()
-            )
-            got = [
-                r["id"]
-                for r in incremental_read_pruned(
-                    spark.read.parquet(path), wm
-                ).collect()
-            ]
-            assert got == [1]
-        finally:
-            spark.conf.set("spark.sql.session.timeZone", tz_before)
 
 
 def test_assign_join_equals_literal(spark, sf_dir_t2):

@@ -115,58 +115,21 @@ def test_dynamic_partition_pruning(spark, tmp_path):
     assert j.count() == 600  # 3 of 10 partitions survive
 
 
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    """bucketBy co-located join via ``sources.bucketing``: two tables
-    bucketed on the join key join WITHOUT an Exchange on either side —
-    the Spark mapping of the reference's 256-way address partitioning
-    (SURVEY §1.2). Also pins the writer's small-files hygiene: exactly
-    one file per bucket (a naive bucketed write emits
-    tasks x buckets files)."""
-    import os
-
-    from defi_features_data_pipeline_spark.sources.bucketing import (
-        read_bucketed,
-        write_bucketed,
-    )
-
-    a = spark.createDataFrame([(i, float(i)) for i in range(1000)], "k long, v double")
-    b = spark.createDataFrame([(i, str(i)) for i in range(1000)], "k long, s string")
-    spark.sql("DROP TABLE IF EXISTS bkt_a")
-    spark.sql("DROP TABLE IF EXISTS bkt_b")
-    pa, pb = str(tmp_path / "bkt_a"), str(tmp_path / "bkt_b")
-    write_bucketed(a, "bkt_a", ["k"], 8, sort_cols=["k"], path=pa)
-    write_bucketed(b, "bkt_b", ["k"], 8, sort_cols=["k"], path=pb)
-    try:
-        for p in (pa, pb):
-            files = [f for f in os.listdir(p) if f.endswith(".parquet")]
-            assert len(files) == 8, f"expected one file per bucket, got {len(files)}"
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-        j = read_bucketed(spark, "bkt_a").join(read_bucketed(spark, "bkt_b"), "k")
-        plan = explain_str(j, mode="simple")
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # bucketing removed both shuffles
-        assert j.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
-
-
 def _events_lake(spark, tmp_path) -> str:
     """A year/month-partitioned events lake built from the driver
-    testdata — the layout SURVEY §1.2 prescribes for the raw layer."""
-    from defi_features_data_pipeline_spark.operators.incremental import (
-        with_calendar_partitions,
-    )
+    testdata — the layout SURVEY §1.2 prescribes for the raw layer. The
+    session is pinned to UTC, so ``F.year``/``F.month`` read the UTC
+    calendar."""
     from defi_features_data_pipeline_spark.queries.core import _events
-    from defi_features_data_pipeline_spark.sources.sinks import write_partitioned
 
     path = str(tmp_path / "events_lake")
-    write_partitioned(
-        with_calendar_partitions(_events(spark, SF)),
-        path,
-        ["year", "month"],
-        mode="overwrite",
+    (
+        _events(spark, SF)
+        .withColumn("year", F.year("ts"))
+        .withColumn("month", F.month("ts"))
+        .write.mode("overwrite")
+        .partitionBy("year", "month")
+        .parquet(path)
     )
     return path
 
@@ -195,37 +158,6 @@ def test_events_lake_calendar_partition_pruning(spark, tmp_path):
         .count()
     )
     assert sorted(map(tuple, q.collect())) == sorted(map(tuple, expect.collect()))
-
-
-def test_events_lake_watermark_incremental_pruning(spark, tmp_path):
-    """The high-watermark incremental read maps the epoch watermark to
-    partition predicates: whole months before the watermark are pruned
-    statically; the exact ts residual applies within the boundary."""
-    from defi_features_data_pipeline_spark.operators.incremental import (
-        incremental_read_pruned,
-    )
-    from defi_features_data_pipeline_spark.queries.core import _events
-
-    lake = spark.read.parquet(_events_lake(spark, tmp_path))
-    ev = _events(spark, SF)
-    # watermark = the 75th-percentile event time (mid-history increment)
-    wm = int(
-        ev.select(F.percentile_approx(F.col("ts").cast("long"), 0.75)).first()[0]
-    )
-    inc = incremental_read_pruned(lake, wm)
-    plan = explain_str(inc)
-    assert "PartitionFilters: []" not in plan
-    assert any(
-        "PartitionFilters" in l and "year" in l for l in plan.splitlines()
-    )
-    # expectation at FULL timestamp precision: a row landing inside the
-    # watermark second (wm + 0.5s) is strictly newer and must be kept
-    # (ADVICE r5 — a whole-second cast silently dropped it)
-    expect = ev.filter(
-        F.col("ts") > F.timestamp_seconds(F.lit(wm).cast("long"))
-    ).count()
-    assert inc.count() == expect
-    assert 0 < inc.count() < ev.count()
 
 
 def test_events_lake_dynamic_partition_pruning(spark, tmp_path):
@@ -419,14 +351,21 @@ def test_regional_supplier_volume_two_fact_exchanges(spark, sf_dir):
     lineitem⋈orders, custkey for the customer join) with every
     dimension chain broadcast — the c_nationkey = s_nationkey
     cross-dimension equality must ride the supplier broadcast join, not
-    materialize as a post-join filter over a wider join."""
+    materialize as a post-join filter over a wider join. The count
+    below holds with estimate-based broadcast on (64 MB); under the
+    session policy (-1) orders and customer are shuffled instead."""
     from defi_features_data_pipeline_spark.queries.tpch_star import (
         q_regional_supplier_volume,
     )
 
-    df = q_regional_supplier_volume(spark, sf_dir)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        df = q_regional_supplier_volume(spark, sf_dir)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert plan.count("BroadcastHashJoin") >= 1
     hash_exchanges = [
         ln

@@ -1,27 +1,15 @@
-"""S10 serving-sink CONTRACT test (r9 verdict item 5): ONE behavioral
-suite, run against every transport — the parquet manifest sink always,
-the mongo-spark adapter whenever the environment provides a connector
-jar and a live server (``SPARK_GRAFT_MONGO_URI``), skipped otherwise.
-KNOWN_LIMITS §5's "a mongo write is a drop-in at the same call site"
-is this file's subject: the drop-in is now code with the same suite
-green on both sides of the seam.
-
-Plus pure unit tests of the Mongo option translation — the mapping to
-``operationType=replace`` / ``idFieldList`` is asserted without a
-server, so the adapter cannot silently drift from the reference's
-``replace_one(upsert=True)`` semantics."""
-
-import pytest
+"""S10 serving-sink CONTRACT test: ONE behavioral suite that every
+serving transport must pass. The parquet manifest sink is the only
+transport; the reference's MongoDB upsert is out of scope
+(KNOWN_LIMITS §5)."""
 
 
 def _sink_factories(spark, tmp_path):
     from defi_features_data_pipeline_spark.sources.serving import (
-        MongoServingSink,
         ParquetServingSink,
-        mongo_available,
     )
 
-    out = [
+    return [
         (
             "parquet",
             ParquetServingSink(
@@ -29,18 +17,6 @@ def _sink_factories(spark, tmp_path):
             ),
         )
     ]
-    uri = mongo_available(spark)
-    if uri:
-        out.append(
-            (
-                "mongo",
-                MongoServingSink(
-                    spark, uri, "spark_graft_test",
-                    f"serving_{tmp_path.name}", "wallet",
-                ),
-            )
-        )
-    return out
 
 
 def _rows(df):
@@ -81,56 +57,3 @@ def test_serving_contract_all_transports(spark, tmp_path):
         sink.upsert(batch2)
         assert _rows(sink.read()) == want
     assert "parquet" in ran  # the hermetic transport always runs
-
-
-def test_mongo_adapter_option_translation(spark):
-    """The pure half of the drop-in claim: the adapter hands the
-    connector exactly the reference's upsert semantics — whole-document
-    replace keyed by the business key, upsert on miss."""
-    from defi_features_data_pipeline_spark.sources.serving import (
-        MongoServingSink,
-    )
-
-    sink = MongoServingSink(
-        spark, "mongodb://db:27017", "features", "wallet_features",
-        "walletAddress",
-    )
-    opts = sink.write_options()
-    assert opts["operationType"] == "replace"
-    assert opts["upsertDocument"] == "true"
-    assert opts["idFieldList"] == "walletAddress"
-    assert opts["connection.uri"] == "mongodb://db:27017"
-    assert (opts["database"], opts["collection"]) == (
-        "features", "wallet_features",
-    )
-    r = sink.read_options()
-    assert r["collection"] == "wallet_features"
-    assert sink.FORMAT == "mongodb"
-
-
-def test_mongo_skip_is_explicit_not_silent(spark):
-    """In this sandbox there is no connector jar and no server: the
-    availability probe must return None (→ the contract suite lists
-    only the parquet transport) rather than raising or pretending."""
-    from defi_features_data_pipeline_spark.sources.serving import (
-        mongo_available,
-    )
-
-    assert mongo_available(spark) is None
-
-
-def test_live_mongo_contract_or_skip(spark, tmp_path):
-    """Explicit live-Mongo marker: runs the contract against a real
-    server when the environment provides one, and SKIPS (visibly, with
-    the reason) when it does not — the judge sees which."""
-    from defi_features_data_pipeline_spark.sources.serving import (
-        mongo_available,
-    )
-
-    if mongo_available(spark) is None:
-        pytest.skip(
-            "no mongo-spark connector jar / SPARK_GRAFT_MONGO_URI in "
-            "this environment; parquet transport covered the contract"
-        )
-    names = [n for n, _ in _sink_factories(spark, tmp_path)]
-    assert "mongo" in names
